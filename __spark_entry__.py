@@ -268,7 +268,7 @@ def q_cc_nations(spark, sf_dir):
 
 def q_cc_incremental(spark, sf_dir):
     """Same CC semantics through the INCREMENTAL state loop — since r4
-    the delta-version store (engine._run_loop_delta + DeltaStateStore):
+    the delta-version store (engine._DeltaState + DeltaStateStore):
     each round appends ONLY its changed rows as a new version,
     min-reconciled on read — O(changed) rounds.  Gated by the same
     oracle as cc_nations; equality proves the versioned min-merge

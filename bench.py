@@ -28,7 +28,7 @@ SEPARATELY in ``extras["build_*_sec"]`` — at scale the store is built
 once and amortized over every algorithm run on the graph, so including
 it in a query's number misstates the steady-state cost (r3 VERDICT #6).
 
-SSSP mode (``$SPARK_GRAFT_SSSP_MODE``: classic | delta | bucket):
+SSSP mode (``$SPARK_GRAFT_SSSP_MODE``: classic | delta):
 defaults to ``classic`` below sf 1 (the in-memory checkpoint wins when
 the whole state fits — the delta store's fixed per-round parquet
 round-trip dominates under ~10M vertices) and ``delta`` at sf >= 1
@@ -187,6 +187,8 @@ def main() -> None:
     sssp_mode = os.environ.get(
         "SPARK_GRAFT_SSSP_MODE", "delta" if sf_num >= 1 else "classic"
     )
+    if sssp_mode not in ("classic", "delta"):
+        raise ValueError(f"SPARK_GRAFT_SSSP_MODE must be classic or delta, got {sssp_mode!r}")
     source_id = int(edges.agg(F.min("src")).collect()[0][0])
     sssp_state_root = f"/tmp/pcgraph_bench_sssp_state_sf{sf}"
 
@@ -195,7 +197,6 @@ def main() -> None:
         if sssp_mode != "classic":
             kwargs = {
                 "incremental": True,
-                "delta": sssp_mode == "delta",
                 "state_store_dir": sssp_state_root,
             }
         sp, hist = sssp(

@@ -30,8 +30,9 @@ def main() -> None:
                          "recommended iteration path at scale")
     ap.add_argument("--salt-threshold", type=int, default=None)
     ap.add_argument("--incremental", action="store_true",
-                    help="bucketed incremental state: sparse tail rounds "
-                         "rewrite only touched buckets (O(frontier))")
+                    help="delta state store: each round appends only its "
+                         "changed labels, so sparse tail rounds cost "
+                         "O(changed), not O(|V|)")
     ap.add_argument("--state-store-dir", default=None)
     args = ap.parse_args()
 

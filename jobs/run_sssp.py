@@ -6,10 +6,10 @@ Usage:
       [--partitions P] [--max-iter N] [--checkpoint-dir DIR] [--resume-from DIR]
       [--store-dir DIR] [--incremental] [--state-store-dir DIR]
 
-``--incremental`` keeps the vertex state in a bucketed store so sparse
-wavefront rounds rewrite only touched buckets (O(frontier), not O(|V|));
-on a cluster pass a shared-FS --state-store-dir (defaults under
---checkpoint-dir when set).
+``--incremental`` keeps the vertex state in the delta state store:
+each wavefront round appends only the distances it improved
+(O(changed), not O(|V|)); on a cluster pass a shared-FS
+--state-store-dir (defaults under --checkpoint-dir when set).
 """
 
 from __future__ import annotations
@@ -31,7 +31,9 @@ def main() -> None:
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--resume-from", default=None)
     ap.add_argument("--store-dir", default=None)
-    ap.add_argument("--incremental", action="store_true")
+    ap.add_argument("--incremental", action="store_true",
+                    help="delta state store: each round appends only the "
+                         "distances it improved (O(changed), not O(|V|))")
     ap.add_argument("--state-store-dir", default=None)
     args = ap.parse_args()
 

@@ -169,7 +169,7 @@ def label_propagation(
     )
 
     start_step = 0
-    ckpt_init = True  # initial-state checkpoint (engine._run_loop)
+    ckpt_init = True  # initial-state checkpoint (engine._MemoryState)
     resumed = engine.resume(resume_from) if resume_from else None
     if resumed is not None:
         state, _, meta = resumed
@@ -197,9 +197,9 @@ def label_propagation(
     # repartition by dst instead: HashPartitioning(dst) satisfies
     # ClusteredDistribution(dst,label) AND (dst), so BOTH aggregations
     # run exchange-free, and the state join reuses the same
-    # partitioning (co-partitioned with the state's hash(id)).  Plan
-    # audited in scripts/explain_lpa_update.py: 2 full-volume
-    # exchanges -> 1.
+    # partitioning (co-partitioned with the state's hash(id)): 2
+    # full-volume exchanges -> 1, pinned by a plan test
+    # (test_lpa_update_single_message_shuffle).
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if agg_partitions:
         agg_n = int(agg_partitions)
@@ -220,7 +220,26 @@ def label_propagation(
         )
         agg_n = _fold_width(est_partials, n_shuffle, bypass)
 
+    # Superstep-1 strength reduction (undirected fresh runs): with
+    # identity initialization (label(v)=v) on the deduplicated
+    # symmetrized graph, every (dst, label) count is exactly 1, so the
+    # argmax + smallest-label tie-break collapses to min(src) over the
+    # in-neighbors — a pure JVM aggregation with map-side partial min
+    # over the PRE-distinct edge union (min is duplicate-insensitive).
+    # The generic path would ship one Arrow histogram row per edge out
+    # of the Python kernel and hash-aggregate all of them (measured at
+    # 316M edges: the heaviest round of the run, 25 GB disk spill) to
+    # compute exactly this.  Round 1's update then ignores the kernel
+    # messages, so the kernels never run that round; the engine still
+    # materializes, observes, records and commits it like any other.
+    # Directed mode keeps the generic path: the raw edge table may be a
+    # multigraph, where duplicate edges legitimately contribute counts
+    # > 1.
+    reduce_round1 = resumed is None and not directed
+
     def update(state_df, msgs, step):
+        if step == 1 and reduce_round1:
+            return reduced_round1(state_df)
         # string expressions: a handful of py4j round-trips per round
         # instead of one per Column op (see pagerank.update)
         folded = (
@@ -234,6 +253,31 @@ def label_propagation(
             .agg(F.expr("min(struct(-cnt, label)) as b"))
             .selectExpr("dst", "b.label as new_label")
         )
+        return merge_labels(state_df, best)
+
+    def reduced_round1(state_df):
+        # Every exchange of this round is sized to the auto-sized fold
+        # width round 2+ uses, not spark.sql.shuffle.partitions: at 32
+        # partitions over a 633M-row adjacency the final min aggregate
+        # and the state join held ~20M hash-map entries per task —
+        # measured 23.5 GB of memory spill in round 1 at 316M edges.
+        # The state joins hash(id) at agg_n, so the round-1 checkpoint
+        # hands round 2 the partitioning its fold already uses.
+        #
+        # repartition BEFORE the fold: the map-side partial min would
+        # hold ~10M-entry hash maps per scan task (measured 32 GB
+        # memory / 12 GB disk spilled at 316M edges); a plain hash
+        # exchange streams via bypass-merge (agg_n <= the session
+        # bypass threshold) and the post-exchange fold holds ~2M
+        # entries/task.  ~2x the shuffle bytes, zero spill.
+        best1 = (
+            raw_both.repartition(agg_n, "dst")
+            .groupBy("dst")
+            .agg(F.expr("min(src) as new_label"))
+        )
+        return merge_labels(state_df.repartition(agg_n, "id"), best1)
+
+    def merge_labels(state_df, best):
         joined = state_df.select("id", "value").join(
             best, F.expr("id = dst"), "left"
         )
@@ -253,101 +297,6 @@ def label_propagation(
         changed = int(observed["changed"] or 0)
         return {"active": changed, "changed": changed}
 
-    # Superstep-1 strength reduction (undirected fresh runs): with
-    # identity initialization (label(v)=v) on the deduplicated
-    # symmetrized graph, every (dst, label) count is exactly 1, so the
-    # argmax + smallest-label tie-break collapses to min(src) over the
-    # in-neighbors — a pure JVM aggregation with map-side partial min
-    # over the PRE-distinct edge union (min is duplicate-insensitive).
-    # The generic path would ship one Arrow histogram row per edge out
-    # of the Python kernel and hash-aggregate all of them (measured at
-    # 316M edges: the heaviest round of the run, 25 GB disk spill) to
-    # compute exactly this.  Directed mode keeps the generic path: the
-    # raw edge table may be a multigraph, where duplicate edges
-    # legitimately contribute counts > 1.
-    if resumed is None and not directed and max_iter >= 1:
-        import os as _os
-        import time as _time
-
-        from pyspark.sql import Observation
-
-        from ..engine import _round_dir
-
-        t0 = _time.monotonic()
-        # The final min aggregate (and the state join behind it) runs at
-        # spark.sql.shuffle.partitions; at 32 partitions over a 633M-row
-        # adjacency that is ~20M hash-map entries per task — measured
-        # 23.5 GB of memory spill in round 1 at 316M edges.  Widen this
-        # one job to the same auto-sized fold width round 2+ uses (the
-        # map-side partial min is unaffected; AQE still coalesces small
-        # outputs).
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(agg_n))
-        # repartition BEFORE the fold: the map-side partial min would
-        # hold ~10M-entry hash maps per scan task (measured 32 GB
-        # memory / 12 GB disk spilled at 316M edges); a plain hash
-        # exchange streams via bypass-merge (agg_n <= the session
-        # bypass threshold) and the post-exchange fold holds ~2M
-        # entries/task.  ~2x the shuffle bytes, zero spill.
-        best1 = (
-            raw_both.repartition(agg_n, "dst")
-            .groupBy("dst")
-            .agg(F.min("src").alias("new_label"))
-        )
-        state1 = (
-            state.select("id", "value")
-            .join(best1, state["id"] == best1["dst"], "left")
-            .select(
-                "id",
-                F.coalesce(F.col("new_label"), F.col("value")).alias("value"),
-                F.coalesce(
-                    F.col("new_label") != F.col("value"), F.lit(False)
-                ).alias("changed"),
-            )
-        )
-        obs1 = Observation("pcgraph_label_propagation_step1")
-        action_src = state1.observe(obs1, *metrics_exprs)
-        # This reduction runs OUTSIDE engine.run, so it must keep the
-        # same checkpoint contract the classic loop's round 1 had: with
-        # checkpointing on, the round-1 state is written durably and
-        # committed, so a crash in round 2 resumes from round 1 instead
-        # of restarting the whole job.
-        do_ckpt1 = (
-            engine.checkpoint_dir is not None
-            and 1 % engine.checkpoint_every == 0
-        )
-        try:
-            if do_ckpt1:
-                rdir = _round_dir(engine.checkpoint_dir, 1)
-                action_src.write.mode("overwrite").parquet(
-                    _os.path.join(rdir, "state.parquet")
-                )  # the materializing action (fires the observation)
-                state = spark.read.parquet(
-                    _os.path.join(rdir, "state.parquet")
-                )
-            else:
-                state = action_src.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        m1 = metrics_post(dict(obs1.get), 1)
-        m1.update(
-            superstep=1,
-            algorithm="label_propagation",
-            round_sec=round(_time.monotonic() - t0, 4),
-        )
-        if do_ckpt1:
-            engine._commit_round(blocks, 1, state.select("id", "value"), m1)
-        engine.history.append(m1)
-        if post_superstep is not None:
-            post_superstep(1, m1)
-        start_step = 1
-        # the round-1 state is already an opaque checkpoint (or a
-        # parquet read-back) — re-checkpointing it in engine.run would
-        # materialize a second full copy for nothing
-        ckpt_init = False
-        if m1["active"] == 0 or max_iter == 1:
-            return state.select("id", F.col("value").alias("label")), engine.history
-
     # Synchronous LPA: every vertex re-evaluates each round, so the
     # frontier is the full state until convergence (unlike CC's delta).
     state, history = engine.run(
@@ -364,6 +313,9 @@ def label_propagation(
         start_step=start_step,
         algorithm="label_propagation",
         post_superstep=post_superstep,
-        checkpoint_initial_state=ckpt_init,
+        # the reduced round 1 reads the initial state once and never
+        # routes its frontier: materializing it first would be a
+        # full copy for nothing
+        checkpoint_initial_state=ckpt_init and not reduce_round1,
     )
     return state.select("id", F.col("value").alias("label")), history

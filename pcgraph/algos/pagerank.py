@@ -117,7 +117,7 @@ def pagerank(
 
     start_step = 0
     loop_state = {"dangling": 0.0}
-    ckpt_init = True  # initial-state checkpoint (engine._run_loop)
+    ckpt_init = True  # initial-state checkpoint (engine._MemoryState)
     resumed = engine.resume(resume_from) if resume_from else None
     if resumed is not None:
         state, _, meta = resumed

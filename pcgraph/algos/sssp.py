@@ -13,23 +13,19 @@ global min fold, emit-on-strict-improvement (:173-192).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import PCEngine
-from ..statestore import default_state_dir as _default_state_dir
 from ..partition import (
     ensure_block_store,
     GraphBlocks,
     block_edge_source_index,
     build_blocks,
     unpack_block,
-    vertex_ids,
 )
+from ._minprop import run_min_propagation
 
 _INF = float("inf")
 
@@ -85,16 +81,15 @@ def sssp(
     state_store_dir: str | None = None,
     n_buckets: int = 256,
     max_versions: int = 8,
-    delta: bool = True,
     post_superstep=None,
 ) -> tuple[DataFrame, list[dict]]:
     """Weighted SSSP from ``source``; returns (DataFrame[id, distance],
     metrics).  Unreached vertices have distance +inf.
 
     ``incremental=True``: SSSP is THE wavefront algorithm — most of its
-    ~diameter rounds touch a tiny frontier, so the bucketed incremental
-    state (rewrite only touched buckets) makes those rounds O(frontier)
-    instead of O(|V|) (engine.run docstring)."""
+    ~diameter rounds touch a tiny frontier, so the DeltaStateStore
+    (append only the improved distances) makes those rounds
+    O(changed) instead of O(|V|) (engine.run docstring)."""
     e = edges.select("src", "dst", "weight")
     if blocks is None:
         if store_dir is not None:
@@ -107,90 +102,23 @@ def sssp(
                 spark, e, num_partitions, salt_threshold=salt_threshold,
                 weighted=True,
             )
-    engine = PCEngine(
-        spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
-    )
-
-    start_step = 0
-    resume_manifest = None
-    ckpt_init = True  # initial-state checkpoint (engine._run_loop)
-    resumed = engine.resume(resume_from) if resume_from else None
-    if resumed is not None:
-        state, frontier, meta = resumed
-        start_step = int(meta["superstep"])
-        engine.checkpoint_dir = engine.checkpoint_dir or resume_from
-        if "manifest" in meta:  # round was committed by the incremental loop
-            incremental = True
-            resume_manifest = meta["manifest"]
-            n_buckets = int(meta.get("n_buckets", n_buckets))
-            state_store_dir = (
-                state_store_dir
-                or meta.get("state_store_dir_resolved")
-                or os.path.join(resume_from, "statestore")
-            )
-    else:
-        if blocks.vertices_path is not None and vertices is None:
-            vset = spark.read.parquet(blocks.vertices_path).select("id")
-            # initial state = a cheap deterministic census scan: skip
-            # materializing it before round 1 (engine.run docstring)
-            ckpt_init = False
-        else:
-            vset = vertex_ids(e)
-            if vertices is not None:
-                vset = vset.union(vertices.select("id")).distinct()
-        state = vset.select(
-            "id",
-            F.when(F.col("id") == source, 0.0).otherwise(F.lit(_INF)).alias("value"),
-            (F.col("id") == source).alias("changed"),
-        )
-        frontier = None  # derived from checkpointed state (source row)
-
-    def update(state_df, msgs, step):
-        # string expressions: a handful of py4j round-trips per round
-        # instead of one per Column op (see pagerank.update)
-        folded = msgs.groupBy("dst").agg(F.expr("min(msg) as msg"))
-        joined = state_df.select("id", "value").join(
-            folded, F.expr("id = dst"), "left"
-        )
-        return joined.selectExpr(
-            "id",
-            "least(value, msg) as value",
-            "coalesce(msg < value, false) as changed",
-        )
-
-    if incremental and state_store_dir is None:
-        state_store_dir = _default_state_dir(checkpoint_dir, "sssp")
-
-    state, history = engine.run(
-        blocks=blocks,
-        state=state,
-        frontier=frontier,
+    is_source = F.col("id") == source
+    state, history = run_min_propagation(
+        spark, blocks, e, vertices,
+        init_value=F.when(is_source, 0.0).otherwise(F.lit(_INF)),
+        init_changed=is_source,
         kernel=sssp_kernel,
         msg_schema="dst long, msg double",
-        update=update,
-        frontier_fn=lambda s: s.filter("changed").select("id", "value"),
-        # active-count rides the round's materializing job (observe)
-        metrics_exprs=[
-            F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
-        ],
-        metrics_post=lambda obs, step: {"active": int(obs["changed"] or 0)},
-        max_iter=max_iter,
-        start_step=start_step,
         algorithm="sssp",
-        # SSSP's frontier is a wave: most of the ~diameter rounds touch
-        # a few partitions, so skipping inactive blocks is the
-        # difference between O(frontier) and O(|E|) per round.
-        prefilter_blocks=True,
-        state_store_dir=state_store_dir if incremental else None,
+        max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_every=checkpoint_every,
+        resume_from=resume_from,
+        incremental=incremental,
+        state_store_dir=state_store_dir,
         n_buckets=n_buckets,
-        resume_manifest=resume_manifest,
-        # CC/SSSP merge = min-fold + strict improvement: the exact
-        # contract the delta-version store needs (engine.run docstring).
-        # delta=False falls back to the bucket-rewrite incremental loop
-        # (kept for A/B benchmarking; delta is strictly O(changed)).
-        monotone="min" if delta else None,
         max_versions=max_versions,
+        strict=False,
         post_superstep=post_superstep,
-        checkpoint_initial_state=ckpt_init,
     )
     return state.select("id", F.col("value").alias("distance")), history

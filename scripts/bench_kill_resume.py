@@ -50,7 +50,7 @@ def child(mode: str, edges_path: str, ckpt: str, partitions: int) -> None:
     kwargs = dict(
         num_partitions=partitions,
         store_dir=edges_path + f".wstore{partitions}",
-        incremental=True, delta=True, checkpoint_dir=ckpt,
+        incremental=True, checkpoint_dir=ckpt,
         post_superstep=post,
     )
     if mode == "resume":

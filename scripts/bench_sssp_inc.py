@@ -1,25 +1,25 @@
-"""A/B the incremental state modes on the full 316M-edge graph: SSSP's
+"""A/B the SSSP state backends on the full 316M-edge graph: SSSP's
 sparse wavefront is THE case the DeltaStateStore exists for.
 
-Three state models over identical topology (weighted block store, 128
+Two state models over identical topology (weighted block store, 128
 partitions) from the same source:
 
   * classic         — per-round O(|V|) state localCheckpoint
                       (r3 recording: BENCH/sssp_316m_r3.json, flat
                       ~4-5 s/round regardless of frontier size);
-  * bucket-rewrite  — BucketedStateStore: rewrite the buckets the
-                      round's messages touch (messages from even a ~1k
-                      frontier hash into every bucket, so mid rounds
-                      still rewrite nearly the whole state);
   * delta           — DeltaStateStore: append ONLY changed rows as a
                       new version, min-reconciled on read — O(changed)
                       writes, the round-4 design (docs/PERF.md).
+
+The r4 recording also holds a third model, ``bucket-rewrite`` (rewrite
+every bucket a round's messages touch); that store has since been
+removed from the engine.
 
 Each mode runs in its own subprocess (fresh JVM — no cache bleed);
 results land in BENCH/sssp_inc_316m_r4.json tagged by mode.
 
 Usage:
-  python scripts/bench_sssp_inc.py [--modes delta,bucket-rewrite]
+  python scripts/bench_sssp_inc.py [--modes classic,delta]
       [--edges /tmp/pcgraph_scaling_edges.parquet]
       [--source -7426096421218428235] [--out BENCH/sssp_inc_316m_r4.json]
 """
@@ -51,14 +51,13 @@ def child(mode: str, edges_path: str, source: int, n_buckets: int) -> None:
         edges_path + ".wstore128", weighted=True, tag="directed-w",
     )
     build_sec = time.monotonic() - t0
-    state_dir = tempfile.mkdtemp(prefix=f"pcgraph_sssp_{mode.replace('-', '_')}_")
+    state_dir = tempfile.mkdtemp(prefix=f"pcgraph_sssp_{mode}_")
     t0 = time.monotonic()
     result, hist = sssp(
         spark, edges, source=source, num_partitions=128, blocks=blocks,
         incremental=mode != "classic",
         state_store_dir=state_dir if mode != "classic" else None,
         n_buckets=n_buckets,
-        delta=mode == "delta",
     )
     loop_sec = time.monotonic() - t0
     n_reached = result.filter("distance < cast('inf' as double)").count()
@@ -95,7 +94,7 @@ def child(mode: str, edges_path: str, source: int, n_buckets: int) -> None:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--modes", default="delta,bucket-rewrite")
+    ap.add_argument("--modes", default="classic,delta")
     ap.add_argument("--edges", default="/tmp/pcgraph_scaling_edges.parquet")
     ap.add_argument("--source", type=int, default=-7426096421218428235)
     ap.add_argument("--n-buckets", type=int, default=256)

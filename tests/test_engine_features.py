@@ -198,3 +198,104 @@ def test_prefilter_blocks_records_active_partitions(spark):
     assert all(c == (1 if v % 2 else 2) for v, c in comps.items())
     assert all("active_partitions" in m for m in history)
     assert history[0]["active_partitions"] == 8
+
+
+def _jobs_per_round(spark, call) -> dict[int, int]:
+    """Spark jobs each superstep of ``call(post_superstep)`` ran.  The
+    hook tags the NEXT superstep's jobs with a job group, so a round's
+    group holds exactly the jobs between two consecutive hooks."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"pcgraph-jobs-{uuid.uuid4().hex[:8]}"
+    steps: list[int] = []
+
+    def hook(step, _metrics):
+        steps.append(step)
+        sc.setJobGroup(f"{tag}:{step + 1}", "superstep")
+
+    sc.setJobGroup(f"{tag}:1", "superstep")
+    try:
+        call(hook)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    return {s: len(tracker.getJobIdsForGroup(f"{tag}:{s}")) for s in steps}
+
+
+def test_steady_round_job_counts_are_pinned(spark, tmp_path):
+    """The work a steady superstep does, counted in Spark jobs: one job
+    per PageRank round (the state checkpoint), and seven per delta-store
+    CC round (block prefilter, kernel-running fold count, active-bucket
+    collect, delta write and the store's parquet listings/reads).  A
+    change to the round driver that adds an action per round fails
+    here."""
+    from pcgraph.algos.cc import connected_components
+    from pcgraph.algos.pagerank import pagerank
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=200))
+    pr = _jobs_per_round(
+        spark,
+        lambda hook: pagerank(
+            spark, edges, num_partitions=4, max_iter=4, post_superstep=hook
+        ),
+    )
+    assert pr[2] == pr[3] == 1, pr
+
+    cc = _jobs_per_round(
+        spark,
+        lambda hook: connected_components(
+            spark, edges, num_partitions=4, incremental=True, n_buckets=8,
+            state_store_dir=str(tmp_path / "cc_state"), post_superstep=hook,
+        ),
+    )
+    assert len(cc) > 3, cc
+    assert cc[2] == cc[3] == 7, cc
+
+
+@pytest.mark.parametrize("backend", ["memory", "delta"])
+def test_failed_round_releases_persisted_frames(spark, tmp_path, backend):
+    """A round that raises (strict mode, unknown target) must not leave
+    round-scoped persisted frames or state checkpoints behind in the
+    caller's session."""
+    from pcgraph.engine import PCEngine
+    from pcgraph.partition import build_blocks
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
+    blocks = build_blocks(spark, edges, 4)
+    vset = spark.createDataFrame([(i,) for i in range(0, 40, 2)], "id long")
+    state = vset.select(
+        "id", F.col("id").alias("value"), F.lit(True).alias("changed")
+    )
+
+    def kernel(key, fpdf, bpdf):
+        import pandas as pd
+
+        return pd.DataFrame({"dst": [999_999], "msg": [0]})
+
+    store = {}
+    if backend == "delta":
+        store = dict(
+            state_store_dir=str(tmp_path / "store"), n_buckets=8, monotone="min"
+        )
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    with pytest.raises(ValueError, match="Target vertex does not exist"):
+        PCEngine(spark).run(
+            blocks=blocks,
+            state=state,
+            frontier=None,
+            kernel=kernel,
+            msg_schema="dst long, msg long",
+            update=lambda s, m, i: s.select("id", "value", "changed"),
+            frontier_fn=lambda s: s.select("id", "value"),
+            max_iter=2,
+            strict=True,
+            **store,
+        )
+    assert persisted() - before == set()

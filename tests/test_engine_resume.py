@@ -2,6 +2,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from pcgraph import fixtures
 from pcgraph.algos.cc import connected_components
 from pcgraph.algos.pagerank import pagerank
@@ -88,3 +90,30 @@ def test_cc_salting_equivalence(spark):
     a = {r["id"]: r["component"] for r in plain.collect()}
     b = {r["id"]: r["component"] for r in salted.collect()}
     assert a == b
+
+
+def test_bucket_rewrite_checkpoint_resume_raises_clear_error(spark, tmp_path):
+    """A checkpoint written by the removed bucket-rewrite state store
+    (its meta maps each bucket to ONE version) must be refused on
+    resume with an error that names the format, not die inside the
+    delta store's restore."""
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
+    ckpt = tmp_path / "old_ckpt"
+    rdir = ckpt / "round=00002"
+    rdir.mkdir(parents=True)
+    meta = {
+        "active": 3,
+        "superstep": 2,
+        "algorithm": "connected_components",
+        "manifest": {"0": 2, "1": 0, "2": 1},
+        "n_buckets": 4,
+        "state_store_dir": "statestore",
+        "committed": True,
+        "parent_round": 1,
+        "frontier_path": "round=00002/frontier.parquet",
+    }
+    (rdir / "_meta.json").write_text(json.dumps(meta))
+    with pytest.raises(ValueError, match="bucket-rewrite"):
+        connected_components(
+            spark, edges, num_partitions=4, resume_from=str(ckpt)
+        )

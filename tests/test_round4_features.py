@@ -210,19 +210,18 @@ def test_lsh_cap_releases_banded_cache(spark):
 
 
 # ------------------------------------------------ incremental state
-@pytest.mark.parametrize("delta", [True, False], ids=["delta", "bucket-rewrite"])
-def test_incremental_cc_matches_classic(spark, tmp_path, delta):
-    """CC over the incremental state store (both models: delta-version
-    appends and bucket rewrites) must equal the classic
-    full-materialization loop exactly, and tail rounds must touch a
+@pytest.mark.parametrize("incremental", [True], ids=["delta"])
+def test_incremental_cc_matches_classic(spark, tmp_path, incremental):
+    """CC over the delta state store must equal the in-memory
+    full-materialization backend exactly, and tail rounds must touch a
     shrinking subset of buckets (the O(frontier) property)."""
     from pcgraph.algos.cc import connected_components
 
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=200))
     classic, _ = connected_components(spark, edges, num_partitions=4)
     inc, hist = connected_components(
-        spark, edges, num_partitions=4, incremental=True,
-        state_store_dir=str(tmp_path / "state"), n_buckets=16, delta=delta,
+        spark, edges, num_partitions=4, incremental=incremental,
+        state_store_dir=str(tmp_path / "state"), n_buckets=16,
     )
     a = {r["id"]: r["component"] for r in classic.collect()}
     b = {r["id"]: r["component"] for r in inc.collect()}
@@ -233,8 +232,8 @@ def test_incremental_cc_matches_classic(spark, tmp_path, delta):
     assert hist[-1]["active_buckets"] < hist[0]["active_buckets"]
 
 
-@pytest.mark.parametrize("delta", [True, False], ids=["delta", "bucket-rewrite"])
-def test_incremental_sssp_matches_classic(spark, tmp_path, delta):
+@pytest.mark.parametrize("incremental", [True], ids=["delta"])
+def test_incremental_sssp_matches_classic(spark, tmp_path, incremental):
     import numpy as np
     import pandas as pd
 
@@ -251,8 +250,8 @@ def test_incremental_sssp_matches_classic(spark, tmp_path, delta):
     edges = fixtures.to_spark_edges(spark, pdf)
     classic, _ = sssp(spark, edges, source=0, num_partitions=4)
     inc, hist = sssp(
-        spark, edges, source=0, num_partitions=4, incremental=True,
-        state_store_dir=str(tmp_path / "state"), n_buckets=16, delta=delta,
+        spark, edges, source=0, num_partitions=4, incremental=incremental,
+        state_store_dir=str(tmp_path / "state"), n_buckets=16,
     )
     a = {r["id"]: r["distance"] for r in classic.collect()}
     b = {r["id"]: r["distance"] for r in inc.collect()}
@@ -382,26 +381,24 @@ def test_lpa_update_single_message_shuffle(spark):
     import pcgraph.engine as eng
 
     captured = {}
-    orig = eng.PCEngine._run_loop
+    orig = eng.PCEngine.run
 
-    def spy(self, blocks, state, frontier, kernel, msg_schema, update,
-            *a, **kw):
+    def spy(self, *a, update, **kw):
         def spied_update(s, m, step):
             out = update(s, m, step)
             if step == 2:  # steady shape: state side is a checkpoint
                 captured["plan"] = out._jdf.queryExecution().toString()
             return out
 
-        return orig(self, blocks, state, frontier, kernel, msg_schema,
-                    spied_update, *a, **kw)
+        return orig(self, *a, update=spied_update, **kw)
 
-    eng.PCEngine._run_loop = spy
+    eng.PCEngine.run = spy
     try:
         edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=120))
         lp, _ = label_propagation(spark, edges, max_iter=3, num_partitions=4)
         lp.collect()
     finally:
-        eng.PCEngine._run_loop = orig
+        eng.PCEngine.run = orig
 
     physical = captured["plan"].split("== Physical Plan ==")[-1]
     import re

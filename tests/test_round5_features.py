@@ -1,8 +1,8 @@
 """Round-5 fixes: strict mode O(touched buckets) in the delta loop,
-resumable custom state-store dirs, manifest-shape dispatch errors,
-labelprop round-1 checkpoint commit, DeltaStateStore value-type-safe
-empty reads, single-flip block-store meta with fingerprint, and the
-compaction version-list ordering invariant."""
+resumable custom state-store dirs, labelprop round-1 checkpoint commit,
+DeltaStateStore value-type-safe empty reads, single-flip block-store
+meta with fingerprint, and the compaction version-list ordering
+invariant."""
 
 import json
 import os
@@ -37,7 +37,7 @@ def test_strict_delta_adds_no_extra_store_reads(spark, tmp_path, monkeypatch):
     def run(strict):
         calls.clear()
         out, hist = connected_components(
-            spark, edges, num_partitions=4, incremental=True, delta=True,
+            spark, edges, num_partitions=4, incremental=True,
             strict=strict, n_buckets=16,
             state_store_dir=str(tmp_path / f"store_{strict}"),
         )
@@ -104,7 +104,7 @@ def test_resume_with_custom_state_store_dir(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     store = str(tmp_path / "elsewhere" / "custom_store")  # NOT under ckpt
     connected_components(
-        spark, edges, num_partitions=4, incremental=True, delta=True,
+        spark, edges, num_partitions=4, incremental=True,
         checkpoint_dir=ckpt, state_store_dir=store, max_iter=2, n_buckets=8,
     )
     meta = json.load(open(os.path.join(ckpt, "round=00002", "_meta.json")))
@@ -124,7 +124,7 @@ def test_store_dir_recorded_relative_when_under_checkpoint(spark, tmp_path):
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=80))
     ckpt = str(tmp_path / "ckpt2")
     connected_components(
-        spark, edges, num_partitions=4, incremental=True, delta=True,
+        spark, edges, num_partitions=4, incremental=True,
         checkpoint_dir=ckpt, max_iter=2, n_buckets=8,
     )
     meta = json.load(open(os.path.join(ckpt, "round=00002", "_meta.json")))
@@ -140,29 +140,11 @@ def test_store_dir_recorded_relative_when_under_checkpoint(spark, tmp_path):
     assert {r["id"]: r["component"] for r in resumed.collect()} == full_rows
 
 
-# --------------------------------------- manifest-shape dispatch error
-def test_delta_manifest_with_bucket_loop_raises_clear_error(spark, tmp_path):
-    """ADVICE r4: resuming a delta (list-valued) manifest with
-    delta=False used to route into BucketedStateStore.restore and die
-    with an opaque TypeError; it must raise a clear mismatch error."""
-    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=80))
-    ckpt = str(tmp_path / "ckpt3")
-    connected_components(
-        spark, edges, num_partitions=4, incremental=True, delta=True,
-        checkpoint_dir=ckpt, max_iter=2, n_buckets=8,
-    )
-    with pytest.raises(ValueError, match="delta-versioned"):
-        connected_components(
-            spark, edges, num_partitions=4, resume_from=ckpt,
-            delta=False, n_buckets=8,
-        )
-
-
 # ------------------------------------ labelprop round-1 commit + resume
 def test_labelprop_round1_checkpoint_committed_and_resumable(spark, tmp_path):
-    """ADVICE r4: the superstep-1 strength reduction runs outside the
-    engine loop; with checkpointing on it must still commit a resumable
-    round 1 (a crash in round 2 previously restarted the whole job)."""
+    """ADVICE r4: with checkpointing on, the superstep-1 strength
+    reduction must commit a resumable round 1 like any other round (a
+    crash in round 2 previously restarted the whole job)."""
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=120))
     full, _ = label_propagation(spark, edges, max_iter=3, num_partitions=4)
     full_rows = {r["id"]: r["label"] for r in full.collect()}
