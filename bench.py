@@ -126,22 +126,18 @@ def main() -> None:
     n_edges = edges.count()
     extras["n_edges"] = n_edges
 
-    # Block mode: store mode is the default (topology read worker-side —
-    # the recommended at-scale path).  SPARK_GRAFT_STORE=0 switches back
-    # to cogroup mode.
-    use_store = os.environ.get("SPARK_GRAFT_STORE", "1") == "1"
-    extras["block_mode"] = "store" if use_store else "cogroup"
+    # Topology reaches the kernels through the block store (read
+    # worker-side) — the only block path.
+    extras["block_mode"] = "store"
     store_root = f"/tmp/pcgraph_bench_store_sf{sf}"
 
-    from pcgraph.partition import build_blocks, ensure_block_store
+    from pcgraph.partition import ensure_block_store
 
     def build(e, tag, weighted=False, expected=None):
-        if use_store:
-            return ensure_block_store(
-                spark, e, num_partitions, os.path.join(store_root, tag),
-                weighted=weighted, tag=tag, expected_edges=expected,
-            )
-        return build_blocks(spark, e, num_partitions, weighted=weighted)
+        return ensure_block_store(
+            spark, e, num_partitions, os.path.join(store_root, tag),
+            weighted=weighted, tag=tag, expected_edges=expected,
+        )
 
     # one-time topology builds — timed separately (see module docstring);
     # expected_edges fingerprints the store against regenerated input

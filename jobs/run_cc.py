@@ -25,9 +25,9 @@ def main() -> None:
     ap.add_argument("--checkpoint-every", type=int, default=1)
     ap.add_argument("--resume-from", default=None)
     ap.add_argument("--store-dir", default=None,
-                    help="block-store directory (built on first use); "
-                         "topology is then read worker-side — the "
-                         "recommended iteration path at scale")
+                    help="block-store directory (built on first use, "
+                         "reused after); default: a temp store deleted "
+                         "on return (local masters only)")
     ap.add_argument("--salt-threshold", type=int, default=None)
     ap.add_argument("--incremental", action="store_true",
                     help="delta state store: each round appends only its "

@@ -34,9 +34,9 @@ def main() -> None:
     ap.add_argument("--checkpoint-every", type=int, default=1)
     ap.add_argument("--resume-from", default=None)
     ap.add_argument("--store-dir", default=None,
-                    help="block-store directory (built on first use); "
-                         "topology is then read worker-side — the "
-                         "recommended iteration path at scale")
+                    help="block-store directory (built on first use, "
+                         "reused after); default: a temp store deleted "
+                         "on return (local masters only)")
     args = ap.parse_args()
     if (args.edges is None) == (args.source is None):
         ap.error("exactly one of --edges / --source is required")

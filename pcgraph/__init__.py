@@ -8,13 +8,12 @@ global shuffle.
 """
 
 from .engine import PCEngine
-from .partition import GraphBlocks, build_blocks, degrees, vertex_ids
+from .partition import GraphBlocks, degrees, vertex_ids
 from .session import get_spark
 
 __all__ = [
     "PCEngine",
     "GraphBlocks",
-    "build_blocks",
     "degrees",
     "vertex_ids",
     "get_spark",

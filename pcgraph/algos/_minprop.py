@@ -96,7 +96,7 @@ def run_min_propagation(
             "id", init_value.alias("value"), init_changed.alias("changed")
         )
     if incremental and state_store_dir is None:
-        state_store_dir = default_state_dir(checkpoint_dir, algorithm)
+        state_store_dir = default_state_dir(spark, checkpoint_dir, algorithm)
 
     return engine.run(
         blocks=blocks,
@@ -114,11 +114,6 @@ def run_min_propagation(
         max_iter=max_iter,
         start_step=start_step,
         algorithm=algorithm,
-        # CC's frontier collapses after ~3 rounds and SSSP's is a wave:
-        # most rounds touch a few partitions, so skipping inactive
-        # blocks is the difference between O(frontier) and O(|E|) of
-        # Arrow transfer per round.
-        prefilter_blocks=True,
         strict=strict,
         # min-fold + strict improvement is exactly the delta store's
         # merge contract (engine.run docstring)

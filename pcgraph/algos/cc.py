@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 from ..partition import (
     GraphBlocks,
     block_edge_source_index,
-    build_blocks,
-    ensure_block_store,
+    graph_blocks,
     unpack_block,
 )
 from ._minprop import run_min_propagation
@@ -123,32 +122,26 @@ def connected_components(
     fresh local temp dir — pass a shared-FS path on a cluster).
     """
     sym = symmetrize(edges)
-    if blocks is None:
-        if store_dir is not None:
-            blocks = ensure_block_store(
-                spark, sym, num_partitions, store_dir,
-                salt_threshold=salt_threshold, tag="sym",
-            )
-        else:
-            blocks = build_blocks(
-                spark, sym, num_partitions, salt_threshold=salt_threshold
-            )
-    state, history = run_min_propagation(
-        spark, blocks, sym, vertices,
-        init_value=F.col("id"),
-        init_changed=F.lit(True),
-        kernel=cc_kernel,
-        msg_schema="dst long, msg long",
-        algorithm="connected_components",
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        resume_from=resume_from,
-        incremental=incremental,
-        state_store_dir=state_store_dir,
-        n_buckets=n_buckets,
-        max_versions=max_versions,
-        strict=strict,
-        post_superstep=post_superstep,
-    )
-    return state.select("id", F.col("value").alias("component")), history
+    with graph_blocks(
+        spark, sym, num_partitions, blocks, store_dir,
+        salt_threshold=salt_threshold, tag="sym",
+    ) as blocks:
+        state, history = run_min_propagation(
+            spark, blocks, sym, vertices,
+            init_value=F.col("id"),
+            init_changed=F.lit(True),
+            kernel=cc_kernel,
+            msg_schema="dst long, msg long",
+            algorithm="connected_components",
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            resume_from=resume_from,
+            incremental=incremental,
+            state_store_dir=state_store_dir,
+            n_buckets=n_buckets,
+            max_versions=max_versions,
+            strict=strict,
+            post_superstep=post_superstep,
+        )
+        return state.select("id", F.col("value").alias("component")), history

@@ -27,10 +27,9 @@ from pyspark.sql import functions as F
 
 from ..engine import PCEngine
 from ..partition import (
-    ensure_block_store,
     GraphBlocks,
     block_edge_source_index,
-    build_blocks,
+    graph_blocks,
     unpack_block,
     vertex_ids,
 )
@@ -136,7 +135,8 @@ def label_propagation(
     (per-stage breakdown, r5 diagnosis; the r4 round-2 totals were
     100 GB).  Default (None): auto-sized from the edge count so each
     fold task holds ~2M histogram entries (~140 MB of hash map) —
-    |E x (2 if undirected)| / 2M partitions, capped at the session's
+    (edges in the block store, i.e. symmetrized when undirected) / 2M
+    partitions, capped at the session's
     ``spark.shuffle.sort.bypassMergeThreshold`` (the kernel stage's
     repartition write must stay on the streaming bypass path; ADVICE r5
     docstring fix).  When that spill-driven size is below
@@ -153,169 +153,165 @@ def label_propagation(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         e = raw_both.distinct()
-    if blocks is None:
-        if store_dir is not None:
-            blocks = ensure_block_store(
-                spark, e, num_partitions, store_dir,
-                salt_threshold=salt_threshold,
-                tag="directed" if directed else "sym",
-            )
+    with graph_blocks(
+        spark, e, num_partitions, blocks, store_dir,
+        salt_threshold=salt_threshold, tag="directed" if directed else "sym",
+    ) as blocks:
+        engine = PCEngine(
+            spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
+        )
+
+        start_step = 0
+        ckpt_init = True  # initial-state checkpoint (engine._MemoryState)
+        resumed = engine.resume(resume_from) if resume_from else None
+        if resumed is not None:
+            state, _, meta = resumed
+            start_step = int(meta["superstep"])
+            engine.checkpoint_dir = engine.checkpoint_dir or resume_from
         else:
-            blocks = build_blocks(
-                spark, e, num_partitions, salt_threshold=salt_threshold
+            if blocks.vertices_path is not None and vertices is None:
+                vset = spark.read.parquet(blocks.vertices_path).select("id")
+                # initial state = a cheap deterministic census scan: skip
+                # materializing it before round 1 (engine.run docstring)
+                ckpt_init = False
+            else:
+                vset = vertex_ids(e)
+                if vertices is not None:
+                    vset = vset.union(vertices.select("id")).distinct()
+            state = vset.select(
+                "id", F.col("id").alias("value"), F.lit(True).alias("changed")
             )
-    engine = PCEngine(
-        spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
-    )
 
-    start_step = 0
-    ckpt_init = True  # initial-state checkpoint (engine._MemoryState)
-    resumed = engine.resume(resume_from) if resume_from else None
-    if resumed is not None:
-        state, _, meta = resumed
-        start_step = int(meta["superstep"])
-        engine.checkpoint_dir = engine.checkpoint_dir or resume_from
-    else:
-        if blocks.vertices_path is not None and vertices is None:
-            vset = spark.read.parquet(blocks.vertices_path).select("id")
-            # initial state = a cheap deterministic census scan: skip
-            # materializing it before round 1 (engine.run docstring)
-            ckpt_init = False
+        # The kernel already emits per-partition partial histograms (the
+        # pandas groupby above), so Catalyst's map-side combine has nothing
+        # left to fold — letting the two aggregations each plan their own
+        # ENSURE_REQUIREMENTS exchange just moves the full histogram volume
+        # twice (hash(dst,label), then hash(dst)).  One explicit
+        # repartition by dst instead: HashPartitioning(dst) satisfies
+        # ClusteredDistribution(dst,label) AND (dst), so BOTH aggregations
+        # run exchange-free, and the state join reuses the same
+        # partitioning (co-partitioned with the state's hash(id)): 2
+        # full-volume exchanges -> 1, pinned by a plan test
+        # (test_lpa_update_single_message_shuffle).
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        if agg_partitions:
+            agg_n = int(agg_partitions)
         else:
-            vset = vertex_ids(e)
-            if vertices is not None:
-                vset = vset.union(vertices.select("id")).distinct()
-        state = vset.select(
-            "id", F.col("id").alias("value"), F.lit(True).alias("changed")
+            # Auto-size the fold so each task's hash-aggregate map fits in
+            # its execution-memory share: partials are bounded by one row
+            # per directed adjacency, and ~2M entries/task (~140 MB incl.
+            # BytesToBytesMap overhead) leaves 32 concurrent tasks well
+            # inside a 0.6 x heap execution pool.  The store recorded its
+            # (directed-adjacency) edge count at build, so this reads no
+            # edges; a store without the count falls back to the raw
+            # edge table's.
+            est_partials = blocks.n_edges or edges.count() * (
+                1 if directed else 2
+            )
+            # cap at the session's bypass-merge threshold: above it the
+            # kernel stage's repartition write switches to the sort path
+            # and buffers (= spills) its whole output per map task
+            bypass = int(
+                spark.conf.get("spark.shuffle.sort.bypassMergeThreshold", "200")
+            )
+            agg_n = _fold_width(est_partials, n_shuffle, bypass)
+
+        # Superstep-1 strength reduction (undirected fresh runs): with
+        # identity initialization (label(v)=v) on the deduplicated
+        # symmetrized graph, every (dst, label) count is exactly 1, so the
+        # argmax + smallest-label tie-break collapses to min(src) over the
+        # in-neighbors — a pure JVM aggregation with map-side partial min
+        # over the PRE-distinct edge union (min is duplicate-insensitive).
+        # The generic path would ship one Arrow histogram row per edge out
+        # of the Python kernel and hash-aggregate all of them (measured at
+        # 316M edges: the heaviest round of the run, 25 GB disk spill) to
+        # compute exactly this.  Round 1's update then ignores the kernel
+        # messages, so the kernels never run that round; the engine still
+        # materializes, observes, records and commits it like any other.
+        # Directed mode keeps the generic path: the raw edge table may be a
+        # multigraph, where duplicate edges legitimately contribute counts
+        # > 1.
+        reduce_round1 = resumed is None and not directed
+
+        def update(state_df, msgs, step):
+            if step == 1 and reduce_round1:
+                return reduced_round1(state_df)
+            # string expressions: a handful of py4j round-trips per round
+            # instead of one per Column op (see pagerank.update)
+            folded = (
+                msgs.repartition(agg_n, "dst")
+                .groupBy("dst", "label")
+                .agg(F.expr("sum(cnt) as cnt"))
+            )
+            # deterministic arg-max: max count, ties -> smallest label
+            best = (
+                folded.groupBy("dst")
+                .agg(F.expr("min(struct(-cnt, label)) as b"))
+                .selectExpr("dst", "b.label as new_label")
+            )
+            return merge_labels(state_df, best)
+
+        def reduced_round1(state_df):
+            # Every exchange of this round is sized to the auto-sized fold
+            # width round 2+ uses, not spark.sql.shuffle.partitions: at 32
+            # partitions over a 633M-row adjacency the final min aggregate
+            # and the state join held ~20M hash-map entries per task —
+            # measured 23.5 GB of memory spill in round 1 at 316M edges.
+            # The state joins hash(id) at agg_n, so the round-1 checkpoint
+            # hands round 2 the partitioning its fold already uses.
+            #
+            # repartition BEFORE the fold: the map-side partial min would
+            # hold ~10M-entry hash maps per scan task (measured 32 GB
+            # memory / 12 GB disk spilled at 316M edges); a plain hash
+            # exchange streams via bypass-merge (agg_n <= the session
+            # bypass threshold) and the post-exchange fold holds ~2M
+            # entries/task.  ~2x the shuffle bytes, zero spill.
+            best1 = (
+                raw_both.repartition(agg_n, "dst")
+                .groupBy("dst")
+                .agg(F.expr("min(src) as new_label"))
+            )
+            return merge_labels(state_df.repartition(agg_n, "id"), best1)
+
+        def merge_labels(state_df, best):
+            joined = state_df.select("id", "value").join(
+                best, F.expr("id = dst"), "left"
+            )
+            return joined.selectExpr(
+                "id",
+                "coalesce(new_label, value) as value",
+                "coalesce(new_label != value, false) as changed",
+            )
+
+        # changed-count rides the round's materializing job (observe) —
+        # no separate count action over the state.
+        metrics_exprs = [
+            F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
+        ]
+
+        def metrics_post(observed, step):
+            changed = int(observed["changed"] or 0)
+            return {"active": changed, "changed": changed}
+
+        # Synchronous LPA: every vertex re-evaluates each round, so the
+        # frontier is the full state until convergence (unlike CC's delta).
+        state, history = engine.run(
+            blocks=blocks,
+            state=state,
+            frontier=None,
+            kernel=lp_kernel,
+            msg_schema="dst long, label long, cnt int",
+            update=update,
+            frontier_fn=lambda s: s.select("id", "value"),
+            metrics_exprs=metrics_exprs,
+            metrics_post=metrics_post,
+            max_iter=max_iter,
+            start_step=start_step,
+            algorithm="label_propagation",
+            post_superstep=post_superstep,
+            # the reduced round 1 reads the initial state once and never
+            # routes its frontier: materializing it first would be a
+            # full copy for nothing
+            checkpoint_initial_state=ckpt_init and not reduce_round1,
         )
-
-    # The kernel already emits per-partition partial histograms (the
-    # pandas groupby above), so Catalyst's map-side combine has nothing
-    # left to fold — letting the two aggregations each plan their own
-    # ENSURE_REQUIREMENTS exchange just moves the full histogram volume
-    # twice (hash(dst,label), then hash(dst)).  One explicit
-    # repartition by dst instead: HashPartitioning(dst) satisfies
-    # ClusteredDistribution(dst,label) AND (dst), so BOTH aggregations
-    # run exchange-free, and the state join reuses the same
-    # partitioning (co-partitioned with the state's hash(id)): 2
-    # full-volume exchanges -> 1, pinned by a plan test
-    # (test_lpa_update_single_message_shuffle).
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if agg_partitions:
-        agg_n = int(agg_partitions)
-    else:
-        # Auto-size the fold so each task's hash-aggregate map fits in
-        # its execution-memory share: partials are bounded by one row
-        # per directed adjacency, and ~2M entries/task (~140 MB incl.
-        # BytesToBytesMap overhead) leaves 32 concurrent tasks well
-        # inside a 0.6 x heap execution pool.  The parquet row-count
-        # here is a footer read, not a data scan.
-        n_raw = edges.count()
-        est_partials = n_raw * (1 if directed else 2)
-        # cap at the session's bypass-merge threshold: above it the
-        # kernel stage's repartition write switches to the sort path
-        # and buffers (= spills) its whole output per map task
-        bypass = int(
-            spark.conf.get("spark.shuffle.sort.bypassMergeThreshold", "200")
-        )
-        agg_n = _fold_width(est_partials, n_shuffle, bypass)
-
-    # Superstep-1 strength reduction (undirected fresh runs): with
-    # identity initialization (label(v)=v) on the deduplicated
-    # symmetrized graph, every (dst, label) count is exactly 1, so the
-    # argmax + smallest-label tie-break collapses to min(src) over the
-    # in-neighbors — a pure JVM aggregation with map-side partial min
-    # over the PRE-distinct edge union (min is duplicate-insensitive).
-    # The generic path would ship one Arrow histogram row per edge out
-    # of the Python kernel and hash-aggregate all of them (measured at
-    # 316M edges: the heaviest round of the run, 25 GB disk spill) to
-    # compute exactly this.  Round 1's update then ignores the kernel
-    # messages, so the kernels never run that round; the engine still
-    # materializes, observes, records and commits it like any other.
-    # Directed mode keeps the generic path: the raw edge table may be a
-    # multigraph, where duplicate edges legitimately contribute counts
-    # > 1.
-    reduce_round1 = resumed is None and not directed
-
-    def update(state_df, msgs, step):
-        if step == 1 and reduce_round1:
-            return reduced_round1(state_df)
-        # string expressions: a handful of py4j round-trips per round
-        # instead of one per Column op (see pagerank.update)
-        folded = (
-            msgs.repartition(agg_n, "dst")
-            .groupBy("dst", "label")
-            .agg(F.expr("sum(cnt) as cnt"))
-        )
-        # deterministic arg-max: max count, ties -> smallest label
-        best = (
-            folded.groupBy("dst")
-            .agg(F.expr("min(struct(-cnt, label)) as b"))
-            .selectExpr("dst", "b.label as new_label")
-        )
-        return merge_labels(state_df, best)
-
-    def reduced_round1(state_df):
-        # Every exchange of this round is sized to the auto-sized fold
-        # width round 2+ uses, not spark.sql.shuffle.partitions: at 32
-        # partitions over a 633M-row adjacency the final min aggregate
-        # and the state join held ~20M hash-map entries per task —
-        # measured 23.5 GB of memory spill in round 1 at 316M edges.
-        # The state joins hash(id) at agg_n, so the round-1 checkpoint
-        # hands round 2 the partitioning its fold already uses.
-        #
-        # repartition BEFORE the fold: the map-side partial min would
-        # hold ~10M-entry hash maps per scan task (measured 32 GB
-        # memory / 12 GB disk spilled at 316M edges); a plain hash
-        # exchange streams via bypass-merge (agg_n <= the session
-        # bypass threshold) and the post-exchange fold holds ~2M
-        # entries/task.  ~2x the shuffle bytes, zero spill.
-        best1 = (
-            raw_both.repartition(agg_n, "dst")
-            .groupBy("dst")
-            .agg(F.expr("min(src) as new_label"))
-        )
-        return merge_labels(state_df.repartition(agg_n, "id"), best1)
-
-    def merge_labels(state_df, best):
-        joined = state_df.select("id", "value").join(
-            best, F.expr("id = dst"), "left"
-        )
-        return joined.selectExpr(
-            "id",
-            "coalesce(new_label, value) as value",
-            "coalesce(new_label != value, false) as changed",
-        )
-
-    # changed-count rides the round's materializing job (observe) —
-    # no separate count action over the state.
-    metrics_exprs = [
-        F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
-    ]
-
-    def metrics_post(observed, step):
-        changed = int(observed["changed"] or 0)
-        return {"active": changed, "changed": changed}
-
-    # Synchronous LPA: every vertex re-evaluates each round, so the
-    # frontier is the full state until convergence (unlike CC's delta).
-    state, history = engine.run(
-        blocks=blocks,
-        state=state,
-        frontier=None,
-        kernel=lp_kernel,
-        msg_schema="dst long, label long, cnt int",
-        update=update,
-        frontier_fn=lambda s: s.select("id", "value"),
-        metrics_exprs=metrics_exprs,
-        metrics_post=metrics_post,
-        max_iter=max_iter,
-        start_step=start_step,
-        algorithm="label_propagation",
-        post_superstep=post_superstep,
-        # the reduced round 1 reads the initial state once and never
-        # routes its frontier: materializing it first would be a
-        # full copy for nothing
-        checkpoint_initial_state=ckpt_init and not reduce_round1,
-    )
-    return state.select("id", F.col("value").alias("label")), history
+        return state.select("id", F.col("value").alias("label")), history

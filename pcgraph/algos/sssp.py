@@ -19,10 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..partition import (
-    ensure_block_store,
     GraphBlocks,
     block_edge_source_index,
-    build_blocks,
+    graph_blocks,
     unpack_block,
 )
 from ._minprop import run_min_propagation
@@ -91,34 +90,27 @@ def sssp(
     (append only the improved distances) makes those rounds
     O(changed) instead of O(|V|) (engine.run docstring)."""
     e = edges.select("src", "dst", "weight")
-    if blocks is None:
-        if store_dir is not None:
-            blocks = ensure_block_store(
-                spark, e, num_partitions, store_dir,
-                salt_threshold=salt_threshold, weighted=True, tag="directed-w",
-            )
-        else:
-            blocks = build_blocks(
-                spark, e, num_partitions, salt_threshold=salt_threshold,
-                weighted=True,
-            )
-    is_source = F.col("id") == source
-    state, history = run_min_propagation(
-        spark, blocks, e, vertices,
-        init_value=F.when(is_source, 0.0).otherwise(F.lit(_INF)),
-        init_changed=is_source,
-        kernel=sssp_kernel,
-        msg_schema="dst long, msg double",
-        algorithm="sssp",
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        resume_from=resume_from,
-        incremental=incremental,
-        state_store_dir=state_store_dir,
-        n_buckets=n_buckets,
-        max_versions=max_versions,
-        strict=False,
-        post_superstep=post_superstep,
-    )
-    return state.select("id", F.col("value").alias("distance")), history
+    with graph_blocks(
+        spark, e, num_partitions, blocks, store_dir,
+        salt_threshold=salt_threshold, weighted=True, tag="directed-w",
+    ) as blocks:
+        is_source = F.col("id") == source
+        state, history = run_min_propagation(
+            spark, blocks, e, vertices,
+            init_value=F.when(is_source, 0.0).otherwise(F.lit(_INF)),
+            init_changed=is_source,
+            kernel=sssp_kernel,
+            msg_schema="dst long, msg double",
+            algorithm="sssp",
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            resume_from=resume_from,
+            incremental=incremental,
+            state_store_dir=state_store_dir,
+            n_buckets=n_buckets,
+            max_versions=max_versions,
+            strict=False,
+            post_superstep=post_superstep,
+        )
+        return state.select("id", F.col("value").alias("distance")), history

@@ -22,18 +22,13 @@ switch 1:1 (PCConnectedComponents.run -> PCGraph.connected_components).
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .engine import PCEngine
-from .partition import (
-    GraphBlocks,
-    build_blocks,
-    degrees,
-    ensure_block_store,
-    vertex_ids,
-)
+from .partition import GraphBlocks, degrees, graph_blocks, vertex_ids
 
 _FOLDS = {"min": F.min, "max": F.max, "sum": F.sum}
 
@@ -59,32 +54,22 @@ class PCGraph:
         self.weighted = weighted
         self.store_dir = store_dir
         self._blocks: GraphBlocks | None = None
+        self._open = ExitStack()  # holds the store opened by ``blocks``
 
     # -------------------------------------------------------- topology
     @property
     def blocks(self) -> GraphBlocks:
-        """The graph's CSR blocks — cogroup mode by default; with
-        ``store_dir`` set, a worker-readable block store (topology never
-        crosses Arrow per round; the at-scale iteration path)."""
+        """The graph's block store over the directed edges: at
+        ``store_dir`` when set, else in a local temp dir that lives
+        until ``unpersist()``."""
         if self._blocks is None:
-            if self.store_dir is not None:
-                self._blocks = ensure_block_store(
-                    self.spark,
-                    self.edges,
-                    self.num_partitions,
-                    self.store_dir,
-                    salt_threshold=self.salt_threshold,
-                    weighted=self.weighted,
-                    tag="directed" + ("-w" if self.weighted else ""),
-                )
-            else:
-                self._blocks = build_blocks(
-                    self.spark,
-                    self.edges,
-                    self.num_partitions,
-                    salt_threshold=self.salt_threshold,
-                    weighted=self.weighted,
-                )
+            self._blocks = self._open.enter_context(graph_blocks(
+                self.spark, self.edges, self.num_partitions,
+                store_dir=self.store_dir,
+                salt_threshold=self.salt_threshold,
+                weighted=self.weighted,
+                tag="directed" + ("-w" if self.weighted else ""),
+            ))
         return self._blocks
 
     def vertex_set(self) -> DataFrame:
@@ -97,9 +82,9 @@ class PCGraph:
         return degrees(self.edges)
 
     def unpersist(self) -> None:
-        if self._blocks is not None:
-            self._blocks.unpersist()
-            self._blocks = None
+        """Release the store ``blocks`` opened (a temp store is deleted)."""
+        self._open.close()
+        self._blocks = None
 
     # -------------------------------------------------------- iteration
     def run_partition_centric_iteration(
@@ -115,7 +100,6 @@ class PCGraph:
         emit_on: str = "change",
         sum_tol: float | None = None,
         strict: bool = False,
-        prefilter_blocks: bool = False,
         pre_superstep: Callable | None = None,
         post_superstep: Callable | None = None,
     ) -> tuple[DataFrame, list[dict]]:
@@ -207,7 +191,6 @@ class PCGraph:
             max_iter=max_iter,
             algorithm="custom",
             strict=strict,
-            prefilter_blocks=prefilter_blocks,
             pre_superstep=pre_superstep,
             post_superstep=post_superstep,
         )
@@ -227,12 +210,10 @@ class PCGraph:
         from .algos.pagerank import pagerank
 
         # PageRank runs on the raw directed edges — exactly what
-        # self.blocks holds — so the cached CSR build is reused (the
-        # build's full edge shuffle is amortized across algorithms).
-        # With store_dir set, self.blocks IS the store handle.
-        kw.setdefault(
-            "blocks", self.blocks if self.store_dir is not None else self._blocks
-        )
+        # self.blocks holds — so the store build (one full edge shuffle)
+        # is amortized across calls.
+        if "blocks" not in kw and "store_dir" not in kw:
+            kw["blocks"] = self.blocks
         return pagerank(
             self.spark, self.edges, vertices=self.vertices,
             num_partitions=self.num_partitions,
@@ -242,10 +223,6 @@ class PCGraph:
     def label_propagation(self, **kw) -> tuple[DataFrame, list[dict]]:
         from .algos.labelprop import label_propagation
 
-        # Cached blocks hold the raw directed edges, valid only for the
-        # directed LPA variant (the undirected one symmetrizes first).
-        if kw.get("directed"):
-            kw.setdefault("blocks", self._blocks)
         return label_propagation(
             self.spark, self.edges, vertices=self.vertices,
             num_partitions=self.num_partitions,

@@ -5,13 +5,16 @@ Spark has no engine-level delta iteration (Flink:
 PartitionCentricIteration.java:89-112 — iterateDelta + closeWith), so
 the loop lives in the driver.  One global superstep =
 
-    frontier --route(partition_id, mirrors)--> cogroup with CSR blocks
-      [blocks pre-filtered to the frontier's ACTIVE partitions, so a
-      sparse tail round pays O(frontier), not O(|E|) Arrow transfer]
-      --applyInPandas(kernel: many LOCAL supersteps, vectorized numpy)-->
-      messages [dst, ...] --groupBy(dst).agg(fold) [Catalyst gives the
-      map-side combiner the reference lacks]--> state merge -->
-      changed-filter --> next frontier
+    frontier --route(partition_id, mirrors)--> groupBy(partition_id)
+      --flatMapGroupsInPandas(kernel: reads its partition's CSR block
+      from the block store worker-side, then many LOCAL supersteps,
+      vectorized numpy)--> messages [dst, ...] --groupBy(dst).agg(fold)
+      [Catalyst gives the map-side combiner the reference lacks]-->
+      state merge --> changed-filter --> next frontier
+
+Only the frontier crosses JVM -> Arrow -> Python each round; a
+partition the frontier does not touch has no group, so its kernel never
+runs (a sparse tail round pays O(frontier), not O(|E|)).
 
 Convergence = empty frontier (reference semantics) or an
 algorithm-supplied metric (PageRank L1 < tol).
@@ -122,22 +125,23 @@ def _store_dir_for_meta(checkpoint_dir: str, store_root: str) -> str:
     return store_abs
 
 
-def _bind_store(kernel3: Callable, store_path: str) -> Callable:
-    """Adapt a 3-arg kernel to block-store mode: the grouped-map only
-    delivers the frontier slice; the block side is read worker-side."""
+def _bind_store(kernel3: Callable, blocks: GraphBlocks) -> Callable:
+    """Adapt a 3-arg kernel to the grouped map: the group delivers the
+    frontier slice; the block side is read worker-side."""
+    store_path, build_id = blocks.store_path, blocks.build_id
 
     def fn(key, fpdf):
         from .partition import read_store_block
 
-        bpdf = read_store_block(store_path, int(key[0]))
+        bpdf = read_store_block(store_path, int(key[0]), build_id)
         return kernel3(key, fpdf, bpdf)
 
     return fn
 
 
 def _bind_step(kernel: Callable, step: int) -> Callable:
-    """Close over the superstep number with the exact 3-arg signature
-    cogroup.applyInPandas validates."""
+    """Close over the superstep number, leaving the 3-arg kernel
+    signature ``_bind_store`` wraps."""
 
     def kernel_fn(key, fpdf, bpdf):
         return kernel(key, fpdf, bpdf, step)
@@ -239,6 +243,7 @@ class _MemoryState:
         self.metrics_exprs = metrics_exprs
         self.state_cols = state_cols
         self.msgs: DataFrame | None = None  # persisted in strict rounds
+        self.lazy = not checkpoint_initial_state  # no round adopted yet
 
     def initial_frontier(self, frontier_fn) -> DataFrame:
         return frontier_fn(self.state)
@@ -307,12 +312,18 @@ class _MemoryState:
         if self.next is not None:
             _free_checkpoint(self.state)
             self.state, self.next = self.next, None
+            self.lazy = False
 
     def discard(self) -> None:
         """The run raised: free the state checkpoint it still holds."""
         _free_checkpoint(self.state)
 
     def result(self) -> DataFrame:
+        if self.lazy:
+            # no round ran over a lazy initial state (a census scan):
+            # materialize it, as the store it reads may be a temp
+            # store deleted when the algorithm call returns
+            return self.state.localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
         return self.state
 
 
@@ -520,7 +531,6 @@ class PCEngine:
         metrics_post: Callable[[dict, int], dict] | None = None,
         start_step: int = 0,
         algorithm: str = "custom",
-        prefilter_blocks: bool = False,
         strict: bool = False,
         state_cols: list[str] | None = None,
         pre_superstep: Callable[[int], None] | None = None,
@@ -555,15 +565,6 @@ class PCEngine:
         observation fires, so they never occupy checkpoint storage —
         at 316M edges this cuts the per-round state bytes ~25%.
 
-        ``prefilter_blocks=True`` restricts each round's cogroup to the
-        partitions the frontier actually touches (one tiny distinct-
-        collect of partition ids).  Essential for delta algorithms with
-        long sparse tails (CC after ~3 rounds, SSSP for ~diameter
-        rounds): without it every round ships the ENTIRE topology
-        through Arrow just to return empty frames.  Leave False for
-        full-frontier algorithms (PageRank, sync LPA) where all
-        partitions are active anyway.
-
         ``strict=True`` raises (reference parity: "Target vertex does
         not exist!", PartitionCentricIteration.java:216-227) if any
         kernel message targets a vertex id absent from the state.
@@ -587,7 +588,7 @@ class PCEngine:
         # serial per-round cost that hits higher parallelism levels
         # proportionally harder (Amdahl), and it buys nothing here: the
         # loop's shuffle partitioning is fixed by construction and skew
-        # is handled by explicit salting (AQE cannot split applyInPandas
+        # is handled by explicit salting (AQE cannot split grouped-map
         # groups anyway, SURVEY.md §4).
         conf.set("spark.sql.adaptive.enabled", "false")
         # The per-round merge join must NOT auto-broadcast the folded
@@ -616,7 +617,7 @@ class PCEngine:
             return self._drive(
                 blocks, backend, frontier, kernel, msg_schema, max_iter,
                 metrics_exprs, metrics_post, start_step, algorithm,
-                prefilter_blocks, strict, pre_superstep, post_superstep,
+                strict, pre_superstep, post_superstep,
             )
         finally:
             conf.set("spark.sql.adaptive.enabled", aqe_prev)
@@ -634,7 +635,6 @@ class PCEngine:
         metrics_post: Callable[[dict, int], dict] | None,
         start_step: int,
         algorithm: str,
-        prefilter_blocks: bool,
         strict: bool,
         pre_superstep: Callable[[int], None] | None,
         post_superstep: Callable[[int, dict], None] | None,
@@ -651,9 +651,8 @@ class PCEngine:
                 if pre_superstep is not None:
                     pre_superstep(step)
                 kernel_fn = _bind_step(kernel, step) if wants_step else kernel
-                msgs, active_partitions = self._messages(
-                    blocks, blocks.route(frontier), kernel_fn, msg_schema,
-                    prefilter_blocks,
+                msgs = self._messages(
+                    blocks, blocks.route(frontier), kernel_fn, msg_schema
                 )
                 durable = (
                     self.checkpoint_dir is not None
@@ -677,8 +676,6 @@ class PCEngine:
                         round_sec=round(time.monotonic() - round_t0, 4),
                     )
                     metrics.update(rnd.record)
-                    if active_partitions is not None:
-                        metrics["active_partitions"] = active_partitions
                     if durable and rnd.frontier is not None:
                         self._commit_round(
                             blocks, step, rnd.frontier,
@@ -699,32 +696,33 @@ class PCEngine:
         return backend.result(), self.history
 
     # ------------------------------------------------------------------
-    def _bound_kernel(self, kernel_fn: Callable, store_path: str) -> Callable:
-        """Per-run cache of the store-bound kernel closure: a fresh
-        closure per round would defeat the UDF cache below (the pickle
-        changes with the function object).  Keyed by kernel identity —
-        step-bound kernels (a new closure per round) simply miss."""
-        cached = self.__dict__.get("_bound_cache")
-        if cached is not None and cached[0] is kernel_fn and cached[1] == store_path:
-            return cached[2]
-        bound = _bind_store(kernel_fn, store_path)
-        self.__dict__["_bound_cache"] = (kernel_fn, store_path, bound)
-        return bound
-
-    def _grouped_udf(self, fn: Callable, msg_schema: str):
-        """Per-run cache of the grouped-map pandas UDF for ``fn``."""
+    def _kernel_udf(
+        self, kernel_fn: Callable, blocks: GraphBlocks, msg_schema: str
+    ):
+        """Per-run cache of the grouped-map pandas UDF running
+        ``kernel_fn`` over ``blocks``: the public grouped-map API re-wraps and
+        re-cloudpickles the function on every call (~20 ms/round
+        measured); the cached UDF applied through the same
+        ``flatMapGroupsInPandas`` entry point halves that.  Keyed by
+        kernel identity — step-bound kernels (a new closure per round)
+        simply miss."""
         cached = self.__dict__.get("_udf_cache")
-        if cached is not None and cached[0] is fn and cached[1] == msg_schema:
-            return cached[2]
+        if (
+            cached is not None
+            and cached[0] is kernel_fn
+            and cached[1] is blocks
+            and cached[2] == msg_schema
+        ):
+            return cached[3]
         from pyspark.rdd import PythonEvalType
         from pyspark.sql.functions import pandas_udf
 
         udf = pandas_udf(
-            fn,
+            _bind_store(kernel_fn, blocks),
             returnType=msg_schema,
             functionType=PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF,
         )
-        self.__dict__["_udf_cache"] = (fn, msg_schema, udf)
+        self.__dict__["_udf_cache"] = (kernel_fn, blocks, msg_schema, udf)
         return udf
 
     # ------------------------------------------------------------------
@@ -734,10 +732,12 @@ class PCEngine:
         routed: DataFrame,
         kernel_fn: Callable,
         msg_schema: str,
-        prefilter_blocks: bool,
-    ) -> tuple[DataFrame, int | None]:
+    ) -> DataFrame:
         """One superstep's kernel application: routed frontier -> raw
-        messages.
+        messages.  The grouped map only materializes groups the
+        frontier touches, and each kernel reads its own partition's CSR
+        rows worker-side — no JVM cache scan, no Arrow transfer of the
+        topology, and inactive partitions are free.
 
         The routed frontier is explicitly hash-partitioned into
         ``num_partitions`` (one CSR block per task) instead of letting
@@ -748,9 +748,10 @@ class PCEngine:
         per-task kernel stage buffered ~240 MB of compressed partials
         per task and spilled 10-15 GB/round (r5 per-stage attribution,
         docs/PERF.md); at one block per task the buffers fit."""
-        active_partitions = None
+        from pyspark.sql.classic.dataframe import DataFrame as _CDF
+
         # Physical width of the kernel stage (number of reduce
-        # partitions feeding applyInPandas).  One CSR block per task is
+        # partitions feeding the grouped map).  One CSR block per task is
         # the at-scale layout (spill-free shuffle write, r5); but each
         # python-runner task has a fixed JVM<->worker protocol cost
         # (~10-100 ms), so a SMALL graph must not fan a few thousand
@@ -765,47 +766,17 @@ class PCEngine:
         if blocks.n_edges is not None:
             width = max(1, min(width, -(-blocks.n_edges // _EDGES_PER_KERNEL_TASK)))
         widened = routed.repartition(width, "partition_id")
-        if blocks.store_path is not None:
-            # Block-store mode: the grouped-map only materializes
-            # groups the frontier touches, and each kernel reads its
-            # own partition's CSR rows worker-side — no JVM cache
-            # scan, no Arrow transfer of the topology, and inactive
-            # partitions are free (prefiltering is structural).
-            #
-            # The pandas UDF object is cached across supersteps (same
-            # kernel, same schema): applyInPandas re-wraps and
-            # re-cloudpickles the function on every call (~20 ms/round
-            # measured); the cached UDF applied through the same
-            # flatMapGroupsInPandas entry point halves that.  Any
-            # failure of the cached path falls back to the public API.
-            bound = self._bound_kernel(kernel_fn, blocks.store_path)
-            try:
-                udf = self._grouped_udf(bound, msg_schema)
-                gd = widened.groupby("partition_id")
-                udf_col = udf(*[widened[c] for c in widened.columns])
-                from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-                msgs = _CDF(
-                    gd._jgd.flatMapGroupsInPandas(udf_col._jc), self.spark
-                )
-            except Exception:
-                msgs = widened.groupby("partition_id").applyInPandas(
-                    bound, schema=msg_schema
-                )
-        else:
-            blocks_df = blocks.blocks
-            if prefilter_blocks:
-                pids = [
-                    r[0]
-                    for r in routed.select("partition_id").distinct().collect()
-                ]
-                active_partitions = len(pids)
-                blocks_df = blocks_df.filter(F.col("partition_id").isin(pids))
-            msgs = (
-                widened.groupby("partition_id")
-                .cogroup(blocks_df.groupby("partition_id"))
-                .applyInPandas(kernel_fn, schema=msg_schema)
-            )
+        # The private entry point is pinned by
+        # test_kernel_stage_takes_cached_udf_path: there is no fallback
+        # to the public API, which would hide UDF-construction errors.
+        udf = self._kernel_udf(kernel_fn, blocks, msg_schema)
+        udf_col = udf(*[widened[c] for c in widened.columns])
+        msgs = _CDF(
+            widened.groupby("partition_id")._jgd.flatMapGroupsInPandas(
+                udf_col._jc
+            ),
+            self.spark,
+        )
         if width < blocks.num_partitions:
             # Small-graph case only (the width cap did not bind): keep
             # the downstream message fold at the same width — the
@@ -816,9 +787,8 @@ class PCEngine:
             # ENSURE_REQUIREMENTS exchange (same exchange count); never
             # fires at scale, where width == num_partitions.
             msgs = msgs.repartition(width, "dst")
-        return msgs, active_partitions
+        return msgs
 
-    # ------------------------------------------------------------------
     # ------------------------------------------------------------------
     def _commit_round(
         self, blocks: GraphBlocks, step: int, frontier: DataFrame, meta: dict

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -111,3 +112,17 @@ def strip_file_scheme(path: str) -> str:
 def local_or_uri_abspath(path: str) -> str:
     """abspath for plain local paths; URIs pass through untouched."""
     return path if "://" in path else os.path.abspath(path)
+
+
+def local_temp_dir(master: str, prefix: str, param: str) -> str:
+    """A fresh driver-local temp dir for a default that only local mode
+    can use: under ``local``/``local[...]`` the executors share the
+    driver's disk; on any other master they cannot read it, so the
+    caller must pass ``param`` on storage every executor can read."""
+    if master != "local" and not master.startswith("local["):
+        raise ValueError(
+            f"no {param} given and master {master!r} is not local: "
+            "executors cannot read a driver-local temp dir — pass "
+            f"{param} on shared storage (hdfs://, s3a://, a shared mount)"
+        )
+    return tempfile.mkdtemp(prefix=prefix)

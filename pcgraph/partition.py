@@ -4,9 +4,12 @@ Reference model: Flink partition-centric iteration re-shuffles the
 workset⋈edges coGroup every superstep
 (/root/reference/src/main/java/org/apache/flink/graph/partition/centric/
 PartitionCentricIteration.java:96-103).  Our design instead packs the
-static topology once into per-partition CSR blocks (Arrow list columns)
-keyed by ``partition_id = pmod(xxhash64(src), P)`` so that every
-superstep only shuffles the (small) frontier and the messages.
+static topology once into per-partition CSR blocks keyed by
+``partition_id = pmod(xxhash64(src), P)`` and writes them as a BLOCK
+STORE (``blocks/partition_id=N/`` Parquet) that each kernel reads for
+its own partition inside the Python worker, so every superstep only
+shuffles the (small) frontier and the messages.  ``graph_blocks`` is
+the one place an algorithm gets its store from.
 
 Skew (north rule: "skewed high-degree vertices are salted and mirrored
 explicitly"): a vertex whose out-degree exceeds ``salt_threshold`` has
@@ -20,17 +23,22 @@ messages per partition, so each edge still contributes exactly once.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .iohelpers import (
     fs_exists,
     is_remote,
     local_or_uri_abspath,
+    local_temp_dir,
     read_json,
     strip_file_scheme,
     write_json_atomic,
@@ -72,37 +80,30 @@ def unpack_block(bpdf) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
 
 @dataclass
 class GraphBlocks:
-    """Static per-partition topology + routing metadata.
-
-    Two physical representations:
-      * ``blocks`` DataFrame (cached, co-partitioned) — the cogroup path;
-        every superstep ships each active partition's CSR rows through
-        JVM -> Arrow -> Python.
-      * ``store_path`` — CSR rows laid out as ``partition_id=N/``
-        uncompressed Parquet; kernels read their own partition's block
-        DIRECTLY in the Python worker (page-cache-hot local read, or
-        shared FS / object store on a cluster).  The per-round JVM side
-        then only carries the frontier — measured: removes the
-        multi-GB-per-round cache scan + Arrow serialization that
-        dominated PageRank rounds at 316M edges, and inactive
-        partitions cost nothing (their groups never exist).
+    """Static per-partition topology + routing metadata: an opened block
+    store.  CSR rows are laid out as ``partition_id=N/`` uncompressed
+    Parquet under ``store_path``; kernels read their own partition's
+    block DIRECTLY in the Python worker (page-cache-hot local read, or
+    shared FS / object store on a cluster).  The per-round JVM side
+    only carries the frontier — measured: no multi-GB-per-round cache
+    scan + Arrow serialization of the topology at 316M edges, and
+    inactive partitions cost nothing (their groups never exist).
     """
 
-    blocks: DataFrame | None  # one row per partition: CSR arrays (cogroup mode)
     mirrors: DataFrame | None  # (id, partition_id) for salted hub vertices
     num_partitions: int
     salt_threshold: int | None
     weighted: bool
-    store_path: str | None = None
+    store_path: str
     # store sidecar with the graph's vertex census (id, out_deg):
     # algorithm init (vertex-set completion + degree aggregation) is a
     # full edge-table scan+distinct — at 316M edges ~20 min on 2 cores,
     # repeated by EVERY algorithm run.  The store writes it once.
     vertices_path: str | None = None
-    # edge count recorded at store build (None in cogroup mode): lets
-    # the engine size the kernel stage's physical width to the data —
-    # small graphs don't pay per-task python-runner overhead x P, big
-    # graphs keep one CSR block per task (engine._messages).
+    # edge count recorded at store build: lets the engine size the
+    # kernel stage's physical width to the data — small graphs don't
+    # pay per-task python-runner overhead x P, big graphs keep one CSR
+    # block per task (engine._messages).
     n_edges: int | None = None
     # vertex-census scalars recorded at store build (None when absent,
     # e.g. a store written by an older build): PageRank init reads
@@ -110,6 +111,10 @@ class GraphBlocks:
     # aggregation job per algorithm run.
     n_vertices: int | None = None
     n_dangling: int | None = None
+    # per-build id (None for stores written before it was recorded):
+    # keys the worker-side block caches, so a store rebuilt at the same
+    # path never serves the previous build's topology
+    build_id: str | None = None
 
     def route(self, frontier: DataFrame) -> DataFrame:
         """Attach ``partition_id`` to frontier rows [id, value...].
@@ -134,8 +139,6 @@ class GraphBlocks:
         ).drop("mirror_pid")
 
     def unpersist(self) -> None:
-        if self.blocks is not None:
-            self.blocks.unpersist()
         if self.mirrors is not None:
             self.mirrors.unpersist()
 
@@ -199,167 +202,46 @@ def block_edge_source_index(indptr: np.ndarray) -> np.ndarray:
     )
 
 
-def build_blocks(
-    spark: SparkSession,
-    edges: DataFrame,
-    num_partitions: int,
-    salt_threshold: int | None = None,
-    weighted: bool = False,
-) -> GraphBlocks:
-    """Partition + pack ``edges[src, dst(, weight)]`` into CSR blocks.
-
-    One shuffle (groupBy partition_id) builds the blocks; they are then
-    repartitioned on ``partition_id`` and persisted so every superstep's
-    cogroup reuses the cached partitioning instead of re-shuffling the
-    topology (the reference re-shuffles edges every superstep —
-    PartitionCentricIteration.java:96-97).
-    """
-    cols = ["src", "dst"] + (["weight"] if weighted else [])
-    edges = edges.select(*cols)
-
-    mirrors = None
-    if salt_threshold is not None and salt_threshold > 0:
-        degrees = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        hubs = degrees.filter(F.col("deg") > salt_threshold).withColumn(
-            "n_salt", F.ceil(F.col("deg") / F.lit(salt_threshold)).cast("int")
+def _assign_partitions(
+    edges: DataFrame, num_partitions: int, salt_threshold: int | None
+) -> tuple[DataFrame, DataFrame | None]:
+    """Tag every edge with its ``partition_id``; with ``salt_threshold``
+    also return the mirror map ``(id, mirror_pid)`` of the salted hubs."""
+    if salt_threshold is None or salt_threshold <= 0:
+        return (
+            edges.withColumn("partition_id", _pid_expr(F.col("src"), num_partitions)),
+            None,
         )
-        # Edges of hub srcs get a dst-derived salt; others salt 0 via plain hash.
-        e = edges.join(F.broadcast(hubs.select("src", "n_salt")), on="src", how="left")
-        salted_pid = _pid_expr(
-            F.col("src"), num_partitions, F.pmod(F.xxhash64(F.col("dst")), F.col("n_salt"))
-        )
-        e = e.withColumn(
-            "partition_id",
-            F.when(F.col("n_salt").isNotNull(), salted_pid).otherwise(
-                _pid_expr(F.col("src"), num_partitions)
-            ),
-        ).drop("n_salt")
-        mirrors = (
-            hubs.select(
-                F.col("src").alias("id"),
-                F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1)).alias("salt"),
-            )
-            .select(
-                "id",
-                _pid_expr(F.col("id"), num_partitions, F.col("salt")).alias("mirror_pid"),
-            )
-            .distinct()
-        )
-        mirrors.persist()
-        mirrors.count()
-    else:
-        e = edges.withColumn("partition_id", _pid_expr(F.col("src"), num_partitions))
-
-    blocks = (
-        e.groupBy("partition_id")
-        .applyInPandas(_build_csr, schema=BLOCK_SCHEMA)
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "partition_id"
-        )
-        # The per-superstep cogroup requires its inputs SORTED by the
-        # group key; caching the blocks pre-sorted makes the cached
-        # relation carry that ordering, so steady-state rounds skip the
-        # multi-GB Sort (measured: ~2-3 GB memory spill per round at
-        # 316M edges came from re-sorting the block cache every round).
-        .sortWithinPartitions("partition_id")
-        .persist()
+    degrees = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    hubs = degrees.filter(F.col("deg") > salt_threshold).withColumn(
+        "n_salt", F.ceil(F.col("deg") / F.lit(salt_threshold)).cast("int")
     )
-    blocks.count()  # materialize once; every superstep reads the cache
-    return GraphBlocks(
-        blocks=blocks,
-        mirrors=mirrors,
-        num_partitions=num_partitions,
-        salt_threshold=salt_threshold,
-        weighted=weighted,
+    # Edges of hub srcs get a dst-derived salt; others salt 0 via plain hash.
+    e = edges.join(F.broadcast(hubs.select("src", "n_salt")), on="src", how="left")
+    salted_pid = _pid_expr(
+        F.col("src"), num_partitions, F.pmod(F.xxhash64(F.col("dst")), F.col("n_salt"))
     )
-
-
-def save_blocks(blocks: GraphBlocks, path: str) -> None:
-    """Persist built CSR blocks (+ mirror map) to Parquet for reuse
-    across runs/algorithms — at scale the build (one full edge shuffle)
-    is amortized over every algorithm that runs on the graph."""
-    blocks.blocks.write.mode("overwrite").parquet(os.path.join(path, "blocks"))
-    meta = {
-        "num_partitions": blocks.num_partitions,
-        "salt_threshold": blocks.salt_threshold,
-        "weighted": blocks.weighted,
-        "has_mirrors": blocks.mirrors is not None,
-    }
-    if blocks.mirrors is not None:
-        blocks.mirrors.write.mode("overwrite").parquet(
-            os.path.join(path, "mirrors")
+    e = e.withColumn(
+        "partition_id",
+        F.when(F.col("n_salt").isNotNull(), salted_pid).otherwise(
+            _pid_expr(F.col("src"), num_partitions)
+        ),
+    ).drop("n_salt")
+    mirrors = (
+        hubs.select(
+            F.col("src").alias("id"),
+            F.explode(F.sequence(F.lit(0), F.col("n_salt") - 1)).alias("salt"),
         )
-    # Hadoop FS API: ``path`` may be hdfs:// / s3a:// / file:// / local
-    write_json_atomic(
-        blocks.blocks.sparkSession, os.path.join(path, "blocks_meta.json"), meta
-    )
-
-
-def load_blocks(spark: SparkSession, path: str) -> GraphBlocks:
-    """Load saved CSR blocks; repartition on partition_id + persist so
-    supersteps reuse the cached partitioning (no per-round shuffle)."""
-    meta = read_json(spark, os.path.join(path, "blocks_meta.json"))
-    blocks = (
-        spark.read.parquet(os.path.join(path, "blocks"))
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "partition_id"
+        .select(
+            "id",
+            _pid_expr(F.col("id"), num_partitions, F.col("salt")).alias("mirror_pid"),
         )
-        .sortWithinPartitions("partition_id")  # see build_blocks
-        .persist()
+        .distinct()
     )
-    blocks.count()
-    mirrors = None
-    if meta["has_mirrors"]:
-        mirrors = spark.read.parquet(os.path.join(path, "mirrors")).persist()
-        mirrors.count()
-    return GraphBlocks(
-        blocks=blocks,
-        mirrors=mirrors,
-        num_partitions=meta["num_partitions"],
-        salt_threshold=meta["salt_threshold"],
-        weighted=meta["weighted"],
-    )
+    return e, mirrors
 
 
 STORE_META = "store_meta.json"
-
-
-def save_block_store(
-    blocks: GraphBlocks, path: str, tag: str = "", n_edges: int | None = None,
-    extra_meta: dict | None = None,
-) -> None:
-    """Write CSR blocks as a BLOCK STORE: ``partition_id=N/`` directories
-    of uncompressed Parquet, readable per-partition by the Python
-    workers without touching the JVM.  Uncompressed on purpose — the
-    chunks are near-incompressible hash-ordered binary, and the per-
-    round read path should be a straight page-cache memcpy.
-
-    ``n_edges`` (the build-time content fingerprint) lands in the SAME
-    atomic meta write as everything else — the meta rename is the
-    store's commit marker, so there is no window where a committed
-    store exists whose fingerprint check silently no-ops."""
-    (
-        blocks.blocks.write.mode("overwrite")
-        .option("compression", "none")
-        .partitionBy("partition_id")
-        .parquet(os.path.join(path, "blocks"))
-    )
-    meta = {
-        "num_partitions": blocks.num_partitions,
-        "salt_threshold": blocks.salt_threshold,
-        "weighted": blocks.weighted,
-        "has_mirrors": blocks.mirrors is not None,
-        "tag": tag,
-    }
-    if n_edges is not None:
-        meta["n_edges"] = int(n_edges)
-    if extra_meta:
-        meta.update(extra_meta)
-    if blocks.mirrors is not None:
-        blocks.mirrors.write.mode("overwrite").parquet(os.path.join(path, "mirrors"))
-    write_json_atomic(
-        blocks.blocks.sparkSession, os.path.join(path, STORE_META), meta
-    )
 
 
 def ensure_block_store(
@@ -372,9 +254,8 @@ def ensure_block_store(
     tag: str = "",
     expected_edges: int | None = None,
 ) -> GraphBlocks:
-    """Open the block store at ``path``, building it from ``edges`` on
-    first use — the one-call plumbing that makes store mode reachable
-    from the algorithm APIs (``pagerank(..., store_dir=...)``).
+    """Open the block store at ``path``, building it from
+    ``edges[src, dst(, weight)]`` on first use.
 
     ``tag`` guards against reusing a store built from a DIFFERENT edge
     set (e.g. PageRank's directed edges vs CC's symmetrized ones): a
@@ -416,28 +297,52 @@ def ensure_block_store(
                 "since the store was built; delete the store_dir to rebuild"
             )
         return open_block_store(spark, path)
-    built = build_blocks(
-        spark, edges, num_partitions,
-        salt_threshold=salt_threshold, weighted=weighted,
-    )
-    if expected_edges is None:
-        expected_edges = edges.count()  # build-time fingerprint (one scan)
-    # vertex census sidecar: complete vertex set + out-degree, written
-    # once at build so algorithm init skips the edge-table scan.
-    # Written BEFORE the meta: the meta rename is the store's commit
-    # marker, so a crash anywhere in the build leaves no half-store that
-    # ensure_block_store would reopen.
-    deg_expr = F.sum("weight") if weighted else F.count("*")
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        deg_expr.cast("double").alias("out_deg")
-    )
-    (
-        vertex_ids(edges)
-        .join(out_deg, on="id", how="left")
-        .fillna(0.0, subset=["out_deg"])
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "vertices"))
-    )
+
+    # The edge plan may be an expensive derivation (a symmetrization's
+    # distinct, a join of source tables): it is cached for the build,
+    # whose blocks, mirror map and census all read it, and counted by
+    # an observation on the blocks write instead of a job of its own.
+    edges = edges.select("src", "dst", *(["weight"] if weighted else [])).persist()
+    try:
+        routed, mirrors = _assign_partitions(edges, num_partitions, salt_threshold)
+        counted = Observation("pcgraph_block_store_edges")
+        # One shuffle (groupBy partition_id) builds the blocks, written
+        # straight out: each partition's rows leave one task, so every
+        # ``partition_id=N/`` directory holds one file.  Uncompressed on
+        # purpose — the chunks are near-incompressible hash-ordered
+        # binary, and the per-round read path should be a straight
+        # page-cache memcpy.
+        (
+            routed.observe(counted, F.count(F.lit(1)).alias("n"))
+            .groupBy("partition_id")
+            .applyInPandas(_build_csr, schema=BLOCK_SCHEMA)
+            .write.mode("overwrite")
+            .option("compression", "none")
+            .partitionBy("partition_id")
+            .parquet(os.path.join(path, "blocks"))
+        )
+        if mirrors is not None:
+            mirrors.write.mode("overwrite").parquet(os.path.join(path, "mirrors"))
+        if expected_edges is None:
+            expected_edges = counted.get["n"]  # build-time fingerprint
+        # vertex census sidecar: complete vertex set + out-degree,
+        # written once at build so algorithm init skips the edge-table
+        # scan.  Written BEFORE the meta: the meta rename is the store's
+        # commit marker, so a crash anywhere in the build leaves no
+        # half-store that ensure_block_store would reopen.
+        deg_expr = F.sum("weight") if weighted else F.count("*")
+        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+            deg_expr.cast("double").alias("out_deg")
+        )
+        (
+            vertex_ids(edges)
+            .join(out_deg, on="id", how="left")
+            .fillna(0.0, subset=["out_deg"])
+            .write.mode("overwrite")
+            .parquet(os.path.join(path, "vertices"))
+        )
+    finally:
+        edges.unpersist()
     # census scalars land in the meta: algorithm init (PageRank's
     # n_vertices / dangling count) then needs no aggregation job at
     # all — build-time cost, amortized like the census itself
@@ -449,20 +354,27 @@ def ensure_block_store(
         )
         .collect()[0]
     )
-    save_block_store(
-        built, path, tag=tag, n_edges=int(expected_edges),
-        extra_meta={
-            "n_vertices": int(census["n"]),
-            "n_dangling": int(census["d"] or 0),
-        },
-    )
-    built.unpersist()
+    # The edge count (the content fingerprint) lands in the SAME atomic
+    # meta write as everything else: there is no window where a
+    # committed store exists whose fingerprint check silently no-ops.
+    write_json_atomic(spark, meta_path, {
+        "num_partitions": num_partitions,
+        "salt_threshold": salt_threshold,
+        "weighted": weighted,
+        "has_mirrors": mirrors is not None,
+        "tag": tag,
+        "n_edges": int(expected_edges),
+        "n_vertices": int(census["n"]),
+        "n_dangling": int(census["d"] or 0),
+        "build_id": uuid.uuid4().hex,
+    })
     return open_block_store(spark, path)
 
 
 def open_block_store(spark: SparkSession, path: str) -> GraphBlocks:
-    """Open a saved block store: no JVM-side cache at all — kernels read
-    their partition's rows directly (``read_store_block``)."""
+    """Open a saved block store: no JVM-side cache of the topology —
+    kernels read their partition's rows directly (``read_store_block``);
+    only the (tiny) mirror map is persisted, for the per-round route."""
     meta = read_json(spark, os.path.join(path, STORE_META))
     mirrors = None
     if meta["has_mirrors"]:
@@ -470,7 +382,6 @@ def open_block_store(spark: SparkSession, path: str) -> GraphBlocks:
         mirrors.count()
     vpath = os.path.join(path, "vertices")
     return GraphBlocks(
-        blocks=None,
         mirrors=mirrors,
         num_partitions=meta["num_partitions"],
         salt_threshold=meta["salt_threshold"],
@@ -492,7 +403,52 @@ def open_block_store(spark: SparkSession, path: str) -> GraphBlocks:
             if meta.get("n_dangling") is not None
             else None
         ),
+        build_id=meta.get("build_id"),
     )
+
+
+@contextmanager
+def graph_blocks(
+    spark: SparkSession,
+    edges: DataFrame,
+    num_partitions: int,
+    blocks: GraphBlocks | None = None,
+    store_dir: str | None = None,
+    salt_threshold: int | None = None,
+    weighted: bool = False,
+    tag: str = "",
+) -> Iterator[GraphBlocks]:
+    """Where an algorithm's topology comes from, for the duration of
+    the ``with`` block:
+
+      * caller-supplied ``blocks``: used as given (the caller owns them);
+      * a ``store_dir``: ``ensure_block_store`` there (built on first
+        use, reused afterwards);
+      * neither: a store built in a fresh local temp dir (local masters
+        only — a cluster needs a shared ``store_dir``), deleted on exit.
+
+    On exit — return or raise — a store opened here releases its
+    persisted mirror map, so no cached frame outlives the call."""
+    if blocks is not None:
+        yield blocks
+        return
+    tmp = None
+    if store_dir is None:
+        store_dir = tmp = local_temp_dir(
+            spark.sparkContext.master, "pcgraph_blocks_", "store_dir"
+        )
+    opened = None
+    try:
+        opened = ensure_block_store(
+            spark, edges, num_partitions, store_dir,
+            salt_threshold=salt_threshold, weighted=weighted, tag=tag,
+        )
+        yield opened
+    finally:
+        if opened is not None:
+            opened.unpersist()
+        if tmp is not None:
+            shutil.rmtree(tmp, ignore_errors=True)
 
 
 # Worker-local LRU for REMOTE block stores: on a cluster the store is a
@@ -500,9 +456,9 @@ def open_block_store(spark: SparkSession, path: str) -> GraphBlocks:
 # task re-fetches its partition's CSR bytes over the network.  Fetched
 # partitions land under ``PCGRAPH_BLOCK_CACHE`` (per-worker local disk)
 # with LRU eviction at ``PCGRAPH_BLOCK_CACHE_GB``.  Store blocks are
-# immutable once written (save_block_store writes a fresh directory), so
-# cache entries are keyed by store identity + partition — no per-access
-# remote validation round-trips.
+# immutable once written (a rebuild at the same path gets a new
+# build_id), so cache entries are keyed by store path + build id +
+# partition — no per-access remote validation round-trips.
 _CACHE_DIR_ENV = "PCGRAPH_BLOCK_CACHE"
 _CACHE_CAP_ENV = "PCGRAPH_BLOCK_CACHE_GB"
 
@@ -527,7 +483,6 @@ def _evict_lru(root: str, cap_bytes: int, protect: str | None = None) -> None:
     partition a concurrent task is about to read.  Best-effort beyond
     that; ``read_store_block`` re-fetches (bounded) if it loses a race.
     """
-    import shutil
     import time as _time
 
     now = _time.time()
@@ -558,15 +513,17 @@ def _evict_lru(root: str, cap_bytes: int, protect: str | None = None) -> None:
         total -= size
 
 
-def _fetch_remote_partition(store_path: str, partition_id: int) -> str:
+def _fetch_remote_partition(
+    store_path: str, partition_id: int, build_id: str | None = None
+) -> str:
     """Copy one partition's parquet files to the worker-local cache
     (atomic dir rename); returns the local directory."""
     import hashlib
-    import shutil
 
     from pyarrow import fs as pafs
 
-    key = hashlib.sha1(store_path.encode()).hexdigest()[:12]
+    ident = store_path if build_id is None else f"{store_path}#{build_id}"
+    key = hashlib.sha1(ident.encode()).hexdigest()[:12]
     root = _cache_root()
     pdir = os.path.join(root, key, f"partition_id={partition_id}")
     marker = os.path.join(pdir, "_complete")
@@ -611,17 +568,18 @@ def _fetch_remote_partition(store_path: str, partition_id: int) -> str:
     return pdir
 
 
-# In-process cache of store blocks for REUSED python workers: the
-# topology is immutable once written (save_block_store writes a fresh
-# directory and ensure_block_store refuses a store whose inputs
+# In-process cache of store blocks for REUSED python workers: a build
+# is immutable once written (a rebuild at the same path gets a new
+# build_id, and ensure_block_store refuses a store whose inputs
 # changed), yet every superstep's kernel re-reads and re-parses its
 # partition's parquet rows.  Reused workers keep this module alive, so
 # small stores (the whole sf0.1 topology is ~6 MB) are parsed once per
 # worker and every later round is a dict hit.  Budget-capped
 # (PCGRAPH_WORKER_BLOCK_CACHE_MB, default 64) so a 10^8-edge store's
-# multi-MB blocks never accumulate into worker RSS — past the budget,
-# reads behave exactly as before.
-_BLOCK_MEMCACHE: dict = {}
+# multi-MB blocks never accumulate into worker RSS: a new entry evicts
+# the oldest ones until it fits, and a block larger than the whole
+# budget is read uncached.
+_BLOCK_MEMCACHE: dict = {}  # key -> (frame, bytes), oldest first
 _BLOCK_MEMCACHE_BYTES = [0]
 _BLOCK_MEMCACHE_ENV = "PCGRAPH_WORKER_BLOCK_CACHE_MB"
 
@@ -629,28 +587,35 @@ _BLOCK_MEMCACHE_ENV = "PCGRAPH_WORKER_BLOCK_CACHE_MB"
 def _memcache_put(key, df: pd.DataFrame) -> None:
     budget = int(float(os.environ.get(_BLOCK_MEMCACHE_ENV, "64")) * (1 << 20))
     size = int(df["data"].map(len).sum()) + 1024 if len(df) else 1024
-    if _BLOCK_MEMCACHE_BYTES[0] + size <= budget:
-        _BLOCK_MEMCACHE[key] = df
-        _BLOCK_MEMCACHE_BYTES[0] += size
+    if size > budget:
+        return
+    while _BLOCK_MEMCACHE_BYTES[0] + size > budget:
+        _, old = _BLOCK_MEMCACHE.pop(next(iter(_BLOCK_MEMCACHE)))
+        _BLOCK_MEMCACHE_BYTES[0] -= old
+    _BLOCK_MEMCACHE[key] = (df, size)
+    _BLOCK_MEMCACHE_BYTES[0] += size
 
 
-def read_store_block(store_path: str, partition_id: int) -> pd.DataFrame:
-    """Worker-side block read: one partition's CSR chunk rows as the
-    same (chunk, col, data) frame the cogroup path delivers.  Local
-    stores read directly (page-cache-hot after round 1); remote stores
-    (hdfs:// / s3a:// / ...) go through the worker-local LRU cache.
-    Parsed frames are additionally memoized in-process (budget-capped,
-    see _BLOCK_MEMCACHE) because reused workers serve the same
-    immutable store every superstep."""
+def read_store_block(
+    store_path: str, partition_id: int, build_id: str | None = None
+) -> pd.DataFrame:
+    """Worker-side block read: one partition's CSR chunk rows as a
+    (chunk, col, data) frame.  Local stores read directly (page-cache-
+    hot after round 1); remote stores (hdfs:// / s3a:// / ...) go
+    through the worker-local LRU cache.  Parsed frames are additionally
+    memoized in-process (budget-capped, see _BLOCK_MEMCACHE) because
+    reused workers serve the same immutable build every superstep;
+    ``build_id`` (GraphBlocks.build_id) keeps a store rebuilt at the
+    same path from hitting the old build's entries."""
     import glob as _glob
 
     import pyarrow as _pa
     import pyarrow.parquet as _pq
 
-    mkey = (store_path, int(partition_id))
+    mkey = (store_path, build_id, int(partition_id))
     cached = _BLOCK_MEMCACHE.get(mkey)
     if cached is not None:
-        return cached
+        return cached[0]
 
     empty = pd.DataFrame(
         {"chunk": pd.Series(dtype="int32"), "col": pd.Series(dtype="object"),
@@ -680,7 +645,7 @@ def read_store_block(store_path: str, partition_id: int) -> pd.DataFrame:
     # rather than silently treating the partition as edgeless.
     last_err: Exception | None = None
     for _attempt in range(3):
-        part_dir = _fetch_remote_partition(store_path, partition_id)
+        part_dir = _fetch_remote_partition(store_path, partition_id, build_id)
         files = sorted(_glob.glob(os.path.join(part_dir, "*.parquet")))
         if not os.path.exists(os.path.join(part_dir, "_complete")):
             continue  # evicted between fetch and glob — re-fetch

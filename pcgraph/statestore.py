@@ -56,20 +56,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .iohelpers import fs_delete, fs_list_dirs
+from .iohelpers import fs_delete, fs_list_dirs, local_temp_dir
 
 
-def default_state_dir(checkpoint_dir: str | None, algo: str) -> str:
+def default_state_dir(
+    spark: SparkSession, checkpoint_dir: str | None, algo: str
+) -> str:
     """Where an algorithm's incremental state lives by default: inside
     the checkpoint dir (shared-FS by the resume contract, and where
-    ``engine.resume`` looks for it), else a fresh local temp dir —
-    correct in local mode; a cluster run without checkpointing must
-    pass an explicit shared-FS ``state_store_dir``."""
+    ``engine.resume`` looks for it), else a fresh local temp dir — local
+    mode only; any other master must pass ``state_store_dir``."""
     if checkpoint_dir is not None:
         return os.path.join(checkpoint_dir, "statestore")
-    import tempfile
-
-    return tempfile.mkdtemp(prefix=f"pcgraph_{algo}_state_")
+    return local_temp_dir(
+        spark.sparkContext.master, f"pcgraph_{algo}_state_", "state_store_dir"
+    )
 
 
 class DeltaStateStore:

@@ -23,12 +23,11 @@ sys.path.insert(0, REPO)
 
 def child(
     cores: int, edges_path: str, max_iter: int, partitions: int,
-    use_store: bool = False, no_aqe: bool = False,
-    shuffle_partitions: int | None = None,
+    no_aqe: bool = False, shuffle_partitions: int | None = None,
 ) -> None:
     from pcgraph.algos.pagerank import pagerank
     from pcgraph.metrics import HostCpuSampler, StageMetricsSampler
-    from pcgraph.partition import load_blocks, open_block_store
+    from pcgraph.partition import open_block_store
     from pcgraph.session import get_spark
 
     conf = {"spark.ui.enabled": "true"}  # REST API for the breakdown
@@ -49,15 +48,9 @@ def child(
     )
     edges = spark.read.parquet(edges_path)
     n_edges = edges.count()
-    # blocks pre-built once by the parent (fixed partition count across
-    # both runs, BASELINE.md protocol); children only run the loop
-    if use_store:
-        blocks = open_block_store(spark, edges_path + f".store{partitions}")
-    else:
-        blocks_path = edges_path + f".blocks{partitions}"
-        blocks = load_blocks(spark, blocks_path) if os.path.exists(
-            os.path.join(blocks_path, "blocks_meta.json")
-        ) else None
+    # block store pre-built once by the parent (fixed partition count
+    # across both runs, BASELINE.md protocol); children only run the loop
+    blocks = open_block_store(spark, edges_path + f".store{partitions}")
 
     # Per-round CPU-vs-I/O breakdown (BENCH/BASELINE.md round-2 plan):
     # executorCpuTime is the scalable fraction; runTime - cpu - gc is
@@ -127,7 +120,7 @@ def child(
 
 def run_child(
     cores: int, edges_path: str, max_iter: int, partitions: int,
-    use_store: bool = False, no_aqe: bool = True, pin_cpus: bool = False,
+    no_aqe: bool = True, pin_cpus: bool = False,
     shuffle_partitions: int | None = None,
 ) -> dict:
     # pin_cpus: confine the WHOLE child (JVM executor threads AND the
@@ -146,7 +139,6 @@ def run_child(
             "--max-iter", str(max_iter),
             "--partitions", str(partitions),
         ]
-        + (["--store"] if use_store else [])
         + (["--no-aqe"] if no_aqe else [])
         + (
             ["--shuffle-partitions", str(shuffle_partitions)]
@@ -173,9 +165,6 @@ def main() -> None:
     ap.add_argument("--high", type=int, default=32)
     ap.add_argument("--max-iter", type=int, default=12)
     ap.add_argument("--partitions", type=int, default=128)
-    ap.add_argument("--store", action="store_true",
-                    help="block-store mode: kernels read per-partition "
-                         "parquet directly (no JVM block cache)")
     ap.add_argument("--no-aqe", action="store_true",
                     help="(child only) disable AQE for the session; "
                          "children ALWAYS run AQE-off — the loop refixes "
@@ -202,7 +191,7 @@ def main() -> None:
 
     if args.child is not None:
         child(args.child, args.edges, args.max_iter, args.partitions,
-              use_store=args.store, no_aqe=args.no_aqe,
+              no_aqe=args.no_aqe,
               shuffle_partitions=args.shuffle_partitions)
         return
 
@@ -218,9 +207,9 @@ def main() -> None:
         ).parquet(args.edges)
         spark.stop()
 
-    blocks_path = args.edges + f".blocks{args.partitions}"
-    if not os.path.exists(os.path.join(blocks_path, "blocks_meta.json")):
-        from pcgraph.partition import build_blocks, save_blocks
+    store_path = args.edges + f".store{args.partitions}"
+    if not os.path.exists(os.path.join(store_path, "store_meta.json")):
+        from pcgraph.partition import ensure_block_store
         from pcgraph.session import get_spark
 
         # G1 for the one-off build: handles the large-heap churn of the
@@ -234,25 +223,11 @@ def main() -> None:
                 "spark.driver.extraJavaOptions": "-XX:+UseG1GC -XX:G1HeapRegionSize=32m"
             },
         )
-        blocks = build_blocks(
-            spark, spark.read.parquet(args.edges), args.partitions
+        ensure_block_store(
+            spark, spark.read.parquet(args.edges), args.partitions,
+            store_path, tag="directed",
         )
-        save_blocks(blocks, blocks_path)
         spark.stop()
-
-    if args.store:
-        store_path = args.edges + f".store{args.partitions}"
-        if not os.path.exists(os.path.join(store_path, "store_meta.json")):
-            # one-time: materialize the store from the cached-block sidecar
-            from pcgraph.partition import load_blocks, save_block_store
-            from pcgraph.session import get_spark
-
-            spark = get_spark(app_name="store-prep", cores=32, shuffle_partitions=64)
-            save_block_store(
-                load_blocks(spark, args.edges + f".blocks{args.partitions}"),
-                store_path,
-            )
-            spark.stop()
 
     factor = args.high / args.low
 
@@ -282,10 +257,10 @@ def main() -> None:
     pairs = []
     for i in range(max(1, args.pairs)):
         low = run_child(args.low, args.edges, args.max_iter, args.partitions,
-                        args.store, pin_cpus=args.pin_cpus,
+                        pin_cpus=args.pin_cpus,
                         shuffle_partitions=args.shuffle_partitions)
         high = run_child(args.high, args.edges, args.max_iter, args.partitions,
-                         args.store, pin_cpus=args.pin_cpus,
+                         pin_cpus=args.pin_cpus,
                          shuffle_partitions=args.shuffle_partitions)
         rep = pair_report(low, high)
         rep["pair"] = i
@@ -307,7 +282,7 @@ def main() -> None:
     report["headline"] = "median_pair"
     report["protocol"] = {
         "pinned": args.pin_cpus,
-        "store_mode": args.store,
+        "store_mode": True,
         "shuffle_partitions": args.shuffle_partitions or "per-child cores",
         "pairs": args.pairs,
     }

@@ -1,6 +1,6 @@
 """Round-2 engine features: superstep-aware kernels + lifecycle hooks,
-strict missing-vertex mode, fold="sum" convergence semantics, and block
-prefiltering on sparse frontiers."""
+strict missing-vertex mode, fold="sum" convergence semantics, sparse
+frontiers, and the pinned per-round job counts and kernel entry."""
 
 import numpy as np
 import pandas as pd
@@ -185,19 +185,17 @@ def test_fold_sum_with_tol_converges(spark):
     assert all(abs(v - 1.9375) < 1e-12 for v in got.values())
 
 
-def test_prefilter_blocks_records_active_partitions(spark):
-    """CC with prefiltering stays correct and reports the per-round
-    active partition count (sparse tail rounds touch fewer blocks)."""
+def test_sparse_frontier_cc_stays_correct(spark):
+    """CC stays correct while its frontier collapses to a few
+    partitions (sparse tail rounds run no kernel for the others)."""
     from pcgraph.algos.cc import connected_components
 
     pdf = fixtures.odd_even_graph(n=200)
-    result, history = connected_components(
+    result, _ = connected_components(
         spark, fixtures.to_spark_edges(spark, pdf), num_partitions=8
     )
     comps = {r["id"]: r["component"] for r in result.collect()}
     assert all(c == (1 if v % 2 else 2) for v, c in comps.items())
-    assert all("active_partitions" in m for m in history)
-    assert history[0]["active_partitions"] == 8
 
 
 def _jobs_per_round(spark, call) -> dict[int, int]:
@@ -226,11 +224,10 @@ def _jobs_per_round(spark, call) -> dict[int, int]:
 
 def test_steady_round_job_counts_are_pinned(spark, tmp_path):
     """The work a steady superstep does, counted in Spark jobs: one job
-    per PageRank round (the state checkpoint), and seven per delta-store
-    CC round (block prefilter, kernel-running fold count, active-bucket
-    collect, delta write and the store's parquet listings/reads).  A
-    change to the round driver that adds an action per round fails
-    here."""
+    per PageRank round (the state checkpoint), and six per delta-store
+    CC round (kernel-running fold count, active-bucket collect, delta
+    write and the store's parquet listings/reads).  A change to the
+    round driver that adds an action per round fails here."""
     from pcgraph.algos.cc import connected_components
     from pcgraph.algos.pagerank import pagerank
 
@@ -251,7 +248,31 @@ def test_steady_round_job_counts_are_pinned(spark, tmp_path):
         ),
     )
     assert len(cc) > 3, cc
-    assert cc[2] == cc[3] == 7, cc
+    assert cc[2] == cc[3] == 6, cc
+
+
+def test_kernel_stage_takes_cached_udf_path(spark, tmp_path, monkeypatch):
+    """The kernel stage runs through the cached pandas UDF applied at
+    ``flatMapGroupsInPandas`` — with the public ``applyInPandas``
+    refusing, a PageRank round still runs (there is no fallback)."""
+    from pyspark.sql.group import GroupedData
+
+    from pcgraph.algos.pagerank import pagerank
+    from pcgraph.partition import ensure_block_store
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
+    # built before the patch: the store build is a grouped map itself
+    blocks = ensure_block_store(
+        spark, edges, 4, str(tmp_path / "blocks"), tag="directed"
+    )
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("kernel stage took GroupedData.applyInPandas")
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", refuse)
+    result, history = pagerank(spark, edges, max_iter=1, blocks=blocks)
+    assert len(history) == 1
+    assert result.count() == 40
 
 
 @pytest.mark.parametrize("backend", ["memory", "delta"])
@@ -260,10 +281,10 @@ def test_failed_round_releases_persisted_frames(spark, tmp_path, backend):
     round-scoped persisted frames or state checkpoints behind in the
     caller's session."""
     from pcgraph.engine import PCEngine
-    from pcgraph.partition import build_blocks
+    from pcgraph.partition import ensure_block_store
 
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
-    blocks = build_blocks(spark, edges, 4)
+    blocks = ensure_block_store(spark, edges, 4, str(tmp_path / "blocks"))
     vset = spark.createDataFrame([(i,) for i in range(0, 40, 2)], "id long")
     state = vset.select(
         "id", F.col("id").alias("value"), F.lit(True).alias("changed")

@@ -131,13 +131,12 @@ def test_checkpoint_resume_file_uri(spark, tmp_path):
 
 def test_block_store_file_uri_and_meta(spark, tmp_path):
     from pcgraph.algos.cc import symmetrize
-    from pcgraph.partition import build_blocks, open_block_store, save_block_store
+    from pcgraph.partition import ensure_block_store, open_block_store
 
     pdf = fixtures.odd_even_graph(n=60)
     sym = symmetrize(fixtures.to_spark_edges(spark, pdf))
-    blocks = build_blocks(spark, sym, 4)
     uri = "file://" + str(tmp_path / "store_uri")
-    save_block_store(blocks, uri, tag="sym")
+    ensure_block_store(spark, sym, 4, uri, tag="sym")
     store = open_block_store(spark, uri)
     assert store.num_partitions == 4
     # file:// store reads through the local fast path (no cache copy)
@@ -155,16 +154,14 @@ def test_remote_store_lru_cache(spark, tmp_path, monkeypatch):
     from pcgraph.algos.cc import symmetrize
     from pcgraph.partition import (
         _fetch_remote_partition,
-        build_blocks,
+        ensure_block_store,
         read_store_block,
-        save_block_store,
     )
 
     pdf = fixtures.odd_even_graph(n=60)
     sym = symmetrize(fixtures.to_spark_edges(spark, pdf))
-    blocks = build_blocks(spark, sym, 4)
     path = str(tmp_path / "remote_store")
-    save_block_store(blocks, path)
+    ensure_block_store(spark, sym, 4, path)
 
     cache = str(tmp_path / "block_cache")
     monkeypatch.setenv("PCGRAPH_BLOCK_CACHE", cache)
@@ -194,8 +191,8 @@ def test_remote_store_lru_cache(spark, tmp_path, monkeypatch):
 # --------------------------------------------- store_dir public API
 def test_store_dir_plumbing_salted_equivalence(spark, tmp_path):
     """pagerank()/connected_components() with store_dir= on a SALTED
-    skew graph match the cogroup-mode results exactly (verdict ask:
-    store mode reachable from the algorithm APIs, salted equivalence
+    skew graph match the default-args (temp store) results exactly
+    (store mode reachable from the algorithm APIs, salted equivalence
     through the public surface)."""
     from pcgraph.algos.cc import connected_components
     from pcgraph.algos.pagerank import pagerank

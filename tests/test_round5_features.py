@@ -58,10 +58,10 @@ def test_strict_delta_still_raises_on_unknown_target(spark, tmp_path):
     """The reference-parity error survives the pruned anti-join: a
     kernel message to an id absent from the vertex set raises."""
     from pcgraph.engine import PCEngine
-    from pcgraph.partition import build_blocks
+    from pcgraph.partition import ensure_block_store
 
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
-    blocks = build_blocks(spark, edges, 4)
+    blocks = ensure_block_store(spark, edges, 4, str(tmp_path / "blocks"))
     vset = spark.createDataFrame([(i,) for i in range(0, 40, 2)], "id long")
     state = vset.select(
         "id", F.col("id").alias("value"), F.lit(True).alias("changed")
