@@ -5,14 +5,25 @@ bounded key (content hash, band key, shingle) with map-side partial
 aggregation; no driver-side collection, no per-row Python.  MinHash uses
 portable string-min over sha2 hex digests so the same signature is
 computable in any engine (our DuckDB oracles reproduce it verbatim).
+
+SimHash is map-only: the JVM splits each text and hashes every token,
+and one numpy kernel per Arrow batch (``mapInArrow``, at the scan's
+width) turns the token hashes into 64 bit votes and sums them per
+document.  Its working memory is bounded by the Arrow batch — one uint8
+per (token, bit) and int32 sums per document — and null text gives a
+null SimHash through the Arrow validity mask.
 """
 
 from __future__ import annotations
 
 import logging
+from typing import Iterator
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 log = logging.getLogger("pcgraph.dedup")
 
@@ -245,103 +256,197 @@ def near_duplicates(
     tune the LSH S-curve — the 4/2 default is the cheap oracle-parity
     config; 64-128 perms with 16-32 bands is the recall-grade
     configuration.
+
+    The pipeline runs inside the call: the result is a local checkpoint
+    of the thresholded pairs, and no persisted intermediate is left in
+    the session.
     """
     # The distinct shingle set is referenced four times downstream (the
     # signature branch and three jaccard/size branches); without a cache
     # each reference re-runs the explode+distinct subtree — the plan's
     # identical exchanges are NOT reused across the band self-join's two
     # sides in practice (measured: two full duplicate shingle stages per
-    # run).  The persist is filled by the caller's single action and is
-    # |distinct shingles|-bounded; it also means the signature min-hash
+    # run).  The persist is |distinct shingles|-bounded and released
+    # before returning; it also means the signature min-hash
     # hashes each distinct shingle once instead of every raw occurrence.
     sh = word_shingles(docs, k=k, id_col=id_col, text_col=text_col).persist()
-    # Fill the cache NOW: the downstream branches run as parallel stages
-    # of one job, and a not-yet-filled cache is computed by every branch
-    # that reaches it concurrently (measured: two full duplicate shingle
-    # stages per run without this).  One narrow count over the cached
-    # partitions is far cheaper than the duplicated explode+distinct.
-    sh.count()
-    sigs = minhash_signatures(sh, seeds=make_seeds(n_perms))
-    cands = lsh_candidate_pairs(sigs, n_bands=n_bands, max_bucket=max_bucket)
-    jac = jaccard_similarity(sh, cands)
-    return jac.filter(F.col("jaccard") >= threshold)
+    try:
+        # Fill the cache NOW: the downstream branches run as parallel
+        # stages of one job, and a not-yet-filled cache is computed by
+        # every branch that reaches it concurrently (measured: two full
+        # duplicate shingle stages per run without this).  One narrow
+        # count over the cached partitions is far cheaper than the
+        # duplicated explode+distinct.
+        sh.count()
+        sigs = minhash_signatures(sh, seeds=make_seeds(n_perms))
+        cands = lsh_candidate_pairs(sigs, n_bands=n_bands, max_bucket=max_bucket)
+        jac = jaccard_similarity(sh, cands)
+        # Materialize the |pairs|-bounded result so the shingle cache can
+        # be released before returning (the lsh_candidate_pairs
+        # pattern); the checkpoint blocks are freed when the result is
+        # gc'd.
+        return jac.filter(F.col("jaccard") >= threshold).localCheckpoint(eager=True)
+    finally:
+        sh.unpersist()
 
 
-def _simhash_votes(tok_hash_array, bits_of_hash):
-    """Fold an array of per-token hashes into 64 bit-votes, entirely
-    inside ONE row (aggregate + zip_with): no explode, no row
-    amplification — the naive (doc, bit) explode is a 64x shuffle blowup
-    at corpus scale.  ``bits_of_hash(h) -> array<int>[64]`` maps one
-    token hash to its +/-1 votes."""
-    return F.aggregate(
-        tok_hash_array,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, h: F.zip_with(acc, bits_of_hash(h), lambda a, b: a + b),
-    )
+# --------------------------------------------------------------- SimHash
+# The batch kernels are module-level so the workers import them by
+# reference (see the module docstring for the split of work).
+
+
+def _token_bits(hashes: pa.ListArray) -> np.ndarray:
+    """The 64 vote bits of every token in one batch column, as
+    ``uint8[n_tokens, 64]``, read in place from the Arrow buffers.  Rows
+    are the tokens ``hashes.offsets[0]:hashes.offsets[-1]`` of the child
+    array: the list offsets honour the batch's slice offset, and the
+    child's own offset is applied here.
+
+    Token bit j is: xxhash64 (long tokens) — ``(h >> j) & 1``; portable
+    (32-byte sha256 tokens) — hex digit j is odd, where digit 2i is the
+    high nibble of byte i, 2i+1 the low one, and a nibble is odd when its
+    lowest bit is set.
+    """
+    offsets = hashes.offsets.to_numpy()
+    first, last = int(offsets[0]), int(offsets[-1])
+    values = hashes.values
+    if first == last:  # no tokens: the child buffers may be absent
+        return np.empty((0, 64), dtype=np.uint8)
+    if pa.types.is_integer(values.type):
+        raw = values.to_numpy()[first:last].astype("<i8", copy=False)
+        return np.unpackbits(raw.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+    off_type = np.int64 if pa.types.is_large_binary(values.type) else np.int32
+    _, off_buf, data_buf = values.buffers()
+    voff = np.frombuffer(off_buf, dtype=off_type)[values.offset :]
+    start, end = int(voff[first]), int(voff[last])
+    if end - start != 32 * (last - first):
+        raise ValueError("sha256 token hashes must be 32 bytes each")
+    raw = np.frombuffer(data_buf, dtype=np.uint8)[start:end].reshape(-1, 32)
+    bits = np.empty((len(raw), 64), dtype=np.uint8)
+    high = bits[:, 0::2]
+    np.right_shift(raw, 4, out=high)
+    np.bitwise_and(high, 1, out=high)
+    np.bitwise_and(raw, 1, out=bits[:, 1::2])
+    return bits
+
+
+def _simhash_bits(hashes: pa.ListArray) -> np.ndarray:
+    """SimHash of every document in one batch: ``bool[n_docs, 64]``, bit
+    j set when the +/-1 votes of the document's tokens on bit j sum to
+    >= 0 (an empty or null token list votes 0, so every bit is set).
+    Working memory is one uint8 per (token, bit) plus int32 sums per
+    document.
+    """
+    bits = _token_bits(hashes)
+    offsets = hashes.offsets.to_numpy()
+    lengths = np.diff(offsets)
+    # Segmented sum of set bits per document.  reduceat over the
+    # non-empty segments only: an empty segment would otherwise return
+    # the row at its start index instead of 0.
+    ones = np.zeros((len(lengths), 64), dtype=np.int32)
+    full = lengths > 0
+    if full.any():
+        starts = offsets[:-1][full] - offsets[0]
+        ones[full] = np.add.reduceat(bits, starts, axis=0, dtype=np.int32)
+    # votes_j = ones_j - (n - ones_j) >= 0
+    return 2 * ones >= lengths[:, None]
+
+
+def _validity(hashes: pa.ListArray) -> pa.Buffer | None:
+    """Validity bitmap of the output: a null token list (null text)
+    gives a null SimHash."""
+    if hashes.null_count == 0:
+        return None
+    valid = hashes.is_valid().to_numpy(zero_copy_only=False)
+    return pa.py_buffer(np.packbits(valid, bitorder="little"))
+
+
+def _simhash_portable_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: (id, list<binary sha256>) -> (id, 64-char
+    '0'/'1' string)."""
+    from ..workerenv import optimize_worker
+
+    optimize_worker()
+    for batch in batches:
+        hashes = batch.column(1)
+        n = len(hashes)
+        chars = _simhash_bits(hashes).view(np.uint8) + np.uint8(ord("0"))
+        sim = pa.Array.from_buffers(
+            pa.string(),
+            n,
+            [
+                _validity(hashes),
+                pa.py_buffer(np.arange(0, 64 * (n + 1), 64, dtype=np.int32)),
+                pa.py_buffer(chars),
+            ],
+            null_count=hashes.null_count,
+        )
+        yield pa.RecordBatch.from_arrays([batch.column(0), sim], names=["id", "simhash"])
+
+
+def _simhash64_batches(
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: (id, list<long xxhash64>) -> (id, long), bit
+    63 of the SimHash being the sign bit."""
+    from ..workerenv import optimize_worker
+
+    optimize_worker()
+    for batch in batches:
+        hashes = batch.column(1)
+        packed = np.packbits(_simhash_bits(hashes), axis=1, bitorder="little")
+        sim = pa.Array.from_buffers(
+            pa.int64(),
+            len(hashes),
+            [_validity(hashes), pa.py_buffer(packed)],
+            null_count=hashes.null_count,
+        )
+        yield pa.RecordBatch.from_arrays([batch.column(0), sim], names=["id", "simhash"])
+
+
+def _simhash(docs, id_col, text_col, token_hash, kernel, out_type) -> DataFrame:
+    """Split and hash the tokens in the JVM, then run ``kernel`` over
+    the Arrow batches of (id, token hashes)."""
+    hashes = F.transform(F.split(F.col(text_col), " "), token_hash)
+    pre = docs.select(F.col(id_col).alias("id"), hashes.alias("hashes"))
+    schema = StructType([pre.schema["id"], StructField("simhash", out_type)])
+    return pre.mapInArrow(kernel, schema)
 
 
 def simhash64(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """64-bit SimHash over word tokens, fully JVM-side (fast path).
+    """64-bit SimHash over word tokens: DataFrame[id, simhash long].
 
-    Per doc: for each of 64 bit positions, sum +/-1 over token xxhash64
-    bits; bit j of the simhash = (sum_j >= 0).  One aggregate expression
-    per document — no explode, no per-row Python.  Hamming-close
+    Per doc: for each of 64 bit positions, sum +/-1 over the bits of the
+    tokens' ``xxhash64``; bit j of the simhash = (sum_j >= 0), bit 63
+    being the sign bit.  The JVM splits and hashes; one numpy kernel per
+    Arrow batch (``mapInArrow``, at the scan's width) derives and sums
+    the votes — no explode, no per-row Python.  Working memory is
+    bounded by the Arrow batch: one uint8 per (token, bit) and int32
+    sums per document.  Null text gives a null simhash.  Hamming-close
     simhashes = near-duplicate candidates."""
-    toks = F.split(F.col(text_col), " ")
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def bits(h):
-        return F.array(
-            *[
-                F.shiftright(h, j).bitwiseAND(F.lit(1)).cast("int") * 2 - 1
-                for j in range(64)
-            ]
-        )
-
-    votes = _simhash_votes(hashes, bits)
-    # 2^j as literals (j=63 is the sign bit: -2^63 in two's complement,
-    # matching shiftleft(1L, 63) wrap semantics)
-    powers = F.array(
-        *[
-            F.lit((1 << j) if j < 63 else -(1 << 63)).cast("long")
-            for j in range(64)
-        ]
+    return _simhash(
+        docs, id_col, text_col, lambda t: F.xxhash64(t), _simhash64_batches, LongType()
     )
-    sim = F.aggregate(
-        F.zip_with(
-            votes,
-            powers,
-            lambda s, p: F.when(s >= 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return docs.select(F.col(id_col).alias("id"), sim.alias("simhash"))
 
 
 def simhash_portable(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """64-bit SimHash with engine-portable hashing: bit j of a token =
-    parity of hex digit j of sha256(token), result emitted as a 64-char
-    '0'/'1' string (no 2^63 signed overflow, reproducible verbatim in
-    DuckDB/any ANSI engine — the correctness-oracle variant of
-    ``simhash64``).  Same no-explode aggregate formulation."""
-    toks = F.split(F.col(text_col), " ")
-    hashes = F.transform(toks, lambda t: F.sha2(t, 256))
+    """64-bit SimHash with engine-portable hashing: DataFrame[id,
+    simhash string].
 
-    def bits(h):
-        return F.array(
-            *[
-                (F.conv(F.substring(h, j + 1, 1), 16, 10).cast("int") % 2) * 2 - 1
-                for j in range(64)
-            ]
-        )
-
-    votes = _simhash_votes(hashes, bits)
-    sim = F.array_join(
-        F.transform(votes, lambda s: F.when(s >= 0, "1").otherwise("0")), ""
+    Bit j of a token = parity of hex digit j of sha256(token); the result
+    is a 64-char '0'/'1' string (no 2^63 signed overflow, reproducible
+    verbatim in DuckDB/any ANSI engine — the correctness-oracle variant
+    of ``simhash64``).  The JVM ships each token's sha256 as 32 raw bytes
+    (``unhex(sha2(t, 256))``); the same Arrow batch kernel as
+    ``simhash64`` sums the votes, with the same memory bound and null
+    rule."""
+    return _simhash(
+        docs, id_col, text_col,
+        lambda t: F.unhex(F.sha2(t, 256)), _simhash_portable_batches, StringType(),
     )
-    return docs.select(F.col(id_col).alias("id"), sim.alias("simhash"))

@@ -167,7 +167,8 @@ def main():
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
         def run():
-            return simhash_portable(docs).count()
+            # count the column: a bare .count() prunes it to a scan
+            return simhash_portable(docs).agg(F.count("simhash")).collect()
 
     elif query == "knn":
         emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))

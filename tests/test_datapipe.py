@@ -1,3 +1,5 @@
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -96,6 +98,148 @@ def test_simhash_properties(docs):
 
     h = pdf["simhash"]
     assert ham(h[0], h[1]) < ham(h[0], h[3])
+
+
+# Exact SimHash values.  The inputs cover null text, the empty string,
+# runs of spaces (empty tokens), a single token, two tokens (tied votes,
+# which set the bit) and a long document; two records per Arrow batch
+# make the kernel see several batches.
+SIMHASH_TEXTS = [
+    None,
+    "",
+    "a  b   c ",
+    "single",
+    "alpha beta",
+    "the quick brown fox jumps over the lazy dog",
+    " ".join(f"w{i % 977}" for i in range(5000)),
+]
+
+
+@pytest.fixture
+def simhash_docs(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        yield spark.createDataFrame(
+            list(enumerate(SIMHASH_TEXTS)), schema="doc_id int, text string"
+        )
+    finally:
+        spark.conf.set(key, old)
+
+
+def _reference_votes(token_bits):
+    """Sum of +/-1 votes over tokens, each token given as 64 bits."""
+    votes = np.zeros(64, dtype=np.int64)
+    for bits in token_bits:
+        votes += 2 * np.asarray(bits, dtype=np.int64) - 1
+    return votes
+
+
+def _portable_reference(text):
+    """hashlib reference: bit j of a token = hex digit j of sha256 odd;
+    bit j of the simhash = (vote sum >= 0)."""
+    if text is None:
+        return None, None
+    votes = _reference_votes(
+        [int(c, 16) % 2 for c in hashlib.sha256(t.encode()).hexdigest()]
+        for t in text.split(" ")
+    )
+    return "".join("1" if v >= 0 else "0" for v in votes), votes
+
+
+def _simhash64_reference(hashes):
+    votes = _reference_votes([(h >> j) & 1 for j in range(64)] for h in hashes)
+    want = sum(1 << j for j in range(64) if votes[j] >= 0)
+    return want - (1 << 64 if want >> 63 else 0)
+
+
+def test_simhash_portable_exact_values(simhash_docs):
+    out = simhash_portable(simhash_docs)
+    assert dict(out.dtypes) == {"id": "int", "simhash": "string"}
+    got = dict(out.collect())
+    assert sorted(got) == list(range(len(SIMHASH_TEXTS)))
+    for i, text in enumerate(SIMHASH_TEXTS):
+        want, _ = _portable_reference(text)
+        assert got[i] == want, (i, text and text[:40])
+    _, tied = _portable_reference("alpha beta")
+    assert (tied == 0).any()  # the tie case is really exercised
+
+
+def test_simhash64_exact_values(simhash_docs):
+    """Reference from Spark's own per-token xxhash64 (collected) plus
+    Python bit votes; bit 63 is the sign bit of the long."""
+    docs = simhash_docs.withColumn("doc_id", F.col("doc_id").cast("long"))
+    token_hashes = dict(
+        docs.select(
+            "doc_id",
+            F.transform(F.split("text", " "), lambda t: F.xxhash64(t)),
+        ).collect()
+    )
+    out = simhash64(docs)
+    assert dict(out.dtypes) == {"id": "bigint", "simhash": "bigint"}
+    got = dict(out.collect())
+    for i, hashes in token_hashes.items():
+        if hashes is None:
+            assert got[i] is None
+            continue
+        assert got[i] == _simhash64_reference(hashes), i
+
+
+def test_simhash_kernels_honour_arrow_slices():
+    """Both batch kernels read the list and child offsets of sliced
+    Arrow arrays: a child sliced past a junk token, batches sliced from
+    one record batch, and a null list in the middle."""
+    import pyarrow as pa
+
+    from pcgraph.datapipe.dedup import _simhash64_batches, _simhash_portable_batches
+
+    texts = SIMHASH_TEXTS[:6]
+    tokens = [[] if t is None else t.split(" ") for t in texts]
+    offsets = pa.array(np.cumsum([0] + [len(t) for t in tokens]), pa.int32())
+    mask = pa.array([t is None for t in texts])
+    ids = pa.array(range(len(texts)), pa.int64())
+
+    def run(kernel, child):
+        lists = pa.ListArray.from_arrays(offsets, child, mask=mask)
+        batch = pa.RecordBatch.from_arrays([ids, lists], names=["id", "hashes"])
+        out = pa.Table.from_batches(
+            list(kernel(iter([batch.slice(0, 2), batch.slice(2, 3), batch.slice(5)])))
+        )
+        assert out.column("id").to_pylist() == list(range(len(texts)))
+        return out.column("simhash").to_pylist()
+
+    digests = [hashlib.sha256(t.encode()).digest() for ts in tokens for t in ts]
+    child = pa.array([b"\xff" * 32] + digests, pa.binary()).slice(1)
+    assert run(_simhash_portable_batches, child) == [
+        _portable_reference(t)[0] for t in texts
+    ]
+
+    rng = np.random.default_rng(5)
+    flat = rng.integers(-(1 << 63), (1 << 63) - 1, size=len(digests) + 1)
+    child = pa.array(flat, pa.int64()).slice(1)
+    it = iter(flat[1:].tolist())
+    want = [
+        None if t is None else _simhash64_reference([next(it) for _ in ts])
+        for t, ts in zip(texts, tokens)
+    ]
+    assert run(_simhash64_batches, child) == want
+
+
+def test_near_duplicates_releases_shingle_cache(spark, docs):
+    """Repeated calls leave the SQL cache manager as it was and return
+    equal results."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    first = near_duplicates(docs, threshold=0.5).toPandas()
+    second = near_duplicates(docs, threshold=0.5).toPandas()
+    assert cache.isEmpty()
+    key = ["id1", "id2"]
+    pd.testing.assert_frame_equal(
+        first.sort_values(key).reset_index(drop=True),
+        second.sort_values(key).reset_index(drop=True),
+    )
+    assert len(first) > 0
 
 
 def test_token_stats_and_quality(docs):
