@@ -10,13 +10,14 @@ min-fold ``update`` and the engine call live here once.
 
 from __future__ import annotations
 
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import PCEngine
-from ..partition import GraphBlocks, vertex_ids
+from ..partition import GraphBlocks, vertex_census
 from ..statestore import default_state_dir
 
 
@@ -39,7 +40,6 @@ def min_fold_update(state_df: DataFrame, msgs: DataFrame, step: int) -> DataFram
 def run_min_propagation(
     spark: SparkSession,
     blocks: GraphBlocks,
-    edges: DataFrame,
     vertices: DataFrame | None,
     init_value: Column,
     init_changed: Column,
@@ -67,61 +67,57 @@ def run_min_propagation(
     )
     start_step = 0
     resume_manifest = None
-    ckpt_init = True  # initial-state checkpoint (engine._MemoryState)
-    # the engine derives the initial frontier from the CHECKPOINTED
-    # state — an explicit pre-checkpoint frontier would re-execute the
-    # vertex-set init in round 1
+    # the engine derives the initial frontier from the state it embeds
     frontier = None
     resumed = engine.resume(resume_from) if resume_from else None
     if resumed is not None:
         state, frontier, meta = resumed
         start_step = int(meta["superstep"])
-        engine.checkpoint_dir = engine.checkpoint_dir or resume_from
         if "manifest" in meta:  # round was committed by the delta store
             incremental = True
             resume_manifest = meta["manifest"]
             n_buckets = int(meta.get("n_buckets", n_buckets))
             state_store_dir = state_store_dir or meta["state_store_dir_resolved"]
     else:
-        if blocks.vertices_path is not None and vertices is None:
-            vset = spark.read.parquet(blocks.vertices_path).select("id")
-            # initial state = a cheap deterministic census scan: skip
-            # materializing it before round 1 (engine.run docstring)
-            ckpt_init = False
-        else:
-            vset = vertex_ids(edges)
-            if vertices is not None:
-                vset = vset.union(vertices.select("id")).distinct()
-        state = vset.select(
+        state = vertex_census(spark, blocks, vertices).select(
             "id", init_value.alias("value"), init_changed.alias("changed")
         )
+    tmp_store = None
     if incremental and state_store_dir is None:
-        state_store_dir = default_state_dir(spark, checkpoint_dir, algorithm)
+        state_store_dir = default_state_dir(spark, engine.checkpoint_dir, algorithm)
+        # without a checkpoint dir no round meta points at the store: it
+        # is a temp dir this call owns
+        tmp_store = None if engine.checkpoint_dir else state_store_dir
 
-    return engine.run(
-        blocks=blocks,
-        state=state,
-        frontier=frontier,
-        kernel=kernel,
-        msg_schema=msg_schema,
-        update=min_fold_update,
-        frontier_fn=lambda s: s.filter("changed").select("id", "value"),
-        # active-count rides the round's materializing job (observe)
-        metrics_exprs=[
-            F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
-        ],
-        metrics_post=lambda obs, step: {"active": int(obs["changed"] or 0)},
-        max_iter=max_iter,
-        start_step=start_step,
-        algorithm=algorithm,
-        strict=strict,
-        # min-fold + strict improvement is exactly the delta store's
-        # merge contract (engine.run docstring)
-        state_store_dir=state_store_dir if incremental else None,
-        n_buckets=n_buckets,
-        resume_manifest=resume_manifest,
-        monotone="min",
-        max_versions=max_versions,
-        post_superstep=post_superstep,
-        checkpoint_initial_state=ckpt_init,
-    )
+    try:
+        state, history = engine.run(
+            blocks=blocks,
+            state=state,
+            frontier=frontier,
+            kernel=kernel,
+            msg_schema=msg_schema,
+            update=min_fold_update,
+            frontier_fn=lambda s: s.filter("changed").select("id", "value"),
+            # active-count rides the round's materializing job (observe)
+            metrics_exprs=[
+                F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
+            ],
+            metrics_post=lambda obs, step: {"active": int(obs["changed"] or 0)},
+            max_iter=max_iter,
+            start_step=start_step,
+            algorithm=algorithm,
+            strict=strict,
+            # min-fold + strict improvement is exactly the delta store's
+            # merge contract (engine.run docstring)
+            state_store_dir=state_store_dir if incremental else None,
+            n_buckets=n_buckets,
+            resume_manifest=resume_manifest,
+            max_versions=max_versions,
+            post_superstep=post_superstep,
+        )
+        if tmp_store is not None:  # the result reads the store
+            state = state.localCheckpoint(eager=True)
+        return state, history
+    finally:
+        if tmp_store is not None:
+            shutil.rmtree(tmp_store, ignore_errors=True)

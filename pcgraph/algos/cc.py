@@ -119,7 +119,8 @@ def connected_components(
     cost O(changed) instead of the in-memory checkpoint's O(|V|)
     (engine.run docstring).  The store lives at ``state_store_dir``
     (default: ``checkpoint_dir/statestore`` when checkpointing, else a
-    fresh local temp dir — pass a shared-FS path on a cluster).
+    fresh local temp dir, deleted on return after the result is
+    materialized — pass a shared-FS path on a cluster).
     """
     sym = symmetrize(edges)
     with graph_blocks(
@@ -127,7 +128,7 @@ def connected_components(
         salt_threshold=salt_threshold, tag="sym",
     ) as blocks:
         state, history = run_min_propagation(
-            spark, blocks, sym, vertices,
+            spark, blocks, vertices,
             init_value=F.col("id"),
             init_changed=F.lit(True),
             kernel=cc_kernel,

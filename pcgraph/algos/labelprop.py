@@ -31,18 +31,26 @@ from ..partition import (
     block_edge_source_index,
     graph_blocks,
     unpack_block,
-    vertex_ids,
+    vertex_census,
 )
 
 
-# Target histogram entries per fold task (see label_propagation's
-# agg_partitions doc): ~2M (dst,label)->cnt entries ~= 140 MB of
-# BytesToBytesMap — spill-free at 32 concurrent tasks on a 24 GB heap.
+# Target histogram entries per fold task (see _fold_width): ~2M
+# (dst,label)->cnt entries ~= 140 MB of BytesToBytesMap — spill-free
+# at 32 concurrent tasks on a 24 GB heap.
 _AGG_ROWS_PER_TASK = 2_000_000
 
 
 def _fold_width(est_partials: int, n_shuffle: int, bypass: int) -> int:
-    """Auto-sized histogram-fold width (label_propagation docstring).
+    """Width of the per-round histogram fold, from ``est_partials``
+    (edges in the block store, i.e. symmetrized when undirected).
+
+    Early LPA rounds carry ~one histogram row per edge, and the fold's
+    hash aggregate is the engine's only spill regime: when a task's
+    |partials| / width entries outgrow its execution-memory share the
+    aggregate falls back to sort-based spilling — measured at 316M
+    edges as 59 GB memory / 8.6 GB disk spilled in ONE stage at 128
+    partitions (r5 per-stage diagnosis).
 
     At-scale regime (spill-driven size >= n_shuffle): byte-for-byte the
     r5 sizing, min(bypass, ceil(partials/2M)).  Small-graph regime:
@@ -117,7 +125,6 @@ def label_propagation(
     blocks: GraphBlocks | None = None,
     store_dir: str | None = None,
     post_superstep=None,
-    agg_partitions: int | None = None,
 ) -> tuple[DataFrame, list[dict]]:
     """Run synchronous LPA; returns (DataFrame[id, label], metrics).
 
@@ -125,24 +132,8 @@ def label_propagation(
     call would build — i.e. raw edges when ``directed=True``) skips the
     build's full edge shuffle.
 
-    ``agg_partitions`` sets the parallelism of the per-round histogram
-    fold.  Early LPA rounds carry ~one histogram row per edge, and the
-    fold's hash aggregate is the engine's only spill regime: per-task
-    aggregate state is |partials| / agg_partitions entries, and when
-    that map exceeds its execution-memory share the aggregate falls
-    back to sort-based spilling — measured at 316M edges as 59 GB
-    memory / 8.6 GB disk spilled in ONE stage at 128 partitions
-    (per-stage breakdown, r5 diagnosis; the r4 round-2 totals were
-    100 GB).  Default (None): auto-sized from the edge count so each
-    fold task holds ~2M histogram entries (~140 MB of hash map) —
-    (edges in the block store, i.e. symmetrized when undirected) / 2M
-    partitions, capped at the session's
-    ``spark.shuffle.sort.bypassMergeThreshold`` (the kernel stage's
-    repartition write must stay on the streaming bypass path; ADVICE r5
-    docstring fix).  When that spill-driven size is below
-    ``spark.sql.shuffle.partitions`` (small graphs) the fold is sized
-    like the engine's kernel stage (~128k rows/task) instead.  Pass an
-    explicit value to pin a width.
+    The per-round histogram fold is sized from the store's edge count
+    (``_fold_width``).
     """
     e = edges.select("src", "dst")
     raw_both = None
@@ -162,23 +153,12 @@ def label_propagation(
         )
 
         start_step = 0
-        ckpt_init = True  # initial-state checkpoint (engine._MemoryState)
         resumed = engine.resume(resume_from) if resume_from else None
         if resumed is not None:
             state, _, meta = resumed
             start_step = int(meta["superstep"])
-            engine.checkpoint_dir = engine.checkpoint_dir or resume_from
         else:
-            if blocks.vertices_path is not None and vertices is None:
-                vset = spark.read.parquet(blocks.vertices_path).select("id")
-                # initial state = a cheap deterministic census scan: skip
-                # materializing it before round 1 (engine.run docstring)
-                ckpt_init = False
-            else:
-                vset = vertex_ids(e)
-                if vertices is not None:
-                    vset = vset.union(vertices.select("id")).distinct()
-            state = vset.select(
+            state = vertex_census(spark, blocks, vertices).select(
                 "id", F.col("id").alias("value"), F.lit(True).alias("changed")
             )
 
@@ -194,27 +174,14 @@ def label_propagation(
         # full-volume exchanges -> 1, pinned by a plan test
         # (test_lpa_update_single_message_shuffle).
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if agg_partitions:
-            agg_n = int(agg_partitions)
-        else:
-            # Auto-size the fold so each task's hash-aggregate map fits in
-            # its execution-memory share: partials are bounded by one row
-            # per directed adjacency, and ~2M entries/task (~140 MB incl.
-            # BytesToBytesMap overhead) leaves 32 concurrent tasks well
-            # inside a 0.6 x heap execution pool.  The store recorded its
-            # (directed-adjacency) edge count at build, so this reads no
-            # edges; a store without the count falls back to the raw
-            # edge table's.
-            est_partials = blocks.n_edges or edges.count() * (
-                1 if directed else 2
-            )
-            # cap at the session's bypass-merge threshold: above it the
-            # kernel stage's repartition write switches to the sort path
-            # and buffers (= spills) its whole output per map task
-            bypass = int(
-                spark.conf.get("spark.shuffle.sort.bypassMergeThreshold", "200")
-            )
-            agg_n = _fold_width(est_partials, n_shuffle, bypass)
+        # Partials are bounded by one row per directed adjacency, which
+        # the store recorded at build (no edge read).  Cap at the
+        # bypass-merge threshold: above it the kernel stage's repartition
+        # write takes the sort path and spills its whole output per task.
+        bypass = int(
+            spark.conf.get("spark.shuffle.sort.bypassMergeThreshold", "200")
+        )
+        agg_n = _fold_width(blocks.n_edges, n_shuffle, bypass)
 
         # Superstep-1 strength reduction (undirected fresh runs): with
         # identity initialization (label(v)=v) on the deduplicated
@@ -309,9 +276,5 @@ def label_propagation(
             start_step=start_step,
             algorithm="label_propagation",
             post_superstep=post_superstep,
-            # the reduced round 1 reads the initial state once and never
-            # routes its frontier: materializing it first would be a
-            # full copy for nothing
-            checkpoint_initial_state=ckpt_init and not reduce_round1,
         )
         return state.select("id", F.col("value").alias("label")), history

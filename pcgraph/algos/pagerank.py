@@ -31,7 +31,7 @@ from ..partition import (
     block_edge_source_index,
     graph_blocks,
     unpack_block,
-    vertex_ids,
+    vertex_census,
 )
 
 
@@ -100,71 +100,27 @@ def pagerank(
             spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         )
 
-        deg_expr = F.sum("weight") if weighted else F.count("*")
-        out_deg = e.groupBy(F.col("src").alias("id")).agg(
-            deg_expr.cast("double").alias("out_deg")
-        )
-
         start_step = 0
         loop_state = {"dangling": 0.0}
-        ckpt_init = True  # initial-state checkpoint (engine._MemoryState)
         resumed = engine.resume(resume_from) if resume_from else None
         if resumed is not None:
             state, _, meta = resumed
             start_step = int(meta["superstep"])
             n_vertices = int(meta["n_vertices"])
             loop_state["dangling"] = float(meta["dangling"])
-            engine.checkpoint_dir = engine.checkpoint_dir or resume_from
         else:
-            use_census = blocks.vertices_path is not None and vertices is None
-            if use_census:
-                # store sidecar: (id, out_deg) census written at block
-                # build — skips the full edge-table scan+distinct init
-                vset = spark.read.parquet(blocks.vertices_path)
-            else:
-                vset = vertex_ids(e)
-                if vertices is not None:
-                    vset = vset.union(vertices.select("id")).distinct()
-                vset = vset.join(out_deg, on="id", how="left").fillna(
-                    0.0, subset=["out_deg"]
-                )
-            if use_census:
-                # the initial state is a cheap deterministic census scan —
-                # no need to materialize it before round 1
-                ckpt_init = False
-            if use_census and blocks.n_vertices is not None:
-                # census scalars were recorded at store build — init needs
-                # no aggregation job at all
-                n_vertices = blocks.n_vertices
-                n_dangling = blocks.n_dangling or 0
-                init = 1.0 / n_vertices
-                state = vset.select(
-                    "id",
-                    F.lit(init).alias("pr"),
-                    F.lit(init).alias("prev_pr"),
-                    "out_deg",
-                )
-                loop_state["dangling"] = n_dangling * init
-            else:
-                vset = vset.persist()
-                # one pass for both init counts
-                row = vset.agg(
-                    F.count("*").alias("n"),
-                    F.sum(
-                        F.when(F.col("out_deg") == 0, 1).otherwise(0)
-                    ).alias("dang"),
-                ).collect()[0]
-                n_vertices = int(row["n"])
-                n_dangling = int(row["dang"] or 0)
-                init = 1.0 / n_vertices
-                state = vset.select(
-                    "id",
-                    F.lit(init).alias("pr"),
-                    F.lit(init).alias("prev_pr"),
-                    "out_deg",
-                )
-                loop_state["dangling"] = n_dangling * init
-                vset.unpersist()
+            vset = vertex_census(spark, blocks, vertices)
+            # census scalars were recorded at store build — init needs no
+            # aggregation job; ids ``vertices`` adds have no edge, so each
+            # one is one more dangling vertex
+            n_vertices = blocks.n_vertices if vertices is None else vset.count()
+            n_dangling = blocks.n_dangling + n_vertices - blocks.n_vertices
+            init = 1.0 / n_vertices
+            loop_state["dangling"] = n_dangling * init
+            state = vset.select(
+                "id", F.lit(init).alias("pr"), F.lit(init).alias("prev_pr"),
+                "out_deg",
+            )
 
         d = damping
         base = (1.0 - d) / n_vertices
@@ -229,6 +185,5 @@ def pagerank(
             state_cols=["id", "pr", "out_deg"],
             post_superstep=post_superstep,
             strict=strict,
-            checkpoint_initial_state=ckpt_init,
         )
         return state.select("id", F.col("pr").alias("pagerank")), history

@@ -96,7 +96,7 @@ def sssp(
     ) as blocks:
         is_source = F.col("id") == source
         state, history = run_min_propagation(
-            spark, blocks, e, vertices,
+            spark, blocks, vertices,
             init_value=F.when(is_source, 0.0).otherwise(F.lit(_INF)),
             init_changed=is_source,
             kernel=sssp_kernel,

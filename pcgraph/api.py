@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .engine import PCEngine
-from .partition import GraphBlocks, degrees, graph_blocks, vertex_ids
+from .partition import GraphBlocks, degrees, graph_blocks, vertex_census
 
 _FOLDS = {"min": F.min, "max": F.max, "sum": F.sum}
 
@@ -72,12 +72,6 @@ class PCGraph:
             ))
         return self._blocks
 
-    def vertex_set(self) -> DataFrame:
-        vset = vertex_ids(self.edges)
-        if self.vertices is not None:
-            vset = vset.union(self.vertices.select("id")).distinct()
-        return vset
-
     def degrees(self) -> DataFrame:
         return degrees(self.edges)
 
@@ -97,7 +91,6 @@ class PCGraph:
         max_iter: int = 100,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 1,
-        emit_on: str = "change",
         sum_tol: float | None = None,
         strict: bool = False,
         pre_superstep: Callable | None = None,
@@ -105,12 +98,12 @@ class PCGraph:
     ) -> tuple[DataFrame, list[dict]]:
         """Run a custom iteration; returns (DataFrame[id, value], metrics).
 
-        ``initial_value`` is a Column or literal seeding every vertex
-        (reference: vertex init mapper, Graph.fromDataSet).  With a
-        built-in ``fold``, the vertex update is
-        ``value' = fold(value, fold(messages))`` with emit-on-strict-
-        change semantics (VertexUpdateFunction.java:85-93); pass
-        ``update`` for anything richer.
+        ``initial_value`` is a Column or literal seeding every vertex of
+        the block store's census plus ``vertices`` (reference: vertex
+        init mapper, Graph.fromDataSet).  With a built-in ``fold``, the
+        vertex update is ``value' = fold(value, fold(messages))`` with
+        emit-on-strict-change semantics (VertexUpdateFunction.java:
+        85-93); pass ``update`` for anything richer.
 
         ``kernel`` may declare a 4th parameter to receive the 1-based
         superstep number — ``kernel(key, frontier_pdf, block_pdf,
@@ -132,7 +125,7 @@ class PCGraph:
         outside the vertex set (reference: "Target vertex does not
         exist!", PartitionCentricIteration.java:216-227).
         """
-        state = self.vertex_set().select(
+        state = vertex_census(self.spark, self.blocks, self.vertices).select(
             "id",
             (initial_value if not isinstance(initial_value, (int, float))
              else F.lit(initial_value)).alias("value"),
@@ -175,19 +168,14 @@ class PCGraph:
             checkpoint_dir=checkpoint_dir,
             checkpoint_every=checkpoint_every,
         )
-        frontier_fn = (
-            (lambda s: s.filter("changed").select("id", "value"))
-            if emit_on == "change"
-            else (lambda s: s.select("id", "value"))
-        )
         state, history = engine.run(
             blocks=self.blocks,
             state=state,
-            frontier=None,  # derived from the checkpointed state
+            frontier=None,  # derived from the initial state
             kernel=kernel,
             msg_schema=msg_schema,
             update=update,
-            frontier_fn=frontier_fn,
+            frontier_fn=lambda s: s.filter("changed").select("id", "value"),
             max_iter=max_iter,
             algorithm="custom",
             strict=strict,

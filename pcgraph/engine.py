@@ -22,7 +22,7 @@ algorithm-supplied metric (PageRank L1 < tol).
 Every algorithm runs through ONE round driver (``PCEngine._drive``).
 Where the state lives is a small backend: ``_MemoryState`` (the
 per-round checkpoint below) or ``_DeltaState`` (the append-only
-``DeltaStateStore`` for monotone min/max merges).  A backend owns only
+``DeltaStateStore`` for min merges).  A backend owns only
 how the state starts, how a round's messages become the new state and
 the next frontier, what a committed round records, and how the final
 state is read; hooks, routing, kernels, strict mode, metrics, commit,
@@ -218,23 +218,17 @@ class _MemoryState:
     messages into the full state."""
 
     def __init__(self, engine, state, update, frontier_fn, metrics_exprs,
-                 state_cols, checkpoint_initial_state):
-        # The initial state becomes the first opaque plan; the first
-        # round's merge pays one state-side shuffle into hash(id)
-        # partitioning, every later round inherits it from the previous
-        # round's checkpointed merge output (no Exchange, no Sort).
-        #
-        # ``checkpoint_initial_state=False`` (algorithms pass it when
-        # the initial state is a cheap deterministic scan — the store's
-        # vertex census): round 1 then embeds the scan directly.  The
-        # state subtree appears twice in the round-1 plan (frontier
-        # branch + merge branch), i.e. the census is read at most twice
-        # — cheaper than materializing an O(|V|) checkpoint first,
-        # at every scale.  The per-round checkpoint of the MERGE output
-        # (the lineage-cut that keeps rounds structurally identical) is
-        # unaffected.
-        if checkpoint_initial_state:
-            state = state.localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+                 state_cols):
+        # The initial state is embedded as given — a census scan, the
+        # census joined with ``vertices``, or a resumed round's parquet
+        # read — with no checkpoint of its own.  Its subtree appears
+        # twice in the round-1 plan (frontier branch + merge branch),
+        # i.e. it is read at most twice: cheaper than materializing an
+        # O(|V|) checkpoint first, at every scale.  The first round's
+        # merge pays one state-side shuffle into hash(id) partitioning;
+        # every later round inherits it from the previous round's
+        # checkpointed merge output (no Exchange, no Sort) — the
+        # lineage cut that keeps rounds structurally identical.
         self.engine = engine
         self.state = state
         self.next: DataFrame | None = None
@@ -243,7 +237,7 @@ class _MemoryState:
         self.metrics_exprs = metrics_exprs
         self.state_cols = state_cols
         self.msgs: DataFrame | None = None  # persisted in strict rounds
-        self.lazy = not checkpoint_initial_state  # no round adopted yet
+        self.lazy = True  # no round adopted yet
 
     def initial_frontier(self, frontier_fn) -> DataFrame:
         return frontier_fn(self.state)
@@ -320,7 +314,7 @@ class _MemoryState:
 
     def result(self) -> DataFrame:
         if self.lazy:
-            # no round ran over a lazy initial state (a census scan):
+            # no round ran over the initial state (a census scan):
             # materialize it, as the store it reads may be a temp
             # store deleted when the algorithm call returns
             return self.state.localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
@@ -328,10 +322,10 @@ class _MemoryState:
 
 
 class _DeltaState:
-    """State in a ``DeltaStateStore`` for MONOTONE merges: each round
-    writes ONLY its changed rows — O(changed), not O(|V|).
+    """State in a ``DeltaStateStore`` for min merges: each round writes
+    ONLY its changed rows — O(changed), not O(|V|).
 
-    Per round: kernel messages folded per dst (min/max — ONE small
+    Per round: kernel messages folded per dst (min — ONE small
     aggregate, persisted, its count is the kernel-running action), a
     scan of the touched buckets' versions joined against the folded
     messages (broadcast when the fold is small: sparse rounds never
@@ -342,16 +336,13 @@ class _DeltaState:
     per-bucket version lists bounded."""
 
     def __init__(self, engine, state, msg_schema, metrics_exprs, root,
-                 n_buckets, max_versions, monotone, resume_manifest):
+                 n_buckets, max_versions, resume_manifest):
         from pyspark.sql.types import StructType
 
         self.engine = engine
         self.store = DeltaStateStore(
-            engine.spark, root, n_buckets,
-            max_versions=max_versions, monotone=monotone,
+            engine.spark, root, n_buckets, max_versions=max_versions
         )
-        self.monotone = monotone
-        self.fold = F.min if monotone == "min" else F.max
         self.metrics_exprs = metrics_exprs
         self.resumed = resume_manifest is not None
         # Canonicalize the VALUE type to what every LATER version will
@@ -387,7 +378,7 @@ class _DeltaState:
     def advance(self, msgs, step, algorithm, strict, durable) -> _Round:
         store = self.store
         self.folded = folded = (
-            msgs.groupBy("dst").agg(self.fold("msg").alias("msg")).persist()
+            msgs.groupBy("dst").agg(F.min("msg").alias("msg")).persist()
         )
         n_msgs = folded.count()  # runs the kernels exactly once
         if n_msgs == 0:
@@ -413,14 +404,9 @@ class _DeltaState:
         fol = F.broadcast(folded) if n_msgs <= _DELTA_BROADCAST_ROWS else folded
         cand = raw.join(fol, raw["id"] == fol["dst"], "inner")
         cur = cand.groupBy("id").agg(
-            self.fold("value").alias("value"), self.fold("msg").alias("msg")
+            F.min("value").alias("value"), F.min("msg").alias("msg")
         )
-        improved = (
-            F.col("msg") < F.col("value")
-            if self.monotone == "min"
-            else F.col("msg") > F.col("value")
-        )
-        delta = cur.filter(improved).select(
+        delta = cur.filter(F.col("msg") < F.col("value")).select(
             "id", F.col("msg").alias("value"), F.lit(True).alias("changed")
         )
         delta, obs = _observe(
@@ -460,7 +446,6 @@ class _DeltaState:
         return {
             "manifest": {str(b): list(vs) for b, vs in store.manifest.items()},
             "n_buckets": store.n_buckets,
-            "monotone": self.monotone,
             "state_store_dir": _store_dir_for_meta(
                 self.engine.checkpoint_dir, store.root
             ),
@@ -538,24 +523,26 @@ class PCEngine:
         state_store_dir: str | None = None,
         n_buckets: int = 256,
         resume_manifest: dict | None = None,
-        monotone: str | None = None,
         max_versions: int = 8,
-        checkpoint_initial_state: bool = True,
     ) -> tuple[DataFrame, list[dict]]:
         """Iterate to convergence.
 
-        ``state_store_dir`` with ``monotone`` ("min" or "max") keeps the
-        state in a DeltaStateStore instead of the per-round checkpoint:
-        the algorithm's merge must be exactly "fold messages per dst
-        with min (resp. max), keep on strict improvement" over state
-        rows ``(id, value, changed)`` and messages ``(dst, msg)`` —
-        CC's min-label and SSSP's min-distance qualify.  In that mode
-        ``update`` is bypassed and ``frontier_fn`` only seeds the first
-        frontier (the engine applies the monotone merge itself); each
-        round writes ONLY its changed rows (O(changed)) as a new store
-        version, with min-reconciliation on read and per-bucket
-        compaction (``max_versions``) bounding read amplification.  On
-        a cluster the directory must be on shared storage (hdfs/s3a).
+        ``state`` is embedded in round 1 as given: the engine takes no
+        checkpoint of the initial state (``_MemoryState``), and a run
+        that ends before any round materializes it on return.
+
+        ``state_store_dir`` keeps the state in a DeltaStateStore instead
+        of the per-round checkpoint: the algorithm's merge must be
+        exactly "fold messages per dst with min, keep on strict
+        improvement" over state rows ``(id, value, changed)`` and
+        messages ``(dst, msg)`` — CC's min-label and SSSP's
+        min-distance qualify.  In that mode ``update`` is bypassed and
+        ``frontier_fn`` only seeds the first frontier (the engine
+        applies the min merge itself); each round writes ONLY its
+        changed rows (O(changed)) as a new store version, with
+        min-reconciliation on read and per-bucket compaction
+        (``max_versions``) bounding read amplification.  On a cluster
+        the directory must be on shared storage (hdfs/s3a).
         ``resume_manifest`` (from a committed round's meta) resumes
         against an existing store.
 
@@ -605,12 +592,12 @@ class PCEngine:
             if state_store_dir is None:
                 backend = _MemoryState(
                     self, state, update, frontier_fn, metrics_exprs,
-                    state_cols, checkpoint_initial_state,
+                    state_cols,
                 )
             else:
                 backend = _DeltaState(
                     self, state, msg_schema, metrics_exprs, state_store_dir,
-                    n_buckets, max_versions, monotone, resume_manifest,
+                    n_buckets, max_versions, resume_manifest,
                 )
             if frontier is None:
                 frontier = backend.initial_frontier(frontier_fn)
@@ -755,16 +742,15 @@ class PCEngine:
         # the at-scale layout (spill-free shuffle write, r5); but each
         # python-runner task has a fixed JVM<->worker protocol cost
         # (~10-100 ms), so a SMALL graph must not fan a few thousand
-        # rows out over num_partitions tasks.  When the store records
-        # the edge count, size width to ~_EDGES_PER_KERNEL_TASK edges
-        # per task, capped at num_partitions — at 316M edges the cap
-        # binds (one block per task, exactly the r5 behavior), at sf0.1
-        # it is a handful of tasks.  Grouping semantics are unchanged:
-        # groups are keyed by partition_id regardless of the physical
+        # rows out over num_partitions tasks.  Width is sized from the
+        # store's edge count to ~_EDGES_PER_KERNEL_TASK edges per task,
+        # capped at num_partitions — at 316M edges the cap binds (one
+        # block per task, exactly the r5 behavior), at sf0.1 it is a
+        # handful of tasks.  Grouping semantics are unchanged: groups
+        # are keyed by partition_id regardless of the physical
         # partition count.
-        width = blocks.num_partitions
-        if blocks.n_edges is not None:
-            width = max(1, min(width, -(-blocks.n_edges // _EDGES_PER_KERNEL_TASK)))
+        per_task = -(-blocks.n_edges // _EDGES_PER_KERNEL_TASK)
+        width = max(1, min(blocks.num_partitions, per_task))
         widened = routed.repartition(width, "partition_id")
         # The private entry point is pinned by
         # test_kernel_stage_takes_cached_udf_path: there is no fallback
@@ -837,6 +823,8 @@ class PCEngine:
 
     def resume(self, checkpoint_dir: str) -> tuple[DataFrame, DataFrame, dict] | None:
         """Load (state, frontier, meta) of the latest committed round.
+        A resumed engine without a ``checkpoint_dir`` of its own keeps
+        checkpointing into ``checkpoint_dir``.
 
         Delta-store rounds carry a ``manifest`` instead of a
         ``state_path``; the returned state is the store view at that
@@ -845,6 +833,7 @@ class PCEngine:
         meta = self.latest_round(checkpoint_dir, self.spark)
         if meta is None:
             return None
+        self.checkpoint_dir = self.checkpoint_dir or checkpoint_dir
 
         def _abspath(p: str) -> str:  # absolute paths = pre-relative-meta runs
             if "://" in p or os.path.isabs(p):
@@ -855,16 +844,14 @@ class PCEngine:
             # The committed round records where its store lives (a
             # caller-configured --state-store-dir need not be under the
             # checkpoint dir); pre-r5 metas lack the key and used the
-            # default location.
+            # default location.  Older metas' merge-direction key is not
+            # read: every delta-store run folds with min.
             store_root = _abspath(
                 meta.get("state_store_dir", "statestore")
             )
             meta["state_store_dir_resolved"] = store_root
             store = DeltaStateStore(
-                self.spark,
-                store_root,
-                int(meta.get("n_buckets", 256)),
-                monotone=meta.get("monotone", "min"),
+                self.spark, store_root, int(meta.get("n_buckets", 256))
             )
             store.restore(meta["manifest"])
             state = store.read_reconciled()

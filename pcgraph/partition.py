@@ -98,19 +98,19 @@ class GraphBlocks:
     # store sidecar with the graph's vertex census (id, out_deg):
     # algorithm init (vertex-set completion + degree aggregation) is a
     # full edge-table scan+distinct — at 316M edges ~20 min on 2 cores,
-    # repeated by EVERY algorithm run.  The store writes it once.
-    vertices_path: str | None = None
+    # repeated by EVERY algorithm run.  The store writes it once, and
+    # ``vertex_census`` is the one place an algorithm reads it.
+    vertices_path: str
     # edge count recorded at store build: lets the engine size the
     # kernel stage's physical width to the data — small graphs don't
     # pay per-task python-runner overhead x P, big graphs keep one CSR
     # block per task (engine._messages).
-    n_edges: int | None = None
-    # vertex-census scalars recorded at store build (None when absent,
-    # e.g. a store written by an older build): PageRank init reads
+    n_edges: int
+    # vertex-census scalars recorded at store build: PageRank init reads
     # n_vertices / n_dangling from here instead of running an
     # aggregation job per algorithm run.
-    n_vertices: int | None = None
-    n_dangling: int | None = None
+    n_vertices: int
+    n_dangling: int
     # per-build id (None for stores written before it was recorded):
     # keys the worker-side block caches, so a store rebuilt at the same
     # path never serves the previous build's topology
@@ -285,18 +285,15 @@ def ensure_block_store(
                 f"requested {requested}; use a distinct store_dir per "
                 "edge-set/partitioning"
             )
-        stored_n = meta.get("n_edges")
-        if (
-            expected_edges is not None
-            and stored_n is not None
-            and int(stored_n) != int(expected_edges)
-        ):
+        blocks = open_block_store(spark, path)
+        if expected_edges is not None and blocks.n_edges != int(expected_edges):
+            blocks.unpersist()
             raise ValueError(
-                f"block store at {path} holds {stored_n} edges but the "
+                f"block store at {path} holds {blocks.n_edges} edges but the "
                 f"input now has {expected_edges} — the input data changed "
                 "since the store was built; delete the store_dir to rebuild"
             )
-        return open_block_store(spark, path)
+        return blocks
 
     # The edge plan may be an expensive derivation (a symmetrization's
     # distinct, a join of source tables): it is cached for the build,
@@ -374,37 +371,56 @@ def ensure_block_store(
 def open_block_store(spark: SparkSession, path: str) -> GraphBlocks:
     """Open a saved block store: no JVM-side cache of the topology —
     kernels read their partition's rows directly (``read_store_block``);
-    only the (tiny) mirror map is persisted, for the per-round route."""
+    only the (tiny) mirror map is persisted, for the per-round route.
+    The vertex census (``vertices/`` and the meta's ``n_edges``,
+    ``n_vertices``, ``n_dangling``) is required: a store written
+    without it is refused, never rebuilt from an edge scan."""
     meta = read_json(spark, os.path.join(path, STORE_META))
+    vpath = os.path.join(path, "vertices")
+    scalars = ("n_edges", "n_vertices", "n_dangling")
+    missing = [k for k in scalars if meta.get(k) is None]
+    if not fs_exists(spark, os.path.join(vpath, "_SUCCESS")):
+        missing.append("vertices/")
+    if missing:
+        raise ValueError(
+            f"block store at {path} has no vertex census (missing: "
+            f"{', '.join(missing)}): it was written by an older build — "
+            "delete the store_dir to rebuild"
+        )
     mirrors = None
     if meta["has_mirrors"]:
         mirrors = spark.read.parquet(os.path.join(path, "mirrors")).persist()
         mirrors.count()
-    vpath = os.path.join(path, "vertices")
     return GraphBlocks(
         mirrors=mirrors,
         num_partitions=meta["num_partitions"],
         salt_threshold=meta["salt_threshold"],
         weighted=meta["weighted"],
         store_path=local_or_uri_abspath(os.path.join(path, "blocks")),
-        vertices_path=(
-            local_or_uri_abspath(vpath)
-            if fs_exists(spark, os.path.join(vpath, "_SUCCESS"))
-            else None
-        ),
-        n_edges=(int(meta["n_edges"]) if meta.get("n_edges") is not None else None),
-        n_vertices=(
-            int(meta["n_vertices"])
-            if meta.get("n_vertices") is not None
-            else None
-        ),
-        n_dangling=(
-            int(meta["n_dangling"])
-            if meta.get("n_dangling") is not None
-            else None
-        ),
+        vertices_path=local_or_uri_abspath(vpath),
+        n_edges=int(meta["n_edges"]),
+        n_vertices=int(meta["n_vertices"]),
+        n_dangling=int(meta["n_dangling"]),
         build_id=meta.get("build_id"),
     )
+
+
+def vertex_census(
+    spark: SparkSession, blocks: GraphBlocks, vertices: DataFrame | None = None
+) -> DataFrame:
+    """The vertex set every algorithm starts from, as ``(id, out_deg)``
+    (reference: vertex init over Graph.fromDataSet, PCGraph.java:42-55):
+    a scan of the store's census, plus each id of ``vertices`` that has
+    no edge, with ``out_deg`` 0.  A full outer join, not a union with a
+    literal 0.0: under ANSI mode the optimizer constant-folds
+    PageRank's ``pr / out_deg`` in a literal branch before pruning its
+    ``out_deg > 0`` filter, and the query fails with DIVIDE_BY_ZERO."""
+    census = spark.read.parquet(blocks.vertices_path)
+    if vertices is None:
+        return census
+    return census.join(
+        vertices.select("id").distinct(), on="id", how="full"
+    ).select("id", F.coalesce(F.col("out_deg"), F.lit(0.0)).alias("out_deg"))
 
 
 @contextmanager

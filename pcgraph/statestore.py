@@ -1,4 +1,4 @@
-"""Delta state store — O(changed) rounds for monotone delta algorithms.
+"""Delta state store — O(changed) rounds for min-merge delta algorithms.
 
 The in-memory backend (``engine._MemoryState``) materializes the WHOLE
 vertex state every round; for delta algorithms (CC tail, SSSP
@@ -6,14 +6,14 @@ wavefront) that is an O(|V|) rewrite to move an 8-row frontier —
 measured as a flat ~4-5 s/round floor at 316M edges regardless of
 frontier size (BENCH/sssp_316m_r3.json), and at 100x scale it is THE
 structural scale-killer.  When the algorithm's merge is an associative
-MIN or MAX (CC's component label, SSSP's distance), ``DeltaStateStore``
+MIN (CC's component label, SSSP's distance), ``DeltaStateStore``
 appends only each round's CHANGED rows as a new version, and every read
-reconciles duplicate ids with the same min (max) the algorithm folds
-with, so version order is immaterial:
+reconciles duplicate ids with the same min the algorithm folds with, so
+version order is immaterial:
 
   * layout: ``root/v={vid}/bucket={b}/*.parquet`` — append-only
     versioned bucket directories, ``bucket = pmod(xxhash64(id), B)``;
-    version ids are store-allocated monotone ints (v0 = the full
+    version ids are store-allocated increasing ints (v0 = the full
     initial state, later vids = per-round deltas or compactions);
   * a driver-side MANIFEST maps bucket -> ORDERED list of versions
     holding rows of that bucket; reading the current state (or any
@@ -74,7 +74,7 @@ def default_state_dir(
 
 
 class DeltaStateStore:
-    """Versioned hash-bucketed state for MONOTONE delta algorithms —
+    """Versioned hash-bucketed state for min-merge delta algorithms —
     per-round writes are O(changed rows) (module docstring)."""
 
     def __init__(
@@ -83,15 +83,11 @@ class DeltaStateStore:
         root: str,
         n_buckets: int = 256,
         max_versions: int = 8,
-        monotone: str = "min",
     ):
-        if monotone not in ("min", "max"):
-            raise ValueError(f"monotone must be 'min' or 'max', got {monotone!r}")
         self.spark = spark
         self.root = root
         self.n_buckets = int(n_buckets)
         self.max_versions = int(max_versions)
-        self.monotone = monotone
         # bucket -> ordered version list (the current state view)
         self.manifest: dict[int, list[int]] = {}
         self.committed: dict[int, list[int]] = {}
@@ -126,9 +122,6 @@ class DeltaStateStore:
             for name in fs_list_dirs(self.spark, self._vdir(vid))
             if name.startswith("bucket=")
         )
-
-    def _agg(self, col):
-        return F.min(col) if self.monotone == "min" else F.max(col)
 
     # ------------------------------------------------------------------
     def init(self, state: DataFrame) -> int:
@@ -211,7 +204,7 @@ class DeltaStateStore:
             return self.spark.createDataFrame(
                 [], f"id long, value {self._value_type or 'double'}"
             )
-        return raw.groupBy("id").agg(self._agg("value").alias("value"))
+        return raw.groupBy("id").agg(F.min("value").alias("value"))
 
     def read_version(self, vid: int) -> DataFrame:
         return self.spark.read.parquet(self._vdir(vid)).drop("bucket")
@@ -284,7 +277,7 @@ class DeltaStateStore:
             .parquet(*paths)
             .select("id", "value")
             .groupBy("id")
-            .agg(self._agg("value").alias("value"))
+            .agg(F.min("value").alias("value"))
             .withColumn("bucket", self.bucket_expr(F.col("id")))
         )
         vid = self.write_delta(merged)

@@ -177,3 +177,32 @@ def test_worker_block_cache_evicts_oldest(spark, tmp_path, monkeypatch):
     assert list(P._BLOCK_MEMCACHE) == keys[-3:]
     assert P._BLOCK_MEMCACHE_BYTES[0] == budget
     assert P._BLOCK_MEMCACHE[keys[-1]][0] is frames[-1]
+
+
+def test_store_without_census_is_refused(spark, tmp_path):
+    """The vertex census is a required part of every store: a store
+    written without it — a meta lacking ``n_vertices``, or no
+    ``vertices/`` dir — is refused with an error naming what is
+    missing, never reopened with an edge-scan fallback."""
+    from pcgraph.iohelpers import read_json, write_json_atomic
+    from pcgraph.partition import STORE_META, open_block_store
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
+
+    no_count = str(tmp_path / "no_count")
+    ensure_block_store(spark, edges, 4, no_count, tag="t")
+    meta_path = os.path.join(no_count, STORE_META)
+    meta = read_json(spark, meta_path)
+    del meta["n_vertices"]
+    write_json_atomic(spark, meta_path, meta)
+    with pytest.raises(ValueError, match=r"n_vertices.*delete the store_dir"):
+        open_block_store(spark, no_count)
+    # the reopen path of ensure_block_store refuses it too
+    with pytest.raises(ValueError, match="n_vertices"):
+        ensure_block_store(spark, edges, 4, no_count, tag="t")
+
+    no_census = str(tmp_path / "no_census")
+    ensure_block_store(spark, edges, 4, no_census, tag="t")
+    shutil.rmtree(os.path.join(no_census, "vertices"))
+    with pytest.raises(ValueError, match=r"vertices/.*delete the store_dir"):
+        open_block_store(spark, no_census)

@@ -1,4 +1,8 @@
+import os
+import tempfile
+
 import numpy as np
+import pytest
 
 from pcgraph import fixtures
 from pcgraph.algos.cc import connected_components
@@ -77,3 +81,46 @@ def test_partition_count_independence(spark):
         result, _ = connected_components(spark, edges_df, num_partitions=p)
         outs.append({r["id"]: r["component"] for r in result.collect()})
     assert outs[0] == outs[1]
+
+
+def test_incremental_cc_removes_its_temp_state_dir(spark, tmp_path, monkeypatch):
+    """``incremental=True`` with neither ``checkpoint_dir`` nor
+    ``state_store_dir`` keeps its delta store in a temp dir the call
+    owns: the result is materialized and the dir removed on return,
+    and on a raise."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def state_dirs():
+        return [
+            n for n in os.listdir(tmp)
+            if n.startswith("pcgraph_connected_components_state_")
+        ]
+
+    seen = []
+
+    def watch(step, metrics):
+        seen.append(len(state_dirs()))
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=120))
+    full, _ = connected_components(spark, edges, num_partitions=4)
+    expected = {r["id"]: r["component"] for r in full.collect()}
+    got, _ = connected_components(
+        spark, edges, num_partitions=4, incremental=True, n_buckets=8,
+        post_superstep=watch,
+    )
+    assert seen and set(seen) == {1}  # the store lived in the temp dir
+    assert state_dirs() == []
+    # the result stays readable once its store is gone
+    assert {r["id"]: r["component"] for r in got.collect()} == expected
+
+    def boom(step, metrics):
+        raise RuntimeError("stop after round 1")
+
+    with pytest.raises(RuntimeError, match="stop after round 1"):
+        connected_components(
+            spark, edges, num_partitions=4, incremental=True, n_buckets=8,
+            post_superstep=boom,
+        )
+    assert state_dirs() == []

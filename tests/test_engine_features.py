@@ -297,9 +297,7 @@ def test_failed_round_releases_persisted_frames(spark, tmp_path, backend):
 
     store = {}
     if backend == "delta":
-        store = dict(
-            state_store_dir=str(tmp_path / "store"), n_buckets=8, monotone="min"
-        )
+        store = dict(state_store_dir=str(tmp_path / "store"), n_buckets=8)
     jsc = spark.sparkContext._jsc
 
     def persisted() -> set[int]:

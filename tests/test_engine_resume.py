@@ -68,18 +68,30 @@ def test_uncommitted_round_is_ignored(spark, tmp_path):
 
 def test_pagerank_resume(spark, tmp_path):
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=120))
-    ckpt = str(tmp_path / "prckpt")
-    full, fh = pagerank(spark, edges, num_partitions=4, checkpoint_dir=ckpt, tol=1e-8)
-    full_rows = {r["id"]: r["pagerank"] for r in full.collect()}
-    rounds = sorted(os.listdir(ckpt))
-    for name in rounds[3:]:
-        shutil.rmtree(os.path.join(ckpt, name))
-    resumed, rh = pagerank(spark, edges, num_partitions=4, resume_from=ckpt, tol=1e-8)
-    resumed_rows = {r["id"]: r["pagerank"] for r in resumed.collect()}
-    assert set(resumed_rows) == set(full_rows)
-    for vid in full_rows:
-        assert abs(full_rows[vid] - resumed_rows[vid]) < 1e-9, vid
-    assert rh[0]["superstep"] == 4
+    # with ``vertices`` (an id already in the graph plus isolated ids)
+    # the resumed state is the one the first run committed
+    vertices = spark.createDataFrame([(3,), (500,), (-9,)], "id long")
+    for case, vdf in (("plain", None), ("vertices", vertices)):
+        ckpt = str(tmp_path / f"prckpt_{case}")
+        full, fh = pagerank(
+            spark, edges, vertices=vdf, num_partitions=4,
+            checkpoint_dir=ckpt, tol=1e-8,
+        )
+        full_rows = {r["id"]: r["pagerank"] for r in full.collect()}
+        if vdf is not None:
+            assert {500, -9} <= set(full_rows)
+        rounds = sorted(os.listdir(ckpt))
+        for name in rounds[3:]:
+            shutil.rmtree(os.path.join(ckpt, name))
+        resumed, rh = pagerank(
+            spark, edges, vertices=vdf, num_partitions=4,
+            resume_from=ckpt, tol=1e-8,
+        )
+        resumed_rows = {r["id"]: r["pagerank"] for r in resumed.collect()}
+        assert set(resumed_rows) == set(full_rows), case
+        for vid in full_rows:
+            assert abs(full_rows[vid] - resumed_rows[vid]) < 1e-9, (case, vid)
+        assert rh[0]["superstep"] == 4, case
 
 
 def test_cc_salting_equivalence(spark):

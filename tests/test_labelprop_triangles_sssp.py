@@ -137,3 +137,59 @@ def test_sssp_matches_dijkstra(spark):
     for vid, dv in got.items():
         exp = oracle.get(vid, float("inf"))
         assert (dv == exp == float("inf")) or abs(dv - exp) < 1e-9, (vid, dv, exp)
+
+
+def test_lpa_and_sssp_take_vertices(spark):
+    """``vertices`` on LPA (undirected and directed) and SSSP, with a
+    supplied store and with the temp-store default: isolated ids keep
+    their own label (distance +inf), and every other vertex equals the
+    run without ``vertices``."""
+    from pcgraph.algos.cc import symmetrize
+    from pcgraph.partition import graph_blocks
+
+    rng = np.random.default_rng(11)
+    pdf = pd.DataFrame(
+        {
+            "src": rng.integers(0, 40, size=120),
+            "dst": rng.integers(0, 40, size=120),
+            "weight": rng.uniform(0.1, 5.0, size=120),
+        }
+    )
+    pdf = pdf[pdf.src != pdf.dst].drop_duplicates(["src", "dst"]).reset_index(drop=True)
+    edges = fixtures.to_spark_edges(spark, pdf)
+    source = int(pdf.src.iloc[0])
+    isolated = [1000, 1001, -7]
+    vdf = spark.createDataFrame(
+        [(v,) for v in [source, *isolated]], "id long"
+    )
+    cases = {
+        # name: (run, result column, store edges, store tag, weighted,
+        #        value of an isolated id)
+        "lpa": (
+            lambda **kw: label_propagation(spark, edges, max_iter=10, **kw),
+            "label", symmetrize(edges), "sym", False, None,
+        ),
+        "lpa_directed": (
+            lambda **kw: label_propagation(
+                spark, edges, max_iter=10, directed=True, **kw
+            ),
+            "label", edges.select("src", "dst"), "directed", False, None,
+        ),
+        "sssp": (
+            lambda **kw: sssp(spark, edges, source, **kw),
+            "distance", edges, "directed-w", True, float("inf"),
+        ),
+    }
+    for name, (run, col, store_edges, tag, weighted, iso_value) in cases.items():
+        base, _ = run(num_partitions=4)
+        want = {r["id"]: r[col] for r in base.collect()}
+        assert not set(isolated) & set(want)
+        for iso in isolated:
+            want[iso] = iso if iso_value is None else iso_value
+        with graph_blocks(
+            spark, store_edges, 4, weighted=weighted, tag=tag
+        ) as store:
+            for store_kw in ({"blocks": store}, {"num_partitions": 4}):
+                res, _ = run(vertices=vdf, **store_kw)
+                got = {r["id"]: r[col] for r in res.collect()}
+                assert got == want, (name, sorted(store_kw))

@@ -87,7 +87,6 @@ def test_strict_delta_still_raises_on_unknown_target(spark, tmp_path):
             strict=True,
             state_store_dir=str(tmp_path / "strictstore"),
             n_buckets=8,
-            monotone="min",
         )
 
 
@@ -174,14 +173,14 @@ def test_delta_store_empty_read_keeps_value_type(spark, tmp_path):
     """ADVICE r4: the empty-manifest fallback hardcoded `value double`;
     a restored long-valued store (CC labels) must produce long."""
     root = str(tmp_path / "dstore")
-    s1 = DeltaStateStore(spark, root, n_buckets=4, monotone="min")
+    s1 = DeltaStateStore(spark, root, n_buckets=4)
     state = spark.createDataFrame(
         [(1, 10), (2, 20)], "id long, value long"
     )
     s1.init(state)
     manifest = {b: list(vs) for b, vs in s1.manifest.items()}
 
-    s2 = DeltaStateStore(spark, root, n_buckets=4, monotone="min")
+    s2 = DeltaStateStore(spark, root, n_buckets=4)
     s2.restore(manifest)
     empty = s2.read_reconciled(buckets=[])
     assert dict(empty.dtypes)["value"] == "bigint"
@@ -244,7 +243,7 @@ def test_delta_restore_raises_on_unreadable_store_root(spark, tmp_path):
     from pcgraph.statestore import DeltaStateStore
 
     store = DeltaStateStore(
-        spark, str(tmp_path / "does_not_exist"), n_buckets=4, monotone="min"
+        spark, str(tmp_path / "does_not_exist"), n_buckets=4
     )
     with pytest.raises(FileNotFoundError, match="state_store_dir"):
         store.restore({"0": [0], "1": [0]})
