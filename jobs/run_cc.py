@@ -23,7 +23,10 @@ def main() -> None:
     ap.add_argument("--max-iter", type=int, default=200)
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--checkpoint-every", type=int, default=1)
-    ap.add_argument("--resume-from", default=None)
+    ap.add_argument("--resume-from", default=None,
+                    help="continue from the newest committed round under "
+                         "DIR, in the state backend that committed it "
+                         "(--incremental is not needed)")
     ap.add_argument("--store-dir", default=None,
                     help="block-store directory (built on first use, "
                          "reused after); default: a temp store deleted "
@@ -32,7 +35,8 @@ def main() -> None:
     ap.add_argument("--incremental", action="store_true",
                     help="delta state store: each round appends only its "
                          "changed labels, so sparse tail rounds cost "
-                         "O(changed), not O(|V|)")
+                         "O(changed), not O(|V|); a resumed run takes its "
+                         "backend from the checkpoint instead")
     ap.add_argument("--state-store-dir", default=None)
     args = ap.parse_args()
 

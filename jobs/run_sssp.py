@@ -10,6 +10,8 @@ Usage:
 each wavefront round appends only the distances it improved
 (O(changed), not O(|V|)); on a cluster pass a shared-FS
 --state-store-dir (defaults under --checkpoint-dir when set).
+``--resume-from`` continues in the backend that committed the round,
+so a resumed run needs no ``--incremental``.
 """
 
 from __future__ import annotations
@@ -29,11 +31,14 @@ def main() -> None:
     ap.add_argument("--max-iter", type=int, default=200)
     ap.add_argument("--salt-threshold", type=int, default=None)
     ap.add_argument("--checkpoint-dir", default=None)
-    ap.add_argument("--resume-from", default=None)
+    ap.add_argument("--resume-from", default=None,
+                    help="continue from the newest committed round under "
+                         "DIR, in the state backend that committed it")
     ap.add_argument("--store-dir", default=None)
     ap.add_argument("--incremental", action="store_true",
                     help="delta state store: each round appends only the "
-                         "distances it improved (O(changed), not O(|V|))")
+                         "distances it improved (O(changed), not O(|V|)); "
+                         "a resumed run takes its backend from the checkpoint")
     ap.add_argument("--state-store-dir", default=None)
     args = ap.parse_args()
 

@@ -65,25 +65,16 @@ def run_min_propagation(
     engine = PCEngine(
         spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
     )
-    start_step = 0
-    resume_manifest = None
-    # the engine derives the initial frontier from the state it embeds
-    frontier = None
     resumed = engine.resume(resume_from) if resume_from else None
-    if resumed is not None:
-        state, frontier, meta = resumed
-        start_step = int(meta["superstep"])
-        if "manifest" in meta:  # round was committed by the delta store
-            incremental = True
-            resume_manifest = meta["manifest"]
-            n_buckets = int(meta.get("n_buckets", n_buckets))
-            state_store_dir = state_store_dir or meta["state_store_dir_resolved"]
-    else:
-        state = vertex_census(spark, blocks, vertices).select(
-            "id", init_value.alias("value"), init_changed.alias("changed")
-        )
+    state = None if resumed else vertex_census(spark, blocks, vertices).select(
+        "id", init_value.alias("value"), init_changed.alias("changed")
+    )
     tmp_store = None
-    if incremental and state_store_dir is None:
+    # A resumed run continues in the backend that committed its round;
+    # a caller's state_store_dir then only relocates a delta store.
+    if resumed is None and not incremental:
+        state_store_dir = None
+    elif resumed is None and state_store_dir is None:
         state_store_dir = default_state_dir(spark, engine.checkpoint_dir, algorithm)
         # without a checkpoint dir no round meta points at the store: it
         # is a temp dir this call owns
@@ -93,7 +84,6 @@ def run_min_propagation(
         state, history = engine.run(
             blocks=blocks,
             state=state,
-            frontier=frontier,
             kernel=kernel,
             msg_schema=msg_schema,
             update=min_fold_update,
@@ -104,16 +94,15 @@ def run_min_propagation(
             ],
             metrics_post=lambda obs, step: {"active": int(obs["changed"] or 0)},
             max_iter=max_iter,
-            start_step=start_step,
             algorithm=algorithm,
             strict=strict,
             # min-fold + strict improvement is exactly the delta store's
             # merge contract (engine.run docstring)
-            state_store_dir=state_store_dir if incremental else None,
+            state_store_dir=state_store_dir,
             n_buckets=n_buckets,
-            resume_manifest=resume_manifest,
             max_versions=max_versions,
             post_superstep=post_superstep,
+            resumed=resumed,
         )
         if tmp_store is not None:  # the result reads the store
             state = state.localCheckpoint(eager=True)

@@ -152,15 +152,10 @@ def label_propagation(
             spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
         )
 
-        start_step = 0
         resumed = engine.resume(resume_from) if resume_from else None
-        if resumed is not None:
-            state, _, meta = resumed
-            start_step = int(meta["superstep"])
-        else:
-            state = vertex_census(spark, blocks, vertices).select(
-                "id", F.col("id").alias("value"), F.lit(True).alias("changed")
-            )
+        state = None if resumed else vertex_census(spark, blocks, vertices).select(
+            "id", F.col("id").alias("value"), F.lit(True).alias("changed")
+        )
 
         # The kernel already emits per-partition partial histograms (the
         # pandas groupby above), so Catalyst's map-side combine has nothing
@@ -183,7 +178,7 @@ def label_propagation(
         )
         agg_n = _fold_width(blocks.n_edges, n_shuffle, bypass)
 
-        # Superstep-1 strength reduction (undirected fresh runs): with
+        # Superstep-1 strength reduction (undirected runs): with
         # identity initialization (label(v)=v) on the deduplicated
         # symmetrized graph, every (dst, label) count is exactly 1, so the
         # argmax + smallest-label tie-break collapses to min(src) over the
@@ -197,11 +192,10 @@ def label_propagation(
         # materializes, observes, records and commits it like any other.
         # Directed mode keeps the generic path: the raw edge table may be a
         # multigraph, where duplicate edges legitimately contribute counts
-        # > 1.
-        reduce_round1 = resumed is None and not directed
+        # > 1.  A resumed run starts at superstep 2 or later.
 
         def update(state_df, msgs, step):
-            if step == 1 and reduce_round1:
+            if step == 1 and not directed:
                 return reduced_round1(state_df)
             # string expressions: a handful of py4j round-trips per round
             # instead of one per Column op (see pagerank.update)
@@ -265,7 +259,6 @@ def label_propagation(
         state, history = engine.run(
             blocks=blocks,
             state=state,
-            frontier=None,
             kernel=lp_kernel,
             msg_schema="dst long, label long, cnt int",
             update=update,
@@ -273,8 +266,8 @@ def label_propagation(
             metrics_exprs=metrics_exprs,
             metrics_post=metrics_post,
             max_iter=max_iter,
-            start_step=start_step,
             algorithm="label_propagation",
             post_superstep=post_superstep,
+            resumed=resumed,
         )
         return state.select("id", F.col("value").alias("label")), history

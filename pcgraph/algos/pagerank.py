@@ -100,14 +100,12 @@ def pagerank(
             spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         )
 
-        start_step = 0
         loop_state = {"dangling": 0.0}
+        state = None
         resumed = engine.resume(resume_from) if resume_from else None
         if resumed is not None:
-            state, _, meta = resumed
-            start_step = int(meta["superstep"])
-            n_vertices = int(meta["n_vertices"])
-            loop_state["dangling"] = float(meta["dangling"])
+            n_vertices = int(resumed["n_vertices"])
+            loop_state["dangling"] = float(resumed["dangling"])
         else:
             vset = vertex_census(spark, blocks, vertices)
             # census scalars were recorded at store build — init needs no
@@ -171,7 +169,6 @@ def pagerank(
         state, history = engine.run(
             blocks=blocks,
             state=state,
-            frontier=None,
             kernel=pr_kernel,
             msg_schema="dst long, msg double",
             update=update,
@@ -179,11 +176,11 @@ def pagerank(
             metrics_exprs=metrics_exprs,
             metrics_post=metrics_post,
             max_iter=max_iter,
-            start_step=start_step,
             algorithm="pagerank",
             # prev_pr exists only for the L1 observe — never checkpointed
             state_cols=["id", "pr", "out_deg"],
             post_superstep=post_superstep,
             strict=strict,
+            resumed=resumed,
         )
         return state.select("id", F.col("pr").alias("pagerank")), history

@@ -68,10 +68,10 @@ def triangles_df(edges: DataFrame) -> DataFrame:
     # The oriented edge set feeds all three join legs; the legs' shuffle
     # stages run concurrently, so without an eagerly-filled cache each
     # leg re-executes the whole canonicalize+degree+orient subtree
-    # (measured: duplicate 13 MB union/distinct stages per run).  The
-    # cache is |E|-bounded and computed fresh per invocation.
-    oriented = oriented.persist()
-    oriented.count()
+    # (measured: duplicate 13 MB union/distinct stages per run).  A
+    # local checkpoint, not a cache, so no entry outlives the call (the
+    # near_duplicates pattern); its |E|-bounded blocks go with the result.
+    oriented = oriented.localCheckpoint(eager=True)
     e1 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     e2 = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     e3 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("c"))

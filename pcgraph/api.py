@@ -171,7 +171,6 @@ class PCGraph:
         state, history = engine.run(
             blocks=self.blocks,
             state=state,
-            frontier=None,  # derived from the initial state
             kernel=kernel,
             msg_schema=msg_schema,
             update=update,

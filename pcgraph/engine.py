@@ -52,10 +52,12 @@ Lineage strategy of the in-memory backend (measured; docs/PERF.md):
     only free them at some later GC, and a long loop would otherwise
     hold every round's ~|V| object-form rows in block storage.
 
-Every ``checkpoint_every`` rounds state+frontier go to Parquet with a
-``_meta.json`` carrying superstep number, metrics, per-partition
-frontier counts and a parent pointer, so runs resume mid-iteration
-(north rule: resumable with per-partition lineage).
+Every ``checkpoint_every`` rounds the state goes to Parquet (or the
+delta store) with a ``_meta.json`` carrying superstep number, metrics,
+per-partition frontier counts and a parent pointer, so runs resume
+mid-iteration (north rule: resumable with per-partition lineage).  The
+frontier is derived from the state, on resume as on a fresh run (the
+reference's ``closeWith(delta, delta)``).
 """
 
 from __future__ import annotations
@@ -218,7 +220,7 @@ class _MemoryState:
     messages into the full state."""
 
     def __init__(self, engine, state, update, frontier_fn, metrics_exprs,
-                 state_cols):
+                 state_cols, resumed):
         # The initial state is embedded as given — a census scan, the
         # census joined with ``vertices``, or a resumed round's parquet
         # read — with no checkpoint of its own.  Its subtree appears
@@ -230,7 +232,9 @@ class _MemoryState:
         # checkpointed merge output (no Exchange, no Sort) — the
         # lineage cut that keeps rounds structurally identical.
         self.engine = engine
-        self.state = state
+        self.state = (
+            engine.spark.read.parquet(resumed["state_path"]) if resumed else state
+        )
         self.next: DataFrame | None = None
         self.update = update
         self.frontier_fn = frontier_fn
@@ -288,6 +292,8 @@ class _MemoryState:
         return rnd.frontier.count()
 
     def meta(self, step: int) -> dict:
+        # RELATIVE to checkpoint_dir, so a checkpoint directory can be
+        # relocated (or mounted elsewhere) and still resume
         rel = os.path.basename(_round_dir(self.engine.checkpoint_dir, step))
         return {"state_path": os.path.join(rel, "state.parquet")}
 
@@ -336,7 +342,7 @@ class _DeltaState:
     per-bucket version lists bounded."""
 
     def __init__(self, engine, state, msg_schema, metrics_exprs, root,
-                 n_buckets, max_versions, resume_manifest):
+                 n_buckets, max_versions, resumed):
         from pyspark.sql.types import StructType
 
         self.engine = engine
@@ -344,7 +350,7 @@ class _DeltaState:
             engine.spark, root, n_buckets, max_versions=max_versions
         )
         self.metrics_exprs = metrics_exprs
-        self.resumed = resume_manifest is not None
+        self.resumed = resumed
         # Canonicalize the VALUE type to what every LATER version will
         # hold: delta rows carry the folded message as `value`, so v0
         # must already use the message's type — an int32-valued vertex
@@ -354,8 +360,8 @@ class _DeltaState:
         # it, and xxhash64(int32) != xxhash64(long) for the same value
         # (bucket_expr casts internally for the same reason).
         msg_type = StructType.fromDDL(msg_schema)["msg"].dataType
-        if self.resumed:
-            self.store.restore(resume_manifest)
+        if resumed:
+            self.store.restore(resumed["manifest"])
         else:
             canon = [
                 F.col("id"),
@@ -368,12 +374,13 @@ class _DeltaState:
         self.folded: DataFrame | None = None
 
     def initial_frontier(self, frontier_fn) -> DataFrame:
-        if self.resumed:
-            raise ValueError(
-                "incremental resume requires the committed round's "
-                "frontier (engine.resume provides it)"
-            )
-        return frontier_fn(self.store.read_version(0))
+        if not self.resumed:
+            return frontier_fn(self.store.read_version(0))
+        # a committed round's frontier is its own delta version, which
+        # its manifest keeps iff the round wrote rows (``advance``)
+        vid = self.resumed["store_version"]
+        wrote = any(vid in vs for vs in self.store.manifest.values())
+        return self.store.read_version(vid) if wrote else self.empty_frontier
 
     def advance(self, msgs, step, algorithm, strict, durable) -> _Round:
         store = self.store
@@ -505,8 +512,7 @@ class PCEngine:
     def run(
         self,
         blocks: GraphBlocks,
-        state: DataFrame,
-        frontier: DataFrame | None,
+        state: DataFrame | None,
         kernel: Callable,
         msg_schema: str,
         update: Callable[[DataFrame, DataFrame, int], DataFrame],
@@ -514,7 +520,6 @@ class PCEngine:
         max_iter: int,
         metrics_exprs: list | None = None,
         metrics_post: Callable[[dict, int], dict] | None = None,
-        start_step: int = 0,
         algorithm: str = "custom",
         strict: bool = False,
         state_cols: list[str] | None = None,
@@ -522,14 +527,19 @@ class PCEngine:
         post_superstep: Callable[[int, dict], None] | None = None,
         state_store_dir: str | None = None,
         n_buckets: int = 256,
-        resume_manifest: dict | None = None,
         max_versions: int = 8,
+        resumed: dict | None = None,
     ) -> tuple[DataFrame, list[dict]]:
         """Iterate to convergence.
 
         ``state`` is embedded in round 1 as given: the engine takes no
         checkpoint of the initial state (``_MemoryState``), and a run
         that ends before any round materializes it on return.
+
+        ``resumed`` (the meta ``resume`` returns) continues that
+        committed round in the backend that committed it: ``state`` is
+        ignored, and ``state_store_dir``, if given, relocates the delta
+        store.  Either way the first frontier is derived from the state.
 
         ``state_store_dir`` keeps the state in a DeltaStateStore instead
         of the per-round checkpoint: the algorithm's merge must be
@@ -543,8 +553,6 @@ class PCEngine:
         min-reconciliation on read and per-bucket compaction
         (``max_versions``) bounding read amplification.  On a cluster
         the directory must be on shared storage (hdfs/s3a).
-        ``resume_manifest`` (from a committed round's meta) resumes
-        against an existing store.
 
         ``state_cols``: columns to RETAIN in the per-round materialized
         state.  Metric-only columns (e.g. PageRank's prev_pr, consumed
@@ -588,22 +596,28 @@ class PCEngine:
         # F.broadcast hints (mirror route, delta sparse fold) are
         # unaffected by the threshold.
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        # a resumed run continues in the backend that committed its round
+        if resumed and "manifest" in resumed:
+            state_store_dir = state_store_dir or resumed["state_store_dir"]
+            n_buckets = int(resumed.get("n_buckets", n_buckets))
+        elif resumed:
+            state_store_dir = None
         try:
             if state_store_dir is None:
                 backend = _MemoryState(
                     self, state, update, frontier_fn, metrics_exprs,
-                    state_cols,
+                    state_cols, resumed,
                 )
             else:
                 backend = _DeltaState(
                     self, state, msg_schema, metrics_exprs, state_store_dir,
-                    n_buckets, max_versions, resume_manifest,
+                    n_buckets, max_versions, resumed,
                 )
-            if frontier is None:
-                frontier = backend.initial_frontier(frontier_fn)
+            frontier = backend.initial_frontier(frontier_fn)
             return self._drive(
                 blocks, backend, frontier, kernel, msg_schema, max_iter,
-                metrics_exprs, metrics_post, start_step, algorithm,
+                metrics_exprs, metrics_post,
+                int(resumed["superstep"]) if resumed else 0, algorithm,
                 strict, pre_superstep, post_superstep,
             )
         finally:
@@ -779,29 +793,18 @@ class PCEngine:
     def _commit_round(
         self, blocks: GraphBlocks, step: int, frontier: DataFrame, meta: dict
     ) -> None:
-        """Write frontier + meta for a checkpointed round (the backend
-        has already persisted the state and put its pointer in ``meta``:
-        a ``state_path`` or a delta-store ``manifest``); the atomic meta
+        """Write the meta of a checkpointed round (the backend has
+        already persisted the state and put its pointer in ``meta``: a
+        ``state_path`` or a delta-store ``manifest``); the atomic meta
         rename is the commit marker."""
         rdir = _round_dir(self.checkpoint_dir, step)
-        frontier.write.mode("overwrite").parquet(
-            os.path.join(rdir, "frontier.parquet")
-        )
         meta = dict(meta)
         pp = blocks.route(frontier).groupBy("partition_id").count().collect()
         meta["frontier_rows_per_partition"] = {
             int(r["partition_id"]): int(r["count"]) for r in pp
         }
         parent = step - self.checkpoint_every
-        # Paths are stored RELATIVE to checkpoint_dir so a checkpoint
-        # directory can be relocated (or live on a shared filesystem
-        # mounted at a different path) and still resume.
-        rel = os.path.basename(rdir.rstrip("/"))
-        meta.update(
-            committed=True,
-            parent_round=parent if parent > 0 else None,
-            frontier_path=os.path.join(rel, "frontier.parquet"),
-        )
+        meta.update(committed=True, parent_round=parent if parent > 0 else None)
         # Routed through the Hadoop FileSystem API so checkpoint_dir may
         # be hdfs:// / s3a:// on a cluster (north rule: resumable).
         write_json_atomic(self.spark, os.path.join(rdir, META_NAME), meta)
@@ -821,15 +824,13 @@ class PCEngine:
                     best = meta
         return best
 
-    def resume(self, checkpoint_dir: str) -> tuple[DataFrame, DataFrame, dict] | None:
-        """Load (state, frontier, meta) of the latest committed round.
-        A resumed engine without a ``checkpoint_dir`` of its own keeps
-        checkpointing into ``checkpoint_dir``.
-
-        Delta-store rounds carry a ``manifest`` instead of a
-        ``state_path``; the returned state is the store view at that
-        round (callers pass ``meta['manifest']`` back through
-        ``run(resume_manifest=...)`` to continue incrementally)."""
+    def resume(self, checkpoint_dir: str) -> dict | None:
+        """The meta of the latest committed round, with its
+        ``state_path`` (in-memory rounds) or ``state_store_dir``
+        (delta-store rounds, which carry a ``manifest``) resolved —
+        the record ``run(resumed=...)`` continues from.  A resumed
+        engine without a ``checkpoint_dir`` of its own keeps
+        checkpointing into ``checkpoint_dir``."""
         meta = self.latest_round(checkpoint_dir, self.spark)
         if meta is None:
             return None
@@ -846,16 +847,9 @@ class PCEngine:
             # checkpoint dir); pre-r5 metas lack the key and used the
             # default location.  Older metas' merge-direction key is not
             # read: every delta-store run folds with min.
-            store_root = _abspath(
+            meta["state_store_dir"] = _abspath(
                 meta.get("state_store_dir", "statestore")
             )
-            meta["state_store_dir_resolved"] = store_root
-            store = DeltaStateStore(
-                self.spark, store_root, int(meta.get("n_buckets", 256))
-            )
-            store.restore(meta["manifest"])
-            state = store.read_reconciled()
         else:
-            state = self.spark.read.parquet(_abspath(meta["state_path"]))
-        frontier = self.spark.read.parquet(_abspath(meta["frontier_path"]))
-        return state, frontier, meta
+            meta["state_path"] = _abspath(meta["state_path"])
+        return meta

@@ -26,8 +26,9 @@ version order is immaterial:
     O(changed);
   * per-partition lineage (north rule): the manifest is persisted in
     every committed round's ``_meta.json``, so resume reconstructs the
-    exact bucket -> versions view of that round; superseded directories
-    are swept only once no committed round references them.
+    exact bucket -> versions view of that round.  Dirs compaction
+    retires are swept at the next commit, so only the newest committed
+    round of a compacted run is resumable (``restore`` refuses older).
 
 Appending only changed rows, not rewriting every bucket a round's
 messages touch, is what makes rounds O(changed): messages from even a
@@ -156,25 +157,26 @@ class DeltaStateStore:
             max((v for vs in self.manifest.values() for v in vs), default=-1)
             + 1
         )
+        # Every listed v=…/bucket=… dir must exist (one listing per
+        # version): failing here names the path, where a blind restore
+        # would surface later as an opaque read error (ADVICE r5).
+        for v in sorted({v for vs in self.manifest.values() for v in vs}):
+            gone = {b for b, vs in self.manifest.items() if v in vs}
+            gone -= set(self._written_buckets(v))
+            if gone:
+                raise FileNotFoundError(
+                    f"delta state store restore: {self._bdir(v, min(gone))!r} "
+                    "is listed in the committed manifest but missing: a "
+                    "newer round's compaction removed it (only the newest "
+                    "committed round of a compacted run can be resumed), "
+                    "or the state_store_dir is wrong"
+                )
+        if not self.manifest:
+            return
         # one parquet-footer read re-establishes the canonical value type
-        for b, vs in sorted(self.manifest.items()):
-            for v in vs:
-                try:
-                    schema = self.spark.read.parquet(self._bdir(v, b)).schema
-                    self._value_type = schema["value"].dataType.simpleString()
-                    return
-                except Exception:
-                    continue
-        if self.manifest:
-            # Every referenced version dir was unreadable: the store
-            # root is wrong or missing.  Failing here names the path;
-            # silently restoring with _value_type=None would surface
-            # much later as an opaque read error (ADVICE r5).
-            raise FileNotFoundError(
-                f"delta state store restore: no version directory listed "
-                f"in the manifest is readable under {self.root!r} — wrong "
-                "or missing state_store_dir?"
-            )
+        b, vs = min(self.manifest.items())
+        schema = self.spark.read.parquet(self._bdir(vs[0], b)).schema
+        self._value_type = schema["value"].dataType.simpleString()
 
     # ------------------------------------------------------------------
     def read_buckets_raw(self, buckets: list[int]) -> DataFrame | None:

@@ -226,8 +226,12 @@ def test_steady_round_job_counts_are_pinned(spark, tmp_path):
     """The work a steady superstep does, counted in Spark jobs: one job
     per PageRank round (the state checkpoint), and six per delta-store
     CC round (kernel-running fold count, active-bucket collect, delta
-    write and the store's parquet listings/reads).  A change to the
-    round driver that adds an action per round fails here."""
+    write and the store's parquet listings/reads).  A durable round
+    (``checkpoint_dir`` set) adds its commit: the per-partition
+    frontier count, plus the state parquet's read-back listing on the
+    in-memory backend — 3 jobs for PageRank, 7 for delta-store CC; the
+    frontier itself is not written.  A change to the round driver that
+    adds an action per round fails here."""
     from pcgraph.algos.cc import connected_components
     from pcgraph.algos.pagerank import pagerank
 
@@ -249,6 +253,25 @@ def test_steady_round_job_counts_are_pinned(spark, tmp_path):
     )
     assert len(cc) > 3, cc
     assert cc[2] == cc[3] == 6, cc
+
+    pr_durable = _jobs_per_round(
+        spark,
+        lambda hook: pagerank(
+            spark, edges, num_partitions=4, max_iter=4, post_superstep=hook,
+            checkpoint_dir=str(tmp_path / "pr_ckpt"),
+        ),
+    )
+    assert pr_durable[2] == pr_durable[3] == 3, pr_durable
+
+    cc_durable = _jobs_per_round(
+        spark,
+        lambda hook: connected_components(
+            spark, edges, num_partitions=4, incremental=True, n_buckets=8,
+            checkpoint_dir=str(tmp_path / "cc_ckpt"), post_superstep=hook,
+        ),
+    )
+    assert len(cc_durable) > 3, cc_durable
+    assert cc_durable[2] == cc_durable[3] == 7, cc_durable
 
 
 def test_kernel_stage_takes_cached_udf_path(spark, tmp_path, monkeypatch):
@@ -308,7 +331,6 @@ def test_failed_round_releases_persisted_frames(spark, tmp_path, backend):
         PCEngine(spark).run(
             blocks=blocks,
             state=state,
-            frontier=None,
             kernel=kernel,
             msg_schema="dst long, msg long",
             update=lambda s, m, i: s.select("id", "value", "changed"),

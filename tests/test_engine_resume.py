@@ -2,33 +2,85 @@ import json
 import os
 import shutil
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from pcgraph import fixtures
 from pcgraph.algos.cc import connected_components
 from pcgraph.algos.pagerank import pagerank
+from pcgraph.algos.sssp import sssp
 from pcgraph.engine import PCEngine
 
 
-def test_cc_resume_equals_uninterrupted(spark, tmp_path):
-    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=120))
+@pytest.mark.parametrize(
+    "algo,incremental",
+    [("cc", False), ("cc", True), ("sssp", True)],
+    ids=["cc-memory", "cc-delta", "sssp-delta"],
+)
+def test_cc_resume_equals_uninterrupted(spark, tmp_path, algo, incremental):
+    """Drop every round after round 2 and resume: the continuation
+    equals the uninterrupted run and starts at superstep 3, on both
+    backends.  The resumed call does not pass ``incremental``: a run
+    continues in the backend that committed its round (the delta store
+    at its default ``max_versions`` keeps every mid-run round intact)."""
+    if algo == "cc":
+        edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=120))
+
+        def run(**kw):
+            return connected_components(spark, edges, num_partitions=4, **kw)
+    else:
+        edges = fixtures.to_spark_edges(spark, _weighted_chain_graph())
+
+        def run(**kw):
+            return sssp(spark, edges, source=0, num_partitions=4, **kw)
+
     ckpt = str(tmp_path / "ckpt")
-    full, _ = connected_components(
-        spark, edges, num_partitions=4, checkpoint_dir=ckpt
-    )
-    full_rows = {r["id"]: r["component"] for r in full.collect()}
+    full, _ = run(checkpoint_dir=ckpt, incremental=incremental)
+    full_rows = sorted(tuple(r) for r in full.collect())
 
     # Simulate a crash: drop everything after round 2, resume.
-    rounds = sorted(os.listdir(ckpt))
+    rounds = sorted(n for n in os.listdir(ckpt) if n.startswith("round="))
     assert len(rounds) >= 3, rounds
     for name in rounds[2:]:
         shutil.rmtree(os.path.join(ckpt, name))
-    resumed, history = connected_components(
-        spark, edges, num_partitions=4, resume_from=ckpt
-    )
-    resumed_rows = {r["id"]: r["component"] for r in resumed.collect()}
-    assert resumed_rows == full_rows
+    resumed, history = run(resume_from=ckpt)
+    assert sorted(tuple(r) for r in resumed.collect()) == full_rows
     assert history[0]["superstep"] == 3  # picked up mid-iteration
+    assert ("active_buckets" in history[0]) == incremental  # same backend
+
+
+def _weighted_chain_graph() -> pd.DataFrame:
+    """A 40-vertex path with random shortcut edges: SSSP from 0 needs
+    several global rounds."""
+    rng = np.random.default_rng(3)
+    src = np.concatenate([np.arange(39), rng.integers(0, 40, 30)])
+    dst = np.concatenate([np.arange(1, 40), rng.integers(0, 40, 30)])
+    pdf = pd.DataFrame(
+        {"src": src, "dst": dst, "weight": rng.uniform(0.5, 2.0, len(src))}
+    )
+    return pdf[pdf.src != pdf.dst].drop_duplicates(["src", "dst"])
+
+
+def test_delta_rewind_past_compaction_is_refused(spark, tmp_path):
+    """Compaction sweeps the dirs an older round's manifest lists, so
+    only the newest committed round of a compacted delta-store run can
+    be resumed: an older one is refused with an error naming the
+    missing dir, not a Spark PATH_NOT_FOUND from inside a round."""
+    edges = fixtures.to_spark_edges(spark, fixtures.skew_graph(n=400))
+    ckpt = str(tmp_path / "ckpt")
+    connected_components(
+        spark, edges, num_partitions=4, incremental=True, max_versions=1,
+        n_buckets=4, checkpoint_dir=ckpt,
+    )
+    rounds = sorted(n for n in os.listdir(ckpt) if n.startswith("round="))
+    assert len(rounds) >= 3, rounds
+    for name in rounds[2:]:
+        shutil.rmtree(os.path.join(ckpt, name))
+    with pytest.raises(
+        FileNotFoundError, match=r"statestore/v=\d+/bucket=\d+'.*compaction removed it"
+    ):
+        connected_components(spark, edges, num_partitions=4, resume_from=ckpt)
 
 
 def test_meta_lineage_chain(spark, tmp_path):
@@ -122,7 +174,6 @@ def test_bucket_rewrite_checkpoint_resume_raises_clear_error(spark, tmp_path):
         "state_store_dir": "statestore",
         "committed": True,
         "parent_round": 1,
-        "frontier_path": "round=00002/frontier.parquet",
     }
     (rdir / "_meta.json").write_text(json.dumps(meta))
     with pytest.raises(ValueError, match="bucket-rewrite"):

@@ -6,7 +6,11 @@ import pandas as pd
 from pcgraph import fixtures
 from pcgraph.algos.labelprop import label_propagation
 from pcgraph.algos.sssp import sssp
-from pcgraph.algos.triangles import triangle_count, triangle_count_per_vertex
+from pcgraph.algos.triangles import (
+    triangle_count,
+    triangle_count_per_vertex,
+    triangles_df,
+)
 
 
 def _lp_oracle(edges_pdf, max_iter=20):
@@ -104,6 +108,18 @@ def test_triangles(spark):
     assert triangle_count(e) == 1
     per_v = {r["id"]: r["triangles"] for r in triangle_count_per_vertex(e).collect()}
     assert per_v == {1: 1, 2: 1, 3: 1}
+
+
+def test_triangles_leave_no_cache_behind(spark):
+    """Repeated ``triangles_df`` calls leave the session's cache as they
+    found it: the oriented edge set feeding the three join legs is a
+    local checkpoint, not a cache entry."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    e = fixtures.to_spark_edges(spark, fixtures.skew_graph(n=300))
+    counts = [triangles_df(e).count() for _ in range(2)]
+    assert counts[0] == counts[1] > 0
+    assert cache.isEmpty()
 
 
 def test_triangles_random_vs_numpy(spark):

@@ -78,7 +78,6 @@ def test_strict_delta_still_raises_on_unknown_target(spark, tmp_path):
         engine.run(
             blocks=blocks,
             state=state,
-            frontier=None,
             kernel=kernel,
             msg_schema="dst long, msg long",
             update=lambda s, m, i: s,
