@@ -23,12 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..partition import (
-    GraphBlocks,
-    block_edge_source_index,
-    graph_blocks,
-    unpack_block,
-)
+from ..partition import GraphBlocks, graph_blocks, kernel_block
 from ._minprop import run_min_propagation
 
 _I64_MAX = np.iinfo(np.int64).max
@@ -55,20 +50,9 @@ def cc_kernel(key, fpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
     block's edges until a local fixpoint; message every node whose
     component improved.
     """
-    from ..workerenv import optimize_worker
-
-    optimize_worker()
-    if len(bpdf) == 0 or len(fpdf) == 0:
-        return pd.DataFrame({"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="int64")})
-    nodes, indptr, edst, _ = unpack_block(bpdf)
-    esrc = block_edge_source_index(indptr)
-
+    nodes, esrc, edst, _, pos, vals = kernel_block(fpdf, bpdf, np.int64)
     val = np.full(len(nodes), _I64_MAX, dtype=np.int64)
-    fids = fpdf["id"].to_numpy(dtype=np.int64)
-    fvals = fpdf["value"].to_numpy(dtype=np.int64)
-    pos = np.searchsorted(nodes, fids)
-    ok = (pos < len(nodes)) & (nodes[np.clip(pos, 0, len(nodes) - 1)] == fids)
-    np.minimum.at(val, pos[ok], fvals[ok])
+    np.minimum.at(val, pos, vals)
     init = val.copy()
 
     while True:  # local supersteps, each fully vectorized

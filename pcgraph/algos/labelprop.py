@@ -26,13 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import PCEngine
-from ..partition import (
-    GraphBlocks,
-    block_edge_source_index,
-    graph_blocks,
-    unpack_block,
-    vertex_census,
-)
+from ..partition import GraphBlocks, graph_blocks, kernel_block, vertex_census
 
 
 # Target histogram entries per fold task (see _fold_width): ~2M
@@ -71,37 +65,17 @@ def _fold_width(est_partials: int, n_shuffle: int, bypass: int) -> int:
 
 def lp_kernel(key, fpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
     """Emit per-partition (dst, label, cnt) partial histograms."""
-    from ..workerenv import optimize_worker
-
-    optimize_worker()
-    empty = pd.DataFrame(
-        {
-            "dst": pd.Series(dtype="int64"),
-            "label": pd.Series(dtype="int64"),
-            "cnt": pd.Series(dtype="int32"),
-        }
-    )
-    if len(bpdf) == 0 or len(fpdf) == 0:
-        return empty
-    nodes, indptr, edst, _ = unpack_block(bpdf)
-    esrc = block_edge_source_index(indptr)
-
+    nodes, esrc, edst, _, pos, vals = kernel_block(fpdf, bpdf, np.int64)
     # Labels ARE vertex ids, and production ids are xxhash64-derived —
     # negative about half the time (derive.py:36-41).  A "-1 means no
     # label" sentinel silently drops every negative-id contribution, so
     # presence is tracked in an explicit boolean mask instead.
     label = np.zeros(len(nodes), dtype=np.int64)
     present = np.zeros(len(nodes), dtype=bool)
-    fids = fpdf["id"].to_numpy(dtype=np.int64)
-    fvals = fpdf["value"].to_numpy(dtype=np.int64)
-    pos = np.searchsorted(nodes, fids)
-    ok = (pos < len(nodes)) & (nodes[np.clip(pos, 0, len(nodes) - 1)] == fids)
-    label[pos[ok]] = fvals[ok]
-    present[pos[ok]] = True
+    label[pos] = vals
+    present[pos] = True
 
     active = present[esrc]
-    if not active.any():
-        return empty
     pairs = pd.DataFrame({"dst": nodes[edst[active]], "label": label[esrc[active]]})
     counts = pairs.groupby(["dst", "label"], sort=False).size().reset_index(name="cnt")
     # int32 is ample for a per-partition count (bounded by the block's

@@ -26,43 +26,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import PCEngine
-from ..partition import (
-    GraphBlocks,
-    block_edge_source_index,
-    graph_blocks,
-    unpack_block,
-    vertex_census,
-)
+from ..partition import GraphBlocks, graph_blocks, kernel_block, vertex_census
 
 
 def pr_kernel(key, fpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
     """Scatter pr/outdeg contributions along block edges, pre-summed per
     destination (one message per (partition, dst) instead of per edge)."""
-    from ..workerenv import optimize_worker
-
-    optimize_worker()
-    empty = pd.DataFrame(
-        {"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="float64")}
-    )
-    if len(bpdf) == 0 or len(fpdf) == 0:
-        return empty
-    nodes, indptr, edst, w = unpack_block(bpdf)
-    esrc = block_edge_source_index(indptr)
-
+    nodes, esrc, edst, w, pos, vals = kernel_block(fpdf, bpdf, np.float64)
     val = np.zeros(len(nodes), dtype=np.float64)
-    fids = fpdf["id"].to_numpy(dtype=np.int64)
-    fvals = fpdf["value"].to_numpy(dtype=np.float64)
-    pos = np.searchsorted(nodes, fids)
-    ok = (pos < len(nodes)) & (nodes[np.clip(pos, 0, len(nodes) - 1)] == fids)
-    val[pos[ok]] = fvals[ok]
+    val[pos] = vals
 
     contrib = val[esrc]
     if len(w) == len(contrib):
         contrib = contrib * w
+    # np.bincount returns int64 for an empty ``edst`` whatever the
+    # weights: cast, so an empty block still matches ``msg double``
     sums = np.bincount(edst, weights=contrib, minlength=len(nodes))
+    sums = sums.astype(np.float64, copy=False)
     nz = sums != 0.0
-    if not nz.any():
-        return empty
     return pd.DataFrame({"dst": nodes[nz], "msg": sums[nz]})
 
 

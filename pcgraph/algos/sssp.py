@@ -18,12 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..partition import (
-    GraphBlocks,
-    block_edge_source_index,
-    graph_blocks,
-    unpack_block,
-)
+from ..partition import GraphBlocks, graph_blocks, kernel_block
 from ._minprop import run_min_propagation
 
 _INF = float("inf")
@@ -34,23 +29,9 @@ def sssp_kernel(key, fpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
     over the block's weighted edges), the analog of the reference's local
     Dijkstra (PCSingleSourceShortestPaths.java:99-165) — same local
     fixpoint, numpy instead of a binary heap."""
-    from ..workerenv import optimize_worker
-
-    optimize_worker()
-    empty = pd.DataFrame(
-        {"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="float64")}
-    )
-    if len(bpdf) == 0 or len(fpdf) == 0:
-        return empty
-    nodes, indptr, edst, w = unpack_block(bpdf)
-    esrc = block_edge_source_index(indptr)
-
+    nodes, esrc, edst, w, pos, vals = kernel_block(fpdf, bpdf, np.float64)
     dist = np.full(len(nodes), _INF, dtype=np.float64)
-    fids = fpdf["id"].to_numpy(dtype=np.int64)
-    fvals = fpdf["value"].to_numpy(dtype=np.float64)
-    pos = np.searchsorted(nodes, fids)
-    ok = (pos < len(nodes)) & (nodes[np.clip(pos, 0, len(nodes) - 1)] == fids)
-    np.minimum.at(dist, pos[ok], fvals[ok])
+    np.minimum.at(dist, pos, vals)
     init = dist.copy()
 
     while True:  # local supersteps: relax all edges, fully vectorized

@@ -8,7 +8,8 @@ The reference's entire extension surface is two abstract classes —
 
   * ``kernel(key, frontier_pdf, block_pdf) -> messages_pdf`` — the
     partition process function (vectorized pandas, many local supersteps
-    per call);
+    per call), which starts with ``partition.kernel_block`` to get its
+    decoded block with the frontier placed on it;
   * ``msg_schema`` — DDL schema of the message DataFrame;
   * a *fold spec*: either one of the built-in folds ("min", "max",
     "sum") applied to the ``msg`` column, or a custom
@@ -104,6 +105,12 @@ class PCGraph:
         vertex update is ``value' = fold(value, fold(messages))`` with
         emit-on-strict-change semantics (VertexUpdateFunction.java:
         85-93); pass ``update`` for anything richer.
+
+        ``kernel`` starts with ``kernel_block(frontier_pdf, block_pdf,
+        value_dtype)`` (``pcgraph.partition``): the partition's nodes,
+        per-edge ``esrc``/``edst`` local indices and weights, plus the
+        local index ``pos`` and value ``vals`` of each frontier row the
+        block holds — the analog of the reference's ``RichEdge`` join.
 
         ``kernel`` may declare a 4th parameter to receive the 1-based
         superstep number — ``kernel(key, frontier_pdf, block_pdf,

@@ -36,6 +36,48 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
+def _topk(q: DataFrame, c: DataFrame, k: int, on: str | None = None) -> DataFrame:
+    """Exact cosine top-k of every query over its candidates:
+    DataFrame[query_id, neighbor_id, rank].
+
+    ``q`` is ``(query_id, qv[, on])`` and ``c`` is ``(neighbor_id,
+    cv[, on])``.  ``on=None`` scores every pair (cross join); otherwise
+    only the pairs that share ``on``.  Self-matches are excluded; rank
+    ties broken by neighbor id (deterministic).
+    """
+    # Norms are hoisted BEFORE the join: computed once per vector
+    # instead of once per (query, candidate) pair — bit-identical
+    # (the per-pair expression was norm(qv) * norm(cv); the factors are
+    # per-vector constants), and it removes two 64-element folds from
+    # every scored pair (higher-order array functions are interpreted,
+    # not codegen'd, so per-pair work dominates this operator).
+    q = q.withColumn("qn", _norm(F.col("qv")))
+    c = c.withColumn("cn", _norm(F.col("cv")))
+    # The probe side of an equi-join is broadcast EXPLICITLY: bucketed
+    # search assumes |queries| << |corpus| (the brute-force cross join
+    # is right otherwise), but the planner cannot see that —
+    # ``queries`` is usually a filter over the corpus table and
+    # inherits its size estimate, so at corpus scale the join planned
+    # sort-merge and shuffled the WHOLE corpus by bucket (measured: 0.5
+    # GB of the 0.6 GB a 1M x 64 IVF search shuffled).  With the hint
+    # the corpus is never shuffled: scan -> assign (map-only) ->
+    # broadcast join -> per-partition top-k.
+    pairs = q.crossJoin(c) if on is None else F.broadcast(q).join(c, on)
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
 def cosine_topk_bruteforce(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -48,41 +90,11 @@ def cosine_topk_bruteforce(
     ``queries`` has the same schema as ``embeddings``.  Self-matches are
     excluded; rank ties broken by neighbor id (deterministic).
     """
-    # Norms are hoisted BEFORE the join: computed once per vector
-    # instead of once per (query, candidate) pair — bit-identical
-    # (the per-pair expression was norm(qv) * norm(cv); the factors are
-    # per-vector constants), and it removes two 64-element folds from
-    # every scored pair (higher-order array functions are interpreted,
-    # not codegen'd, so per-pair work dominates this operator).
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(q, c, k)
 
 
 def cosine_topk_bucketed(
@@ -98,42 +110,17 @@ def cosine_topk_bucketed(
     at 100 TB this is the difference between O(|Q|·|C|) and
     O(|Q|·|C|/n_buckets) scanned pairs, with the probe side broadcast
     so the corpus itself is never shuffled."""
-    # per-vector norms hoisted above the join (see cosine_topk_bruteforce)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         F.col(bucket_col).alias("bucket"),
-        _norm(F.col(vec_col)).alias("qn"),
     )
     c = embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         F.col(bucket_col).alias("bucket"),
-        _norm(F.col(vec_col)).alias("cn"),
     )
-    # explicit broadcast of the query side: |queries| << |corpus| is
-    # this operator's contract, and a filtered query set inherits the
-    # corpus table's size estimate, so the planner would otherwise
-    # shuffle the whole corpus by bucket (see cosine_topk_ivf)
-    scored = (
-        F.broadcast(q).join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(q, c, k, on="bucket")
 
 
 def _python_norm(vec: list[float]) -> float:
@@ -333,44 +320,13 @@ def cosine_topk_ivf(
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
     q = _nearest_buckets(q, centroids, n_probe, "query_id", "qv")
-    # per-vector norms hoisted above the bucket join (bit-identical;
-    # see cosine_topk_bruteforce)
-    q = q.withColumn("qn", _norm(F.col("qv")))
-    c = c.withColumn("cn", _norm(F.col("cv")))
-    # The probe side is broadcast EXPLICITLY: IVF search assumes
-    # |queries| << |corpus| (the brute-force cross join is right
-    # otherwise), but the planner cannot see that — ``queries`` is
-    # usually a filter over the corpus table and inherits its size
-    # estimate, so at corpus scale the join planned sort-merge and
-    # shuffled the WHOLE corpus by bucket (measured: 0.5 GB of the
-    # 0.6 GB a 1M x 64 search shuffled).  With the hint the corpus is
-    # never shuffled: scan -> assign (map-only) -> broadcast join ->
-    # per-partition top-k.  No ``.distinct()`` on the candidates: a
-    # corpus vector sits in EXACTLY one bucket and a query's probe
-    # buckets are distinct by construction (slice of a sorted
-    # struct array / row_number <= n_probe), so each (query, neighbor)
-    # pair is scored at most once — the dedup was a full exchange of
-    # every scored candidate for structurally impossible duplicates.
-    scored = (
-        F.broadcast(q).join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv"))
-                / (F.col("qn") * F.col("cn"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    # No ``.distinct()`` on the candidates: a corpus vector sits in
+    # EXACTLY one bucket and a query's probe buckets are distinct by
+    # construction (slice of a sorted struct array), so each (query,
+    # neighbor) pair is scored at most once — the dedup was a full
+    # exchange of every scored candidate for structurally impossible
+    # duplicates.
+    return _topk(q, c, k, on="bucket")
 
 
 def ivf_recall(
@@ -438,7 +394,7 @@ def cosine_near_duplicates(
         v = _nearest_buckets(v, cent, 1, "a_id", "av")
         w = _nearest_buckets(w, cent, 1, "b_id", "bv")
     # per-vector norms hoisted above the pair join (bit-identical;
-    # see cosine_topk_bruteforce)
+    # see _topk)
     v = v.withColumn("an", _norm(F.col("av")))
     w = w.withColumn("bn", _norm(F.col("bv")))
     if n_centroids:

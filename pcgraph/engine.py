@@ -480,8 +480,10 @@ class PCEngine:
       * ``kernel(key, frontier_pdf, block_pdf[, step]) -> messages_pdf``
         — the per-partition vectorized local computation (analog of the
         reference's PartitionProcessFunction.processPartition,
-        PartitionProcessFunction.java:78-89); the optional 4th
-        parameter receives the 1-based superstep number;
+        PartitionProcessFunction.java:78-89); it starts with
+        ``partition.kernel_block``, which decodes the block and places
+        the frontier on it (the reference's RichEdge join); the
+        optional 4th parameter receives the 1-based superstep number;
       * ``msg_schema`` — DDL schema of the messages DataFrame (first
         column must be ``dst``);
       * ``update(state, msgs, step) -> new_state`` — global fold +

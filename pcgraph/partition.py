@@ -78,6 +78,31 @@ def unpack_block(bpdf) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     return out["nodes"], out["indptr"], out["edst"], out["weight"]
 
 
+def kernel_block(fpdf, bpdf, value_dtype):
+    """A kernel's prologue: one partition's decoded block with the
+    frontier placed on it -> (nodes, esrc, edst, weight, pos, vals).
+
+    ``esrc`` is the per-edge local source index (``indptr`` expanded),
+    ``weight`` is empty when the store is unweighted.  ``pos`` is the
+    local index of every frontier row the block holds and ``vals`` its
+    ``value`` read as ``value_dtype``; rows the block lacks are dropped.
+    The analog of the reference's join of each active vertex's value
+    onto its out-edges (``RichEdge``, PartitionCentricIteration.java:
+    236-251).  An empty block or frontier gives zero-length arrays, so
+    a kernel needs no empty branch of its own."""
+    from .workerenv import optimize_worker
+
+    optimize_worker()
+    nodes, indptr, edst, weight = unpack_block(bpdf)
+    esrc = np.repeat(np.arange(len(indptr) - 1, dtype=np.int64), np.diff(indptr))
+    fids = fpdf["id"].to_numpy(dtype=np.int64)
+    pos = np.searchsorted(nodes, fids)
+    ok = pos < len(nodes)
+    ok[ok] = nodes[pos[ok]] == fids[ok]
+    vals = fpdf["value"].to_numpy(dtype=value_dtype)[ok]
+    return nodes, esrc, edst, weight, pos[ok], vals
+
+
 @dataclass
 class GraphBlocks:
     """Static per-partition topology + routing metadata: an opened block
@@ -193,13 +218,6 @@ def _build_csr(pdf: pd.DataFrame) -> pd.DataFrame:
             rows["col"].append(col)
             rows["data"].append(buf[i : i + CHUNK_BYTES])
     return pd.DataFrame(rows)
-
-
-def block_edge_source_index(indptr: np.ndarray) -> np.ndarray:
-    """Expand CSR indptr to a per-edge local source index (COO row)."""
-    return np.repeat(
-        np.arange(len(indptr) - 1, dtype=np.int64), np.diff(indptr)
-    )
 
 
 def _assign_partitions(
@@ -331,26 +349,26 @@ def ensure_block_store(
         out_deg = edges.groupBy(F.col("src").alias("id")).agg(
             deg_expr.cast("double").alias("out_deg")
         )
+        # census scalars land in the meta: algorithm init (PageRank's
+        # n_vertices / dangling count) then needs no aggregation job at
+        # all — counted by an observation on the census write, like the
+        # edge count on the blocks write
+        counted_census = Observation("pcgraph_block_store_census")
         (
             vertex_ids(edges)
             .join(out_deg, on="id", how="left")
             .fillna(0.0, subset=["out_deg"])
+            .observe(
+                counted_census,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(F.col("out_deg") == 0, 1).otherwise(0)).alias("d"),
+            )
             .write.mode("overwrite")
             .parquet(os.path.join(path, "vertices"))
         )
+        census = counted_census.get
     finally:
         edges.unpersist()
-    # census scalars land in the meta: algorithm init (PageRank's
-    # n_vertices / dangling count) then needs no aggregation job at
-    # all — build-time cost, amortized like the census itself
-    census = (
-        spark.read.parquet(os.path.join(path, "vertices"))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("out_deg") == 0, 1).otherwise(0)).alias("d"),
-        )
-        .collect()[0]
-    )
     # The edge count (the content fingerprint) lands in the SAME atomic
     # meta write as everything else: there is no window where a
     # committed store exists whose fingerprint check silently no-ops.

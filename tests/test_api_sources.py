@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 from pcgraph import fixtures
 from pcgraph.api import PCGraph
-from pcgraph.partition import block_edge_source_index, unpack_block
+from pcgraph.partition import kernel_block
 from pcgraph.sources import read_edge_list, write_edge_list
 
 
@@ -30,19 +30,9 @@ def test_custom_iteration_max_label(spark):
     vertices, edges = fixtures.tiny_example_graph()
 
     def max_kernel(key, fpdf, bpdf):
-        if len(bpdf) == 0 or len(fpdf) == 0:
-            return pd.DataFrame(
-                {"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="int64")}
-            )
-        nodes, indptr, edst, _ = unpack_block(bpdf)
-        esrc = block_edge_source_index(indptr)
+        nodes, esrc, edst, _, pos, vals = kernel_block(fpdf, bpdf, np.int64)
         val = np.full(len(nodes), np.iinfo(np.int64).min, dtype=np.int64)
-        pos = np.searchsorted(nodes, fpdf["id"].to_numpy(dtype=np.int64))
-        ok = (pos < len(nodes)) & (
-            nodes[np.clip(pos, 0, len(nodes) - 1)]
-            == fpdf["id"].to_numpy(dtype=np.int64)
-        )
-        np.maximum.at(val, pos[ok], fpdf["value"].to_numpy(dtype=np.int64)[ok])
+        np.maximum.at(val, pos, vals)
         init = val.copy()
         while True:
             prev = val.copy()

@@ -206,3 +206,102 @@ def test_store_without_census_is_refused(spark, tmp_path):
     shutil.rmtree(os.path.join(no_census, "vertices"))
     with pytest.raises(ValueError, match=r"vertices/.*delete the store_dir"):
         open_block_store(spark, no_census)
+
+
+def test_store_build_jobs_are_pinned(spark, tmp_path):
+    """A store build's Spark jobs, counted: the edge count rides the
+    blocks write and the census scalars (``n_vertices``,
+    ``n_dangling``) ride the census write as observations, so the
+    build runs no aggregation job of its own.  A build that re-reads
+    what it just wrote fails here."""
+    import uuid
+
+    from pcgraph.iohelpers import read_json
+    from pcgraph.partition import STORE_META
+
+    sc = spark.sparkContext
+    # a 3-cycle with a tail: vertex 4 has no out-edge, so it dangles
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], schema="src long, dst long"
+    )
+    group = f"pcgraph-build-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "store build")
+    try:
+        ensure_block_store(spark, edges, 4, str(tmp_path / "s"), tag="t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    meta = read_json(spark, str(tmp_path / "s" / STORE_META))
+    assert (meta["n_edges"], meta["n_vertices"], meta["n_dangling"]) == (4, 4, 1)
+    assert jobs == 7, jobs
+
+
+# DDL type of each message column -> the pandas dtype a kernel returns
+_DDL_DTYPES = {"long": "int64", "double": "float64", "int": "int32"}
+
+
+def _test_block(weighted: bool) -> pd.DataFrame:
+    """One partition's CSR chunk rows, built without Spark: a 3-cycle
+    with a tail and a negative id."""
+    from pcgraph.partition import _build_csr
+
+    edges = pd.DataFrame(
+        {"partition_id": 0, "src": [1, 2, -3, -3], "dst": [2, -3, 1, 4]}
+    )
+    if weighted:
+        edges["weight"] = [1.0, 2.0, 0.5, 1.5]
+    return _build_csr(edges)
+
+
+@pytest.mark.parametrize("name", ["cc", "sssp", "pr", "lp"])
+def test_library_kernel_empty_inputs(name):
+    """Every library kernel, given an empty frontier or an empty block,
+    returns zero rows typed exactly as its ``msg_schema`` (``cnt`` is
+    int32 for LPA) — the engine concatenates the frames as Arrow."""
+    from pcgraph.algos.cc import cc_kernel
+    from pcgraph.algos.labelprop import lp_kernel
+    from pcgraph.algos.pagerank import pr_kernel
+    from pcgraph.algos.sssp import sssp_kernel
+
+    kernel, schema, value, weighted = {
+        "cc": (cc_kernel, "dst long, msg long", "int64", False),
+        "sssp": (sssp_kernel, "dst long, msg double", "float64", True),
+        "pr": (pr_kernel, "dst long, msg double", "float64", False),
+        "lp": (lp_kernel, "dst long, label long, cnt int", "int64", False),
+    }[name]
+    expected = {
+        col: _DDL_DTYPES[ddl]
+        for col, ddl in (f.split() for f in schema.split(", "))
+    }
+    block = _test_block(weighted)
+    frontier = pd.DataFrame(
+        {"id": np.array([1, -3], dtype="int64"), "value": np.array([1, -3], dtype=value)}
+    )
+    assert len(kernel((0,), frontier, block)) > 0
+    for fpdf, bpdf in ((frontier.iloc[:0], block), (frontier, block.iloc[:0])):
+        out = kernel((0,), fpdf, bpdf)
+        assert len(out) == 0
+        assert {c: str(t) for c, t in out.dtypes.items()} == expected
+
+
+def test_kernel_block_places_frontier():
+    """``kernel_block`` decodes the block and places the frontier on
+    it: a negative id the block holds is placed, ids it lacks (below
+    and above every local id) are dropped; an empty block gives
+    zero-length arrays."""
+    from pcgraph.partition import kernel_block
+
+    block = _test_block(weighted=False)
+    frontier = pd.DataFrame({"id": [-3, -10, 2, 99], "value": [7, 8, 9, 10]})
+    nodes, esrc, edst, weight, pos, vals = kernel_block(frontier, block, np.int64)
+    assert nodes.tolist() == [-3, 1, 2, 4]
+    assert sorted(zip(nodes[esrc].tolist(), nodes[edst].tolist())) == [
+        (-3, 1), (-3, 4), (1, 2), (2, -3)
+    ]
+    assert len(weight) == 0
+    assert nodes[pos].tolist() == [-3, 2]
+    assert vals.tolist() == [7, 9] and vals.dtype == np.int64
+
+    arrays = kernel_block(frontier, block.iloc[:0], np.float64)
+    assert [len(a) for a in arrays] == [0] * 6

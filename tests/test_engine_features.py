@@ -10,12 +10,13 @@ from pyspark.sql import functions as F
 from pcgraph import fixtures
 from pcgraph.api import PCGraph
 from pcgraph.algos.cc import symmetrize
-from pcgraph.partition import block_edge_source_index, unpack_block
+from pcgraph.partition import kernel_block
 
 
-# NOTE: kernels must not reference module-level helpers — cloudpickle
-# serializes test-module globals by reference and workers cannot import
-# the test module, so each kernel inlines its empty-frame construction.
+# NOTE: kernels must not reference helpers defined in this module —
+# cloudpickle serializes test-module globals by reference and workers
+# cannot import the test module.  An importable ``pcgraph`` function
+# (``kernel_block``) pickles by reference and imports in the worker.
 
 
 def test_kernel_receives_superstep_and_hooks(spark):
@@ -111,17 +112,9 @@ def test_fold_sum_accumulates_n_rounds_on_cycle(spark):
     )
 
     def one_kernel(key, fpdf, bpdf):
-        if len(bpdf) == 0 or len(fpdf) == 0:
-            return pd.DataFrame(
-                {"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="int64")}
-            )
-        nodes, indptr, edst, _ = unpack_block(bpdf)
-        esrc = block_edge_source_index(indptr)
-        fids = fpdf["id"].to_numpy(dtype=np.int64)
+        nodes, esrc, edst, _, pos, _ = kernel_block(fpdf, bpdf, np.int64)
         present = np.zeros(len(nodes), dtype=bool)
-        pos = np.searchsorted(nodes, fids)
-        ok = (pos < len(nodes)) & (nodes[np.clip(pos, 0, len(nodes) - 1)] == fids)
-        present[pos[ok]] = True
+        present[pos] = True
         active = present[esrc]
         return pd.DataFrame(
             {"dst": nodes[edst[active]], "msg": np.ones(int(active.sum()), dtype=np.int64)}
@@ -150,17 +143,9 @@ def test_fold_sum_with_tol_converges(spark):
     )
 
     def decay_kernel(key, fpdf, bpdf, step):
-        if len(bpdf) == 0 or len(fpdf) == 0:
-            return pd.DataFrame(
-                {"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="float64")}
-            )
-        nodes, indptr, edst, _ = unpack_block(bpdf)
-        esrc = block_edge_source_index(indptr)
-        fids = fpdf["id"].to_numpy(dtype=np.int64)
+        nodes, esrc, edst, _, pos, _ = kernel_block(fpdf, bpdf, np.float64)
         present = np.zeros(len(nodes), dtype=bool)
-        pos = np.searchsorted(nodes, fids)
-        ok = (pos < len(nodes)) & (nodes[np.clip(pos, 0, len(nodes) - 1)] == fids)
-        present[pos[ok]] = True
+        present[pos] = True
         active = present[esrc]
         amount = 0.5 ** step
         return pd.DataFrame(
