@@ -1,11 +1,14 @@
-"""Min-propagation driver shared by CC and SSSP.
+"""The fold driver: CC, SSSP and ``PCGraph.run_partition_centric_iteration``.
 
-Both algorithms keep, per vertex, the minimum of the values their
-kernels propose, and emit on strict improvement (reference:
+Each keeps one value per vertex, folds the values its kernels propose
+with a built-in fold (``engine.fold_update``; CC and SSSP: min) or a
+caller's ``update``, and emits on change (reference:
 PCConnectedComponents.java:122-138, PCSingleSourceShortestPaths.java:
-173-192).  They differ only in their edges, kernel, message type and
-initial values; the state set-up, the resume hand-off, the in-memory
-min-fold ``update`` and the engine call live here once.
+173-192; the library algorithms run on the public iteration API,
+PCGraph.runPartitionCentricIteration).  They differ only in their
+edges, kernel, message type, initial values and fold; the state set-up,
+the resume hand-off, the delta-store choice and the engine call live
+here once.
 """
 
 from __future__ import annotations
@@ -14,30 +17,13 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..engine import PCEngine
 from ..partition import GraphBlocks, vertex_census
 from ..statestore import default_state_dir
 
 
-def min_fold_update(state_df: DataFrame, msgs: DataFrame, step: int) -> DataFrame:
-    """Fold messages per dst with min, keep the smaller value, flag a
-    strict improvement as changed.  String expressions: a handful of
-    py4j round-trips per round instead of one per Column op (see
-    pagerank.update)."""
-    folded = msgs.groupBy("dst").agg(F.expr("min(msg) as msg"))
-    joined = state_df.select("id", "value").join(
-        folded, F.expr("id = dst"), "left"
-    )
-    return joined.selectExpr(
-        "id",
-        "least(value, msg) as value",
-        "coalesce(msg < value, false) as changed",
-    )
-
-
-def run_min_propagation(
+def run_fold(
     spark: SparkSession,
     blocks: GraphBlocks,
     vertices: DataFrame | None,
@@ -47,21 +33,24 @@ def run_min_propagation(
     msg_schema: str,
     algorithm: str,
     *,
+    update: Callable | str = "min",
     max_iter: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume_from: str | None,
-    incremental: bool,
-    state_store_dir: str | None,
-    n_buckets: int,
-    max_versions: int,
-    strict: bool,
-    post_superstep,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = 1,
+    resume_from: str | None = None,
+    incremental: bool = False,
+    state_store_dir: str | None = None,
+    n_buckets: int = 256,
+    max_versions: int = 8,
+    strict: bool = False,
+    pre_superstep=None,
+    post_superstep=None,
 ) -> tuple[DataFrame, list[dict]]:
-    """Run one min-propagation to convergence; returns the engine's
-    (DataFrame[id, value], history).  ``init_value``/``init_changed``
-    are Columns over the vertex ids (the initial frontier is the
-    changed rows)."""
+    """Run one fold iteration to convergence; returns the engine's
+    (state with ``id`` and ``value``, history).  ``init_value``/
+    ``init_changed`` are Columns over the vertex ids (the initial
+    frontier is the changed rows).  ``incremental`` runs need
+    ``update="min"``, the delta store's merge."""
     engine = PCEngine(
         spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
     )
@@ -86,21 +75,14 @@ def run_min_propagation(
             state=state,
             kernel=kernel,
             msg_schema=msg_schema,
-            update=min_fold_update,
-            frontier_fn=lambda s: s.filter("changed").select("id", "value"),
-            # active-count rides the round's materializing job (observe)
-            metrics_exprs=[
-                F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
-            ],
-            metrics_post=lambda obs, step: {"active": int(obs["changed"] or 0)},
+            update=update,
             max_iter=max_iter,
             algorithm=algorithm,
             strict=strict,
-            # min-fold + strict improvement is exactly the delta store's
-            # merge contract (engine.run docstring)
             state_store_dir=state_store_dir,
             n_buckets=n_buckets,
             max_versions=max_versions,
+            pre_superstep=pre_superstep,
             post_superstep=post_superstep,
             resumed=resumed,
         )

@@ -11,7 +11,7 @@ library/PCConnectedComponents.java):
   * externals start at Long.MAX_VALUE (:102) — here +inf seed;
   * message per vertex whose component improved (:108-117);
   * vertex update keeps the min and emits only on strict improvement
-    (:122-138) — here ``least(value, min(msgs))`` + changed filter;
+    (:122-138) — here the built-in min fold (``engine.fold_update``);
   * vertices with no edges never enter partition processing and keep
     their initial value (SURVEY.md §1.4 singleton rule).
 """
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..partition import GraphBlocks, graph_blocks, kernel_block
-from ._minprop import run_min_propagation
+from ._fold import run_fold
 
 _I64_MAX = np.iinfo(np.int64).max
 
@@ -111,7 +111,7 @@ def connected_components(
         spark, sym, num_partitions, blocks, store_dir,
         salt_threshold=salt_threshold, tag="sym",
     ) as blocks:
-        state, history = run_min_propagation(
+        state, history = run_fold(
             spark, blocks, vertices,
             init_value=F.col("id"),
             init_changed=F.lit(True),

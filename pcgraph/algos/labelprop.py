@@ -218,18 +218,9 @@ def label_propagation(
                 "coalesce(new_label != value, false) as changed",
             )
 
-        # changed-count rides the round's materializing job (observe) —
-        # no separate count action over the state.
-        metrics_exprs = [
-            F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
-        ]
-
-        def metrics_post(observed, step):
-            changed = int(observed["changed"] or 0)
-            return {"active": changed, "changed": changed}
-
         # Synchronous LPA: every vertex re-evaluates each round, so the
-        # frontier is the full state until convergence (unlike CC's delta).
+        # frontier is the full state until convergence (unlike CC's delta);
+        # ``active`` is the engine's changed-row count.
         state, history = engine.run(
             blocks=blocks,
             state=state,
@@ -237,8 +228,6 @@ def label_propagation(
             msg_schema="dst long, label long, cnt int",
             update=update,
             frontier_fn=lambda s: s.select("id", "value"),
-            metrics_exprs=metrics_exprs,
-            metrics_post=metrics_post,
             max_iter=max_iter,
             algorithm="label_propagation",
             post_superstep=post_superstep,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..partition import GraphBlocks, graph_blocks, kernel_block
-from ._minprop import run_min_propagation
+from ._fold import run_fold
 
 _INF = float("inf")
 
@@ -76,7 +76,7 @@ def sssp(
         salt_threshold=salt_threshold, weighted=True, tag="directed-w",
     ) as blocks:
         is_source = F.col("id") == source
-        state, history = run_min_propagation(
+        state, history = run_fold(
             spark, blocks, vertices,
             init_value=F.when(is_source, 0.0).otherwise(F.lit(_INF)),
             init_changed=is_source,

@@ -11,9 +11,9 @@ The reference's entire extension surface is two abstract classes —
     per call), which starts with ``partition.kernel_block`` to get its
     decoded block with the frontier placed on it;
   * ``msg_schema`` — DDL schema of the message DataFrame;
-  * a *fold spec*: either one of the built-in folds ("min", "max",
-    "sum") applied to the ``msg`` column, or a custom
-    ``update(state, msgs, step) -> new_state`` (the vertex update
+  * a *fold spec*: either the name of a built-in fold ("min", "max",
+    "sum"; ``engine.fold_update``) applied to the ``msg`` column, or a
+    custom ``update(state, msgs, step) -> new_state`` (the vertex update
     function; new_state must carry a boolean ``changed`` column).
 
 Built-in algorithms are exposed as methods so a reference user can
@@ -28,10 +28,8 @@ from contextlib import ExitStack
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import PCEngine
-from .partition import GraphBlocks, degrees, graph_blocks, vertex_census
-
-_FOLDS = {"min": F.min, "max": F.max, "sum": F.sum}
+from .engine import fold_update
+from .partition import GraphBlocks, degrees, graph_blocks
 
 
 class PCGraph:
@@ -87,7 +85,7 @@ class PCGraph:
         kernel: Callable,
         msg_schema: str,
         initial_value,
-        fold: str | Callable = "min",
+        fold: str = "min",
         update: Callable | None = None,
         max_iter: int = 100,
         checkpoint_dir: str | None = None,
@@ -101,10 +99,14 @@ class PCGraph:
 
         ``initial_value`` is a Column or literal seeding every vertex of
         the block store's census plus ``vertices`` (reference: vertex
-        init mapper, Graph.fromDataSet).  With a built-in ``fold``, the
-        vertex update is ``value' = fold(value, fold(messages))`` with
-        emit-on-strict-change semantics (VertexUpdateFunction.java:
-        85-93); pass ``update`` for anything richer.
+        init mapper, Graph.fromDataSet).  ``fold`` names a built-in
+        vertex update (``engine.fold_update``): "min"/"max" keep a
+        strictly better message with emit-on-strict-change semantics
+        (VertexUpdateFunction.java:85-93; a null value stays null),
+        "sum" adds the folded messages; any other name raises
+        ``ValueError``.  Pass ``update`` for anything richer (it
+        replaces ``fold``).  A steady round is one Spark job: the
+        active count is observed inside the round's state checkpoint.
 
         ``kernel`` starts with ``kernel_block(frontier_pdf, block_pdf,
         value_dtype)`` (``pcgraph.partition``): the partition's nodes,
@@ -132,58 +134,21 @@ class PCGraph:
         outside the vertex set (reference: "Target vertex does not
         exist!", PartitionCentricIteration.java:216-227).
         """
-        state = vertex_census(self.spark, self.blocks, self.vertices).select(
-            "id",
-            (initial_value if not isinstance(initial_value, (int, float))
-             else F.lit(initial_value)).alias("value"),
-            F.lit(True).alias("changed"),
-        )
+        from .algos._fold import run_fold
 
-        if update is None:
-            if not isinstance(fold, str) or fold not in _FOLDS:
-                raise ValueError(f"fold must be one of {sorted(_FOLDS)} or pass update=")
-            agg = _FOLDS[fold]
-            better = F.col("msg") < F.col("value") if fold == "min" else (
-                F.col("msg") > F.col("value") if fold == "max" else F.lit(True)
-            )
-
-            def update(state_df, msgs, step):  # noqa: ANN001
-                folded = msgs.groupBy("dst").agg(agg("msg").alias("msg"))
-                joined = state_df.select("id", "value").join(
-                    folded, state_df["id"] == folded["dst"], "left"
-                )
-                new_value = (
-                    F.when(F.col("msg").isNotNull() & better, F.col("msg"))
-                    .otherwise(F.col("value"))
-                    if fold != "sum"
-                    else F.col("value") + F.coalesce(F.col("msg"), F.lit(0))
-                )
-                if fold != "sum":
-                    changed = F.coalesce(better, F.lit(False))
-                elif sum_tol is not None:
-                    changed = F.coalesce(
-                        F.abs(F.col("msg")) > F.lit(sum_tol), F.lit(False)
-                    )
-                else:
-                    changed = F.col("msg").isNotNull()
-                return joined.select(
-                    "id", new_value.alias("value"), changed.alias("changed")
-                )
-
-        engine = PCEngine(
-            self.spark,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_every=checkpoint_every,
-        )
-        state, history = engine.run(
-            blocks=self.blocks,
-            state=state,
+        update = update or fold_update(fold, sum_tol)  # a bad fold raises here
+        state, history = run_fold(
+            self.spark, self.blocks, self.vertices,
+            init_value=(initial_value if not isinstance(initial_value, (int, float))
+                        else F.lit(initial_value)),
+            init_changed=F.lit(True),
             kernel=kernel,
             msg_schema=msg_schema,
-            update=update,
-            frontier_fn=lambda s: s.filter("changed").select("id", "value"),
-            max_iter=max_iter,
             algorithm="custom",
+            update=update,
+            max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
             strict=strict,
             pre_superstep=pre_superstep,
             post_superstep=post_superstep,

@@ -206,6 +206,44 @@ def _observe(df: DataFrame, exprs: list, algorithm: str, step: int):
     return df.observe(obs, *exprs), obs
 
 
+def fold_update(fold: str, sum_tol: float | None = None) -> Callable:
+    """The built-in vertex update ``update(state, msgs, step)``: fold
+    the messages per dst with ``fold`` ("min", "max" or "sum") and merge
+    them into ``value``.  min/max keep a strictly better message and
+    flag it ``changed`` (emit-on-strict-change, VertexUpdateFunction.
+    java:85-93; a null ``value`` stays null); sum adds, and flags any
+    received sum (with ``sum_tol``: one above it in magnitude).  String
+    expressions: a few py4j round-trips per round (see pagerank.update)."""
+    if fold in ("min", "max"):
+        op = "<" if fold == "min" else ">"
+        value = f"case when msg {op} value then msg else value end as value"
+        changed = f"coalesce(msg {op} value, false) as changed"
+    elif fold == "sum":
+        value = "value + coalesce(msg, 0) as value"
+        changed = "msg is not null as changed" if sum_tol is None else (
+            f"coalesce(abs(msg) > cast('{float(sum_tol)!r}' as double), false)"
+            " as changed"
+        )
+    else:
+        raise ValueError(
+            f"fold must be one of ['max', 'min', 'sum'] or pass update= (got {fold!r})"
+        )
+
+    def update(state_df: DataFrame, msgs: DataFrame, step: int) -> DataFrame:
+        folded = msgs.groupBy("dst").agg(F.expr(f"{fold}(msg) as msg"))
+        joined = state_df.select("id", "value").join(
+            folded, F.expr("id = dst"), "left"
+        )
+        return joined.selectExpr("id", value, changed)
+
+    return update
+
+
+def _changed_rows(state: DataFrame) -> DataFrame:
+    """The default frontier: the rows the round changed."""
+    return state.filter("changed").select("id", "value")
+
+
 class _Round(NamedTuple):
     """What a backend's ``advance`` hands back to the round driver."""
 
@@ -253,11 +291,7 @@ class _MemoryState:
             self.msgs = msgs = msgs.persist()
             _check_targets(msgs.select("dst"), self.state)
         new_state = self.update(self.state, msgs, step)
-        obs = None
-        if self.metrics_exprs:
-            new_state, obs = _observe(
-                new_state, self.metrics_exprs, algorithm, step
-            )
+        new_state, obs = _observe(new_state, self.metrics_exprs, algorithm, step)
         if self.state_cols is not None:
             # metric-only columns end at the observation: project
             # them away BELOW the checkpoint (partitioning on id is
@@ -283,13 +317,7 @@ class _MemoryState:
             self.next = new_state.localCheckpoint(
                 eager=True, storageLevel=_CKPT_LEVEL
             )
-        return _Round(
-            self.frontier_fn(self.next), dict(obs.get) if obs else {}, {}
-        )
-
-    def active(self, rnd: _Round) -> int:
-        # one cheap scan of the checkpointed state (no shuffle)
-        return rnd.frontier.count()
+        return _Round(self.frontier_fn(self.next), dict(obs.get), {})
 
     def meta(self, step: int) -> dict:
         # RELATIVE to checkpoint_dir, so a checkpoint directory can be
@@ -416,11 +444,7 @@ class _DeltaState:
         delta = cur.filter(F.col("msg") < F.col("value")).select(
             "id", F.col("msg").alias("value"), F.lit(True).alias("changed")
         )
-        delta, obs = _observe(
-            delta,
-            self.metrics_exprs or [F.count(F.lit(1)).alias("changed")],
-            algorithm, step,
-        )
+        delta, obs = _observe(delta, self.metrics_exprs, algorithm, step)
         vid = store.write_delta(  # THE materializing action
             delta.select("id", "value").withColumn(
                 "bucket", store.bucket_expr(F.col("id"))
@@ -444,9 +468,6 @@ class _DeltaState:
             record["compacted_buckets"] = len(compacted)
         frontier = store.read_version(vid) if wrote else self.empty_frontier
         return _Round(frontier, dict(obs.get), record)
-
-    def active(self, rnd: _Round) -> int:
-        return int(rnd.observed.get("changed") or 0)
 
     def meta(self, step: int) -> dict:
         store = self.store
@@ -489,10 +510,13 @@ class PCEngine:
       * ``update(state, msgs, step) -> new_state`` — global fold +
         vertex update (analog of VertexUpdateFunction.updateVertex,
         VertexUpdateFunction.java:42-56); lazy, engine materializes;
-      * ``frontier_fn(new_state) -> frontier[id, value]`` — the changed
-        set (analog of setNewVertexValue's emit-on-change,
-        VertexUpdateFunction.java:85-93); stays a LAZY projection of
-        the checkpointed state (no second materialized copy per round);
+        new_state carries a boolean ``changed`` column.  A fold name
+        ("min", "max", "sum") selects the built-in ``fold_update``;
+      * optional ``frontier_fn(new_state) -> frontier[id, value]`` —
+        the next frontier, by default the ``changed`` rows (analog of
+        setNewVertexValue's emit-on-change, VertexUpdateFunction.java:
+        85-93); stays a LAZY projection of the checkpointed state (no
+        second materialized copy per round);
       * optional ``pre_superstep(step)`` / ``post_superstep(step,
         metrics)`` lifecycle hooks (reference parity:
         PartitionProcessFunction.java:45-63, PartitionCentricIteration.
@@ -517,9 +541,9 @@ class PCEngine:
         state: DataFrame | None,
         kernel: Callable,
         msg_schema: str,
-        update: Callable[[DataFrame, DataFrame, int], DataFrame],
-        frontier_fn: Callable[[DataFrame], DataFrame],
-        max_iter: int,
+        update: Callable[[DataFrame, DataFrame, int], DataFrame] | str,
+        frontier_fn: Callable[[DataFrame], DataFrame] | None = None,
+        max_iter: int = 100,
         metrics_exprs: list | None = None,
         metrics_post: Callable[[dict, int], dict] | None = None,
         algorithm: str = "custom",
@@ -544,13 +568,14 @@ class PCEngine:
         store.  Either way the first frontier is derived from the state.
 
         ``state_store_dir`` keeps the state in a DeltaStateStore instead
-        of the per-round checkpoint: the algorithm's merge must be
-        exactly "fold messages per dst with min, keep on strict
-        improvement" over state rows ``(id, value, changed)`` and
-        messages ``(dst, msg)`` — CC's min-label and SSSP's
-        min-distance qualify.  In that mode ``update`` is bypassed and
-        ``frontier_fn`` only seeds the first frontier (the engine
-        applies the min merge itself); each round writes ONLY its
+        of the per-round checkpoint.  Its merge is "fold messages per
+        dst with min, keep on strict improvement" over state rows
+        ``(id, value, changed)`` and messages ``(dst, msg)`` — CC's
+        min-label and SSSP's min-distance — so ``update`` must be
+        "min" (anything else raises ``ValueError`` before the run
+        starts, a resumed delta-store run included).  The engine
+        applies the min merge itself, and ``frontier_fn`` only seeds
+        the first frontier; each round writes ONLY its
         changed rows (O(changed)) as a new store version, with
         min-reconciliation on read and per-bucket compaction
         (``max_versions``) bounding read amplification.  On a cluster
@@ -574,10 +599,30 @@ class PCEngine:
         rows) INSIDE the round's single materializing job via
         ``DataFrame.observe``, so convergence metrics cost zero extra
         actions/passes.  ``metrics_post(observed_dict, step)`` turns
-        the raw observed values into the metrics dict (and may set
-        ``active``/``converged``).  The observe node rides the
-        checkpoint action only — it never enters the retained plan.
+        the observed values into the metrics dict, which must hold
+        ``active`` (the loop stops at 0) and may set ``converged``.
+        The defaults observe the number of ``changed`` rows (on the
+        delta store, every written row) and report it as ``active``.
+        The observe node rides the checkpoint action only — it never
+        enters the retained plan.
         """
+        # a resumed run continues in the backend that committed its round
+        if resumed and "manifest" in resumed:
+            state_store_dir = state_store_dir or resumed["state_store_dir"]
+            n_buckets = int(resumed.get("n_buckets", n_buckets))
+        elif resumed:
+            state_store_dir = None
+        if state_store_dir is not None and update != "min":
+            raise ValueError(
+                "the delta state store merges with min only: pass update='min' "
+                f"with state_store_dir (got {update!r})"
+            )
+        if isinstance(update, str):
+            update = fold_update(update)
+        frontier_fn = frontier_fn or _changed_rows
+        if metrics_exprs is None:
+            metrics_exprs = [F.expr("count_if(changed) as active")]
+        metrics_post = metrics_post or (lambda observed, step: dict(observed))
         conf = self.spark.conf
         aqe_prev = conf.get("spark.sql.adaptive.enabled", "true")
         bcast_prev = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -598,12 +643,6 @@ class PCEngine:
         # F.broadcast hints (mirror route, delta sparse fold) are
         # unaffected by the threshold.
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # a resumed run continues in the backend that committed its round
-        if resumed and "manifest" in resumed:
-            state_store_dir = state_store_dir or resumed["state_store_dir"]
-            n_buckets = int(resumed.get("n_buckets", n_buckets))
-        elif resumed:
-            state_store_dir = None
         try:
             if state_store_dir is None:
                 backend = _MemoryState(
@@ -618,7 +657,7 @@ class PCEngine:
             frontier = backend.initial_frontier(frontier_fn)
             return self._drive(
                 blocks, backend, frontier, kernel, msg_schema, max_iter,
-                metrics_exprs, metrics_post,
+                metrics_post,
                 int(resumed["superstep"]) if resumed else 0, algorithm,
                 strict, pre_superstep, post_superstep,
             )
@@ -634,8 +673,7 @@ class PCEngine:
         kernel: Callable,
         msg_schema: str,
         max_iter: int,
-        metrics_exprs: list | None,
-        metrics_post: Callable[[dict, int], dict] | None,
+        metrics_post: Callable[[dict, int], dict],
         start_step: int,
         algorithm: str,
         strict: bool,
@@ -663,16 +701,10 @@ class PCEngine:
                 )
                 try:
                     rnd = backend.advance(msgs, step, algorithm, strict, durable)
-                    if rnd.frontier is None:
-                        metrics = {"active": 0}
-                    elif metrics_exprs and metrics_post:
-                        metrics = metrics_post(rnd.observed, step)
-                    elif metrics_exprs:
-                        metrics = dict(rnd.observed)
-                    else:
-                        metrics = {}
-                    if "active" not in metrics:
-                        metrics["active"] = backend.active(rnd)
+                    metrics = (
+                        {"active": 0} if rnd.frontier is None
+                        else metrics_post(rnd.observed, step)
+                    )
                     metrics.update(
                         superstep=step,
                         algorithm=algorithm,

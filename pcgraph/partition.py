@@ -630,6 +630,28 @@ def _memcache_put(key, df: pd.DataFrame) -> None:
     _BLOCK_MEMCACHE_BYTES[0] += size
 
 
+def _read_partition_dir(part_dir: str, mkey: tuple) -> pd.DataFrame:
+    """One partition dir's parquet files as a (chunk, col, data) frame
+    (typed and empty when it holds none), memoized under ``mkey``."""
+    import glob as _glob
+
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
+
+    files = sorted(_glob.glob(os.path.join(part_dir, "*.parquet")))
+    if files:
+        out = _pa.concat_tables(
+            [_pq.read_table(f, columns=["chunk", "col", "data"]) for f in files]
+        ).to_pandas()
+    else:
+        out = pd.DataFrame(
+            {"chunk": pd.Series(dtype="int32"), "col": pd.Series(dtype="object"),
+             "data": pd.Series(dtype="object")}
+        )
+    _memcache_put(mkey, out)
+    return out
+
+
 def read_store_block(
     store_path: str, partition_id: int, build_id: str | None = None
 ) -> pd.DataFrame:
@@ -641,35 +663,17 @@ def read_store_block(
     reused workers serve the same immutable build every superstep;
     ``build_id`` (GraphBlocks.build_id) keeps a store rebuilt at the
     same path from hitting the old build's entries."""
-    import glob as _glob
-
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
     mkey = (store_path, build_id, int(partition_id))
     cached = _BLOCK_MEMCACHE.get(mkey)
     if cached is not None:
         return cached[0]
 
-    empty = pd.DataFrame(
-        {"chunk": pd.Series(dtype="int32"), "col": pd.Series(dtype="object"),
-         "data": pd.Series(dtype="object")}
-    )
     if not is_remote(store_path):
+        # an absent/empty local dir is a legitimately edgeless partition
         part_dir = os.path.join(
             strip_file_scheme(store_path), f"partition_id={partition_id}"
         )
-        files = sorted(_glob.glob(os.path.join(part_dir, "*.parquet")))
-        # an absent/empty local dir is a legitimately edgeless partition
-        if not files:
-            _memcache_put(mkey, empty)
-            return empty
-        tables = [
-            _pq.read_table(f, columns=["chunk", "col", "data"]) for f in files
-        ]
-        out = _pa.concat_tables(tables).to_pandas()
-        _memcache_put(mkey, out)
-        return out
+        return _read_partition_dir(part_dir, mkey)
 
     # Remote store via the worker-local LRU cache.  A concurrent task's
     # eviction may race between our fetch and read — the ``_complete``
@@ -680,20 +684,12 @@ def read_store_block(
     last_err: Exception | None = None
     for _attempt in range(3):
         part_dir = _fetch_remote_partition(store_path, partition_id, build_id)
-        files = sorted(_glob.glob(os.path.join(part_dir, "*.parquet")))
         if not os.path.exists(os.path.join(part_dir, "_complete")):
-            continue  # evicted between fetch and glob — re-fetch
-        if not files:
-            _memcache_put(mkey, empty)
-            return empty  # marker present: genuinely no parquet remotely
+            continue  # evicted between fetch and read — re-fetch
         try:
-            tables = [
-                _pq.read_table(f, columns=["chunk", "col", "data"])
-                for f in files
-            ]
-            out = _pa.concat_tables(tables).to_pandas()
-            _memcache_put(mkey, out)
-            return out
+            # marker present (just touched, so _evict_lru's grace window
+            # spares it): zero parquet files means genuinely none remotely
+            return _read_partition_dir(part_dir, mkey)
         except (FileNotFoundError, OSError) as err:
             last_err = err  # file deleted mid-read — re-fetch
     raise RuntimeError(

@@ -170,6 +170,89 @@ def test_fold_sum_with_tol_converges(spark):
     assert all(abs(v - 1.9375) < 1e-12 for v in got.values())
 
 
+def test_fold_update_rows(spark):
+    """The built-in folds on a hand-built state and message frame:
+    min/max keep only a strictly better message (a null value stays
+    null), sum adds and flags what it received, or with ``sum_tol``
+    only a sum above it in magnitude."""
+    from pcgraph.engine import fold_update
+
+    def rows(update, state, msgs):
+        out = update(state, msgs, 1).collect()
+        return {r["id"]: (r["value"], r["changed"]) for r in out}
+
+    # id 1: better for min (3 < 5), worse for max (max 4 < 5);
+    # id 2: equal; id 3: worse for min, better for max;
+    # id 4: no message; id 5: null value
+    state = spark.createDataFrame(
+        [(1, 5), (2, 5), (3, 5), (4, 5), (5, None)], "id long, value long"
+    )
+    msgs = spark.createDataFrame(
+        [(1, 3), (1, 4), (2, 5), (3, 7), (5, 1)], "dst long, msg long"
+    )
+    assert rows(fold_update("min"), state, msgs) == {
+        1: (3, True), 2: (5, False), 3: (5, False), 4: (5, False),
+        5: (None, False),
+    }
+    assert rows(fold_update("max"), state, msgs) == {
+        1: (5, False), 2: (5, False), 3: (7, True), 4: (5, False),
+        5: (None, False),
+    }
+
+    state = spark.createDataFrame(
+        [(1, 1.0), (2, 1.0), (3, 1.0), (4, 1.0)], "id long, value double"
+    )
+    msgs = spark.createDataFrame(
+        [(1, 0.5), (1, 0.25), (2, 0.0625), (3, -0.5)], "dst long, msg double"
+    )
+    assert rows(fold_update("sum"), state, msgs) == {
+        1: (1.75, True), 2: (1.0625, True), 3: (0.5, True), 4: (1.0, False),
+    }
+    assert rows(fold_update("sum", sum_tol=0.1), state, msgs) == {
+        1: (1.75, True), 2: (1.0625, False), 3: (0.5, True), 4: (1.0, False),
+    }
+
+    with pytest.raises(ValueError, match="fold must be one of"):
+        fold_update("avg")
+
+
+def test_delta_store_refuses_non_min_update(spark, tmp_path):
+    """The delta store merges with min only: any other update raises
+    before the run touches the session's settings or the store dir
+    (it used to be bypassed silently, folding with min)."""
+    from pcgraph.engine import PCEngine
+    from pcgraph.partition import ensure_block_store
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
+    blocks = ensure_block_store(spark, edges, 4, str(tmp_path / "blocks"))
+    state = spark.createDataFrame([(i,) for i in range(1, 41)], "id long").select(
+        "id", F.col("id").alias("value"), F.lit(True).alias("changed")
+    )
+
+    def kernel(key, fpdf, bpdf):
+        return pd.DataFrame(
+            {"dst": pd.Series(dtype="int64"), "msg": pd.Series(dtype="int64")}
+        )
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    store = tmp_path / "store"
+    with pytest.raises(ValueError, match="min"):
+        PCEngine(spark).run(
+            blocks=blocks,
+            state=state,
+            kernel=kernel,
+            msg_schema="dst long, msg long",
+            update="max",
+            frontier_fn=lambda s: s.filter("changed").select("id", "value"),
+            max_iter=2,
+            state_store_dir=str(store),
+            n_buckets=8,
+        )
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    assert not store.exists()
+
+
 def test_sparse_frontier_cc_stays_correct(spark):
     """CC stays correct while its frontier collapses to a few
     partitions (sparse tail rounds run no kernel for the others)."""
@@ -209,7 +292,9 @@ def _jobs_per_round(spark, call) -> dict[int, int]:
 
 def test_steady_round_job_counts_are_pinned(spark, tmp_path):
     """The work a steady superstep does, counted in Spark jobs: one job
-    per PageRank round (the state checkpoint), and six per delta-store
+    per PageRank round (the state checkpoint), one per custom-iteration
+    round (its active count is observed inside that checkpoint, not
+    counted in a job of its own), and six per delta-store
     CC round (kernel-running fold count, active-bucket collect, delta
     write and the store's parquet listings/reads).  A durable round
     (``checkpoint_dir`` set) adds its commit: the per-partition
@@ -228,6 +313,33 @@ def test_steady_round_job_counts_are_pinned(spark, tmp_path):
         ),
     )
     assert pr[2] == pr[3] == 1, pr
+
+    def max_kernel(key, fpdf, bpdf):
+        nodes, esrc, edst, _, pos, vals = kernel_block(fpdf, bpdf, np.int64)
+        val = np.full(len(nodes), np.iinfo(np.int64).min, dtype=np.int64)
+        np.maximum.at(val, pos, vals)
+        init = val.copy()
+        while True:
+            prev = val.copy()
+            np.maximum.at(val, edst, val[esrc])
+            if np.array_equal(prev, val):
+                break
+        send = val > init
+        return pd.DataFrame({"dst": nodes[send], "msg": val[send]})
+
+    g = PCGraph(spark, edges, num_partitions=4)
+    try:
+        custom = _jobs_per_round(
+            spark,
+            lambda hook: g.run_partition_centric_iteration(
+                kernel=max_kernel, msg_schema="dst long, msg long",
+                initial_value=F.col("id"), fold="max", post_superstep=hook,
+            ),
+        )
+    finally:
+        g.unpersist()
+    assert len(custom) > 3, custom
+    assert custom[2] == custom[3] == 1, custom
 
     cc = _jobs_per_round(
         spark,
@@ -318,7 +430,7 @@ def test_failed_round_releases_persisted_frames(spark, tmp_path, backend):
             state=state,
             kernel=kernel,
             msg_schema="dst long, msg long",
-            update=lambda s, m, i: s.select("id", "value", "changed"),
+            update="min",
             frontier_fn=lambda s: s.select("id", "value"),
             max_iter=2,
             strict=True,

@@ -80,7 +80,7 @@ def test_strict_delta_still_raises_on_unknown_target(spark, tmp_path):
             state=state,
             kernel=kernel,
             msg_schema="dst long, msg long",
-            update=lambda s, m, i: s,
+            update="min",
             frontier_fn=lambda s: s.select("id", "value"),
             max_iter=2,
             strict=True,
