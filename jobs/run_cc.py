@@ -37,7 +37,11 @@ def main() -> None:
                          "changed labels, so sparse tail rounds cost "
                          "O(changed), not O(|V|); a resumed run takes its "
                          "backend from the checkpoint instead")
-    ap.add_argument("--state-store-dir", default=None)
+    ap.add_argument("--state-store-dir", default=None,
+                    help="keep the delta state store here (selects it; "
+                         "--incremental is then not needed); default with "
+                         "--incremental: under --checkpoint-dir, else a "
+                         "temp dir")
     args = ap.parse_args()
 
     from pcgraph.algos.cc import connected_components

@@ -6,10 +6,11 @@ Usage:
       [--partitions P] [--max-iter N] [--checkpoint-dir DIR] [--resume-from DIR]
       [--store-dir DIR] [--incremental] [--state-store-dir DIR]
 
-``--incremental`` keeps the vertex state in the delta state store:
-each wavefront round appends only the distances it improved
-(O(changed), not O(|V|)); on a cluster pass a shared-FS
---state-store-dir (defaults under --checkpoint-dir when set).
+``--incremental`` or ``--state-store-dir`` keeps the vertex state in
+the delta state store: each wavefront round appends only the
+distances it improved (O(changed), not O(|V|)); on a cluster pass a
+shared-FS --state-store-dir (``--incremental`` alone puts it under
+--checkpoint-dir when set).
 ``--resume-from`` continues in the backend that committed the round,
 so a resumed run needs no ``--incremental``.
 """
@@ -39,7 +40,9 @@ def main() -> None:
                     help="delta state store: each round appends only the "
                          "distances it improved (O(changed), not O(|V|)); "
                          "a resumed run takes its backend from the checkpoint")
-    ap.add_argument("--state-store-dir", default=None)
+    ap.add_argument("--state-store-dir", default=None,
+                    help="keep the delta state store here (selects it; "
+                         "--incremental is then not needed)")
     args = ap.parse_args()
 
     from pcgraph.algos.sssp import sssp

@@ -1,14 +1,15 @@
-"""The fold driver: CC, SSSP and ``PCGraph.run_partition_centric_iteration``.
+"""The fold driver: CC, SSSP, LPA and ``PCGraph.run_partition_centric_iteration``.
 
 Each keeps one value per vertex, folds the values its kernels propose
-with a built-in fold (``engine.fold_update``; CC and SSSP: min) or a
-caller's ``update``, and emits on change (reference:
-PCConnectedComponents.java:122-138, PCSingleSourceShortestPaths.java:
-173-192; the library algorithms run on the public iteration API,
-PCGraph.runPartitionCentricIteration).  They differ only in their
-edges, kernel, message type, initial values and fold; the state set-up,
-the resume hand-off, the delta-store choice and the engine call live
-here once.
+with a built-in fold (``engine.fold_update``; CC and SSSP: min) or its
+own ``update`` (LPA's label histogram arg-max), and emits on change
+(reference: PCConnectedComponents.java:122-138,
+PCSingleSourceShortestPaths.java:173-192; the library algorithms run on
+the public iteration API, PCGraph.runPartitionCentricIteration).  They
+differ only in their edges, kernel, message type, initial values, fold
+and frontier; the state set-up, the resume hand-off, the delta-store
+choice and the engine call live here once.  PageRank builds its own
+engine: its loop-carried dangling mass comes from the resumed meta.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ def run_fold(
     algorithm: str,
     *,
     update: Callable | str = "min",
+    frontier_fn: Callable | None = None,
     max_iter: int,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
@@ -41,16 +43,17 @@ def run_fold(
     incremental: bool = False,
     state_store_dir: str | None = None,
     n_buckets: int = 256,
-    max_versions: int = 8,
     strict: bool = False,
     pre_superstep=None,
     post_superstep=None,
 ) -> tuple[DataFrame, list[dict]]:
     """Run one fold iteration to convergence; returns the engine's
     (state with ``id`` and ``value``, history).  ``init_value``/
-    ``init_changed`` are Columns over the vertex ids (the initial
-    frontier is the changed rows).  ``incremental`` runs need
-    ``update="min"``, the delta store's merge."""
+    ``init_changed`` are Columns over the vertex ids; ``frontier_fn``
+    is the engine's (default: the changed rows).  A ``state_store_dir``
+    or ``incremental=True`` (without a dir: ``default_state_dir``)
+    keeps the state in the delta store, whose merge is
+    ``update="min"``."""
     engine = PCEngine(
         spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
     )
@@ -61,9 +64,7 @@ def run_fold(
     tmp_store = None
     # A resumed run continues in the backend that committed its round;
     # a caller's state_store_dir then only relocates a delta store.
-    if resumed is None and not incremental:
-        state_store_dir = None
-    elif resumed is None and state_store_dir is None:
+    if resumed is None and incremental and state_store_dir is None:
         state_store_dir = default_state_dir(spark, engine.checkpoint_dir, algorithm)
         # without a checkpoint dir no round meta points at the store: it
         # is a temp dir this call owns
@@ -76,12 +77,12 @@ def run_fold(
             kernel=kernel,
             msg_schema=msg_schema,
             update=update,
+            frontier_fn=frontier_fn,
             max_iter=max_iter,
             algorithm=algorithm,
             strict=strict,
             state_store_dir=state_store_dir,
             n_buckets=n_buckets,
-            max_versions=max_versions,
             pre_superstep=pre_superstep,
             post_superstep=post_superstep,
             resumed=resumed,

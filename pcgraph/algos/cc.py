@@ -85,7 +85,6 @@ def connected_components(
     incremental: bool = False,
     state_store_dir: str | None = None,
     n_buckets: int = 256,
-    max_versions: int = 8,
     strict: bool = False,
     post_superstep=None,
 ) -> tuple[DataFrame, list[dict]]:
@@ -98,13 +97,14 @@ def connected_components(
     ``vertices`` (optional DataFrame[id]) adds isolated vertices that
     keep their own id as component (singleton rule, SURVEY.md §1.4).
 
-    ``incremental=True`` keeps the state in a DeltaStateStore: each
-    round appends only its changed labels, so the sparse tail rounds
-    cost O(changed) instead of the in-memory checkpoint's O(|V|)
-    (engine.run docstring).  The store lives at ``state_store_dir``
-    (default: ``checkpoint_dir/statestore`` when checkpointing, else a
-    fresh local temp dir, deleted on return after the result is
-    materialized — pass a shared-FS path on a cluster).
+    A ``state_store_dir`` (or ``incremental=True``) keeps the state in
+    a DeltaStateStore: each round appends only its changed labels, so
+    the sparse tail rounds cost O(changed) instead of the in-memory
+    checkpoint's O(|V|) (engine.run docstring).  The store lives at
+    ``state_store_dir`` (``incremental`` without one:
+    ``checkpoint_dir/statestore`` when checkpointing, else a fresh
+    local temp dir, deleted on return after the result is materialized
+    — pass a shared-FS path on a cluster).
     """
     sym = symmetrize(edges)
     with graph_blocks(
@@ -125,7 +125,6 @@ def connected_components(
             incremental=incremental,
             state_store_dir=state_store_dir,
             n_buckets=n_buckets,
-            max_versions=max_versions,
             strict=strict,
             post_superstep=post_superstep,
         )

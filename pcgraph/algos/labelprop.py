@@ -16,6 +16,8 @@ assignments exactly"):
 The per-partition kernel partial-aggregates (dst, label) counts with a
 pandas groupby (C-side, no per-row Python); the global fold sums counts
 and picks ``min(struct(-count, label))`` — a deterministic arg-max.
+LPA runs through the fold driver (``_fold.run_fold``) with that fold as
+its ``update`` and the full state as its frontier.
 """
 
 from __future__ import annotations
@@ -25,8 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import PCEngine
-from ..partition import GraphBlocks, graph_blocks, kernel_block, vertex_census
+from ..partition import GraphBlocks, graph_blocks, kernel_block
+from ._fold import run_fold
 
 
 # Target histogram entries per fold task (see _fold_width): ~2M
@@ -122,15 +124,6 @@ def label_propagation(
         spark, e, num_partitions, blocks, store_dir,
         salt_threshold=salt_threshold, tag="directed" if directed else "sym",
     ) as blocks:
-        engine = PCEngine(
-            spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
-        )
-
-        resumed = engine.resume(resume_from) if resume_from else None
-        state = None if resumed else vertex_census(spark, blocks, vertices).select(
-            "id", F.col("id").alias("value"), F.lit(True).alias("changed")
-        )
-
         # The kernel already emits per-partition partial histograms (the
         # pandas groupby above), so Catalyst's map-side combine has nothing
         # left to fold — letting the two aggregations each plan their own
@@ -221,16 +214,19 @@ def label_propagation(
         # Synchronous LPA: every vertex re-evaluates each round, so the
         # frontier is the full state until convergence (unlike CC's delta);
         # ``active`` is the engine's changed-row count.
-        state, history = engine.run(
-            blocks=blocks,
-            state=state,
+        state, history = run_fold(
+            spark, blocks, vertices,
+            init_value=F.col("id"),
+            init_changed=F.lit(True),
             kernel=lp_kernel,
             msg_schema="dst long, label long, cnt int",
+            algorithm="label_propagation",
             update=update,
             frontier_fn=lambda s: s.select("id", "value"),
             max_iter=max_iter,
-            algorithm="label_propagation",
+            checkpoint_dir=checkpoint_dir,
+            checkpoint_every=checkpoint_every,
+            resume_from=resume_from,
             post_superstep=post_superstep,
-            resumed=resumed,
         )
         return state.select("id", F.col("value").alias("label")), history

@@ -96,10 +96,7 @@ def pagerank(
             n_dangling = blocks.n_dangling + n_vertices - blocks.n_vertices
             init = 1.0 / n_vertices
             loop_state["dangling"] = n_dangling * init
-            state = vset.select(
-                "id", F.lit(init).alias("pr"), F.lit(init).alias("prev_pr"),
-                "out_deg",
-            )
+            state = vset.select("id", F.lit(init).alias("pr"), "out_deg")
 
         d = damping
         base = (1.0 - d) / n_vertices
@@ -113,6 +110,8 @@ def pagerank(
             folded = msgs.groupBy("dst").agg(F.expr("sum(msg) as msg"))
             joined = state_df.join(folded, F.expr("id = dst"), "left")
             dang = loop_state["dangling"] / n_vertices
+            # prev_pr exists only for the L1 observe: it is not a state
+            # column, so the engine never checkpoints it
             return joined.selectExpr(
                 "id",
                 f"{base!r} + {d!r} * (coalesce(msg, 0.0) + {dang!r}) as pr",
@@ -158,8 +157,6 @@ def pagerank(
             metrics_post=metrics_post,
             max_iter=max_iter,
             algorithm="pagerank",
-            # prev_pr exists only for the L1 observe — never checkpointed
-            state_cols=["id", "pr", "out_deg"],
             post_superstep=post_superstep,
             strict=strict,
             resumed=resumed,

@@ -60,16 +60,16 @@ def sssp(
     incremental: bool = False,
     state_store_dir: str | None = None,
     n_buckets: int = 256,
-    max_versions: int = 8,
     post_superstep=None,
 ) -> tuple[DataFrame, list[dict]]:
     """Weighted SSSP from ``source``; returns (DataFrame[id, distance],
     metrics).  Unreached vertices have distance +inf.
 
-    ``incremental=True``: SSSP is THE wavefront algorithm — most of its
-    ~diameter rounds touch a tiny frontier, so the DeltaStateStore
-    (append only the improved distances) makes those rounds
-    O(changed) instead of O(|V|) (engine.run docstring)."""
+    A ``state_store_dir`` (or ``incremental=True``, which defaults the
+    dir as ``connected_components`` does): SSSP is THE wavefront
+    algorithm — most of its ~diameter rounds touch a tiny frontier, so
+    the DeltaStateStore (append only the improved distances) makes
+    those rounds O(changed) instead of O(|V|) (engine.run docstring)."""
     e = edges.select("src", "dst", "weight")
     with graph_blocks(
         spark, e, num_partitions, blocks, store_dir,
@@ -90,7 +90,6 @@ def sssp(
             incremental=incremental,
             state_store_dir=state_store_dir,
             n_buckets=n_buckets,
-            max_versions=max_versions,
             strict=False,
             post_superstep=post_superstep,
         )

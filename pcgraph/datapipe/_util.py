@@ -2,7 +2,21 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+
+def k_shingles(text: Column, k: int) -> Column:
+    """The k-word shingles of ``text`` (split on single spaces) as an
+    array; a text shorter than k words is its own single shingle.  The
+    DuckDB minhash and fingerprint oracles mirror this expression."""
+    toks = F.split(text, " ")
+    return F.when(F.size(toks) < k, F.array(text)).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+        )
+    )
 
 
 def widen_small_input(df: DataFrame) -> DataFrame:

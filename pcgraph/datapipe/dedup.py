@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ._util import k_shingles
+
 log = logging.getLogger("pcgraph.dedup")
 
 DEFAULT_SEEDS = ("s0", "s1", "s2", "s3")
@@ -59,10 +61,11 @@ def word_shingles(
 ) -> DataFrame:
     """Distinct k-word shingles per document: DataFrame[id, shingle].
 
-    Pure SQL: split + slide via transform/sequence (JVM-side); documents
-    shorter than k words shingle as their full text (mirrors
-    ``textstats.fingerprint`` — dropping them entirely would silently
-    bypass near-dup detection for short docs).
+    Pure SQL: split + slide via transform/sequence (JVM-side,
+    ``_util.k_shingles``, shared with ``textstats.fingerprint``);
+    documents shorter than k words shingle as their full text —
+    dropping them entirely would silently bypass near-dup detection
+    for short docs.
 
     The ONE exchange here hash-partitions the raw documents BY ID
     before the explode: Generate/Project preserve partitioning, so the
@@ -79,13 +82,7 @@ def word_shingles(
     now deduplicate on one task — per-task work is bounded by the
     largest single document, which corpus pipelines cap upstream.
     """
-    toks = F.split(F.col(text_col), " ")
-    shingles = F.when(F.size(toks) < k, F.array(F.col(text_col))).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
+    shingles = k_shingles(F.col(text_col), k)
     base = docs.select(F.col(id_col), F.col(text_col))
     sc = docs.sparkSession.sparkContext
     width = max(base.rdd.getNumPartitions(), sc.defaultParallelism)

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._util import k_shingles
+
 STOPWORDS = ("the", "a", "of", "and", "to")
 
 # tiny deterministic marker lists for the n-gram/stopword language
@@ -96,16 +98,9 @@ def fingerprint(
     """Content fingerprint: minimum k-shingle hash (winnowing-lite, a
     1-perm MinHash).  Documents sharing a fingerprint are near-dup
     candidates; string-min over sha2 hex is engine-portable."""
-    toks = F.split(F.col(text_col), " ")
-    shingles = F.when(F.size(toks) < k, F.array(F.col(text_col))).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
     return docs.select(
         F.col(id_col),
         F.array_min(
-            F.transform(shingles, lambda s: F.sha2(s, 256))
+            F.transform(k_shingles(F.col(text_col), k), lambda s: F.sha2(s, 256))
         ).alias("fingerprint"),
     )

@@ -258,7 +258,7 @@ class _MemoryState:
     messages into the full state."""
 
     def __init__(self, engine, state, update, frontier_fn, metrics_exprs,
-                 state_cols, resumed):
+                 resumed):
         # The initial state is embedded as given — a census scan, the
         # census joined with ``vertices``, or a resumed round's parquet
         # read — with no checkpoint of its own.  Its subtree appears
@@ -273,11 +273,12 @@ class _MemoryState:
         self.state = (
             engine.spark.read.parquet(resumed["state_path"]) if resumed else state
         )
+        # the run's state columns; anything else ``update`` emits is metric-only
+        self.cols = self.state.columns
         self.next: DataFrame | None = None
         self.update = update
         self.frontier_fn = frontier_fn
         self.metrics_exprs = metrics_exprs
-        self.state_cols = state_cols
         self.msgs: DataFrame | None = None  # persisted in strict rounds
         self.lazy = True  # no round adopted yet
 
@@ -292,11 +293,10 @@ class _MemoryState:
             _check_targets(msgs.select("dst"), self.state)
         new_state = self.update(self.state, msgs, step)
         new_state, obs = _observe(new_state, self.metrics_exprs, algorithm, step)
-        if self.state_cols is not None:
-            # metric-only columns end at the observation: project
-            # them away BELOW the checkpoint (partitioning on id is
-            # preserved through Project/CollectMetrics)
-            new_state = new_state.select(*self.state_cols)
+        # metric-only columns end at the observation: project them away
+        # BELOW the checkpoint (partitioning on id is preserved through
+        # Project/CollectMetrics; the optimizer drops a no-op Project)
+        new_state = new_state.select(*self.cols)
         if durable:
             path = os.path.join(
                 _round_dir(self.engine.checkpoint_dir, step), "state.parquet"
@@ -370,13 +370,11 @@ class _DeltaState:
     per-bucket version lists bounded."""
 
     def __init__(self, engine, state, msg_schema, metrics_exprs, root,
-                 n_buckets, max_versions, resumed):
+                 n_buckets, resumed):
         from pyspark.sql.types import StructType
 
         self.engine = engine
-        self.store = DeltaStateStore(
-            engine.spark, root, n_buckets, max_versions=max_versions
-        )
+        self.store = DeltaStateStore(engine.spark, root, n_buckets)
         self.metrics_exprs = metrics_exprs
         self.resumed = resumed
         # Canonicalize the VALUE type to what every LATER version will
@@ -548,19 +546,22 @@ class PCEngine:
         metrics_post: Callable[[dict, int], dict] | None = None,
         algorithm: str = "custom",
         strict: bool = False,
-        state_cols: list[str] | None = None,
         pre_superstep: Callable[[int], None] | None = None,
         post_superstep: Callable[[int, dict], None] | None = None,
         state_store_dir: str | None = None,
         n_buckets: int = 256,
-        max_versions: int = 8,
         resumed: dict | None = None,
     ) -> tuple[DataFrame, list[dict]]:
         """Iterate to convergence.
 
         ``state`` is embedded in round 1 as given: the engine takes no
         checkpoint of the initial state (``_MemoryState``), and a run
-        that ends before any round materializes it on return.
+        that ends before any round materializes it on return.  Every
+        round keeps exactly its columns (a resumed round's parquet
+        columns).  Any other column ``update`` emits is metric-only:
+        ``metrics_exprs`` may observe it, and it is projected away
+        below the checkpoint (PageRank's ``prev_pr``: ~25% of the
+        per-round state bytes at 316M edges).
 
         ``resumed`` (the meta ``resume`` returns) continues that
         committed round in the backend that committed it: ``state`` is
@@ -578,14 +579,8 @@ class PCEngine:
         the first frontier; each round writes ONLY its
         changed rows (O(changed)) as a new store version, with
         min-reconciliation on read and per-bucket compaction
-        (``max_versions``) bounding read amplification.  On a cluster
-        the directory must be on shared storage (hdfs/s3a).
-
-        ``state_cols``: columns to RETAIN in the per-round materialized
-        state.  Metric-only columns (e.g. PageRank's prev_pr, consumed
-        by the observe expressions) are projected away after the
-        observation fires, so they never occupy checkpoint storage —
-        at 316M edges this cuts the per-round state bytes ~25%.
+        (``DeltaStateStore.max_versions``) bounding read amplification.
+        On a cluster the directory must be on shared storage (hdfs/s3a).
 
         ``strict=True`` raises (reference parity: "Target vertex does
         not exist!", PartitionCentricIteration.java:216-227) if any
@@ -646,13 +641,12 @@ class PCEngine:
         try:
             if state_store_dir is None:
                 backend = _MemoryState(
-                    self, state, update, frontier_fn, metrics_exprs,
-                    state_cols, resumed,
+                    self, state, update, frontier_fn, metrics_exprs, resumed
                 )
             else:
                 backend = _DeltaState(
                     self, state, msg_schema, metrics_exprs, state_store_dir,
-                    n_buckets, max_versions, resumed,
+                    n_buckets, resumed,
                 )
             frontier = backend.initial_frontier(frontier_fn)
             return self._drive(

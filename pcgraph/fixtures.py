@@ -199,10 +199,6 @@ def odd_even_graph(n: int = 500, seed: int = 0) -> pd.DataFrame:
     return pdf.reset_index(drop=True)
 
 
-def odd_even_vertices(n: int = 500) -> pd.DataFrame:
-    return pd.DataFrame({"id": np.arange(1, n + 1, dtype=np.int64)})
-
-
 # ----------------------------------------------------------------- F5
 def tiny_example_graph() -> tuple[pd.DataFrame, pd.DataFrame]:
     """The reference example graph

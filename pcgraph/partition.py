@@ -117,8 +117,6 @@ class GraphBlocks:
 
     mirrors: DataFrame | None  # (id, partition_id) for salted hub vertices
     num_partitions: int
-    salt_threshold: int | None
-    weighted: bool
     store_path: str
     # store sidecar with the graph's vertex census (id, out_deg):
     # algorithm init (vertex-set completion + degree aggregation) is a
@@ -412,8 +410,6 @@ def open_block_store(spark: SparkSession, path: str) -> GraphBlocks:
     return GraphBlocks(
         mirrors=mirrors,
         num_partitions=meta["num_partitions"],
-        salt_threshold=meta["salt_threshold"],
-        weighted=meta["weighted"],
         store_path=local_or_uri_abspath(os.path.join(path, "blocks")),
         vertices_path=local_or_uri_abspath(vpath),
         n_edges=int(meta["n_edges"]),

@@ -50,18 +50,3 @@ def write_edge_list(edges: DataFrame, path: str) -> None:
         "overwrite"
     ).text(path)
 
-
-def from_collection(spark: SparkSession, edges, vertices=None):
-    """Reference parity: Graph.fromCollection
-    (example/PartitionCentricConnectedComponent.java:64) — build edge /
-    vertex DataFrames from driver-side lists of tuples."""
-    e = spark.createDataFrame(
-        edges,
-        schema="src long, dst long" + (", weight double" if edges and len(edges[0]) > 2 else ""),
-    )
-    v = (
-        spark.createDataFrame(vertices, schema="id long, value long")
-        if vertices is not None
-        else None
-    )
-    return e, v

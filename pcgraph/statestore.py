@@ -20,8 +20,9 @@ version order is immaterial:
     active subset) is a pruned multi-path parquet read; nothing is ever
     overwritten in place, so a crash mid-write cannot corrupt a
     committed version;
-  * compaction: when a bucket's version list exceeds ``max_versions``,
-    its versions are folded (min per id) into one new version —
+  * compaction: when a bucket's version list exceeds
+    ``DeltaStateStore.max_versions`` (8), its versions are folded (min
+    per id) into one new version —
     bounding read amplification while keeping every round's write
     O(changed);
   * per-partition lineage (north rule): the manifest is persisted in
@@ -78,17 +79,13 @@ class DeltaStateStore:
     """Versioned hash-bucketed state for min-merge delta algorithms —
     per-round writes are O(changed rows) (module docstring)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        n_buckets: int = 256,
-        max_versions: int = 8,
-    ):
+    # versions a bucket may list before ``compact`` folds them
+    max_versions = 8
+
+    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 256):
         self.spark = spark
         self.root = root
         self.n_buckets = int(n_buckets)
-        self.max_versions = int(max_versions)
         # bucket -> ordered version list (the current state view)
         self.manifest: dict[int, list[int]] = {}
         self.committed: dict[int, list[int]] = {}
@@ -236,7 +233,8 @@ class DeltaStateStore:
         self, protect: int | None = None, max_buckets: int | None = None
     ) -> list[int]:
         """Fold the versions of every bucket whose list exceeds
-        ``max_versions`` into one new consolidated version (min per id).
+        ``self.max_versions`` (the class budget, 8) into one new
+        consolidated version (min per id).
         Bounds read amplification; cost is O(rows in those buckets),
         amortized O(|changed|/max_versions) per round.  Returns the
         compacted bucket ids.

@@ -83,6 +83,24 @@ def test_partition_count_independence(spark):
     assert outs[0] == outs[1]
 
 
+def test_state_store_dir_selects_delta_store(spark, tmp_path):
+    """A given ``state_store_dir`` keeps the state in the delta store
+    without ``incremental=True``: version 0 is written there, every
+    round reports its active buckets, and the result equals the
+    in-memory run's."""
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=200))
+    memory, _ = connected_components(spark, edges, num_partitions=4)
+    d = tmp_path / "state"
+    delta, history = connected_components(
+        spark, edges, num_partitions=4, state_store_dir=str(d), n_buckets=8
+    )
+    assert (d / "v=0").is_dir()
+    assert history and all("active_buckets" in h for h in history)
+    assert sorted(tuple(r) for r in delta.collect()) == sorted(
+        tuple(r) for r in memory.collect()
+    )
+
+
 def test_incremental_cc_removes_its_temp_state_dir(spark, tmp_path, monkeypatch):
     """``incremental=True`` with neither ``checkpoint_dir`` nor
     ``state_store_dir`` keeps its delta store in a temp dir the call

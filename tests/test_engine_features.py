@@ -253,6 +253,56 @@ def test_delta_store_refuses_non_min_update(spark, tmp_path):
     assert not store.exists()
 
 
+def test_state_keeps_its_initial_columns(spark, tmp_path):
+    """The state keeps the columns it starts with: a column ``update``
+    adds is metric-only.  ``metrics_exprs`` observes it every round,
+    and it is projected away below the checkpoint, so the result
+    carries only ``id, value, changed``."""
+    from pcgraph.algos.cc import cc_kernel
+    from pcgraph.engine import PCEngine, fold_update
+    from pcgraph.partition import ensure_block_store
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
+    blocks = ensure_block_store(spark, edges, 4, str(tmp_path / "blocks"))
+    state = spark.createDataFrame([(i,) for i in range(1, 41)], "id long").select(
+        "id", F.col("id").alias("value"), F.lit(True).alias("changed")
+    )
+    min_update = fold_update("min")
+
+    def update(state_df, msgs, step):
+        return min_update(state_df, msgs, step).withColumn("x", F.lit(1))
+
+    result, history = PCEngine(spark).run(
+        blocks=blocks,
+        state=state,
+        kernel=cc_kernel,
+        msg_schema="dst long, msg long",
+        update=update,
+        metrics_exprs=[
+            F.expr("count_if(changed) as active"), F.expr("sum(x) as xs"),
+        ],
+    )
+    assert len(history) > 1
+    assert [h["xs"] for h in history] == [40] * len(history)
+    assert result.columns == ["id", "value", "changed"]
+    assert {r["id"]: r["value"] for r in result.collect()} == {
+        i: 1 if i % 2 else 2 for i in range(1, 41)
+    }
+
+
+def test_pagerank_checkpoint_holds_state_columns(spark, tmp_path):
+    """PageRank's ``prev_pr`` exists only for the L1 observation: a
+    checkpointed round stores exactly the state columns it started
+    with."""
+    from pcgraph.algos.pagerank import pagerank
+
+    edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=40))
+    ckpt = tmp_path / "ckpt"
+    pagerank(spark, edges, num_partitions=4, max_iter=2, checkpoint_dir=str(ckpt))
+    stored = spark.read.parquet(str(ckpt / "round=00001" / "state.parquet"))
+    assert stored.columns == ["id", "pr", "out_deg"]
+
+
 def test_sparse_frontier_cc_stays_correct(spark):
     """CC stays correct while its frontier collapses to a few
     partitions (sparse tail rounds run no kernel for the others)."""

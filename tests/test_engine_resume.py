@@ -11,6 +11,7 @@ from pcgraph.algos.cc import connected_components
 from pcgraph.algos.pagerank import pagerank
 from pcgraph.algos.sssp import sssp
 from pcgraph.engine import PCEngine
+from pcgraph.statestore import DeltaStateStore
 
 
 @pytest.mark.parametrize(
@@ -62,16 +63,17 @@ def _weighted_chain_graph() -> pd.DataFrame:
     return pdf[pdf.src != pdf.dst].drop_duplicates(["src", "dst"])
 
 
-def test_delta_rewind_past_compaction_is_refused(spark, tmp_path):
+def test_delta_rewind_past_compaction_is_refused(spark, tmp_path, monkeypatch):
     """Compaction sweeps the dirs an older round's manifest lists, so
     only the newest committed round of a compacted delta-store run can
     be resumed: an older one is refused with an error naming the
     missing dir, not a Spark PATH_NOT_FOUND from inside a round."""
     edges = fixtures.to_spark_edges(spark, fixtures.skew_graph(n=400))
     ckpt = str(tmp_path / "ckpt")
+    monkeypatch.setattr(DeltaStateStore, "max_versions", 1)
     connected_components(
-        spark, edges, num_partitions=4, incremental=True, max_versions=1,
-        n_buckets=4, checkpoint_dir=ckpt,
+        spark, edges, num_partitions=4, incremental=True, n_buckets=4,
+        checkpoint_dir=ckpt,
     )
     rounds = sorted(n for n in os.listdir(ckpt) if n.startswith("round="))
     assert len(rounds) >= 3, rounds

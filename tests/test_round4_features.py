@@ -308,7 +308,7 @@ def test_statestore_delta_writes_are_o_changed(spark, tmp_path):
     assert stored == 200 + total_changed
 
 
-def test_statestore_delta_compaction_bounds_versions(spark, tmp_path):
+def test_statestore_delta_compaction_bounds_versions(spark, tmp_path, monkeypatch):
     """max_versions=1 forces compaction every round: per-bucket version
     lists stay bounded, retired dirs are deleted (no-checkpoint mode
     sweeps eagerly), and the result is still exact.  Compaction is
@@ -317,14 +317,16 @@ def test_statestore_delta_compaction_bounds_versions(spark, tmp_path):
     not max_versions itself."""
     from pcgraph.algos.cc import connected_components
     from pcgraph.engine import PCEngine  # noqa: F401  (import sanity)
+    from pcgraph.statestore import DeltaStateStore
 
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=200))
     classic, _ = connected_components(spark, edges, num_partitions=4)
     sdir = str(tmp_path / "state")
     n_buckets, max_versions = 8, 1
+    monkeypatch.setattr(DeltaStateStore, "max_versions", max_versions)
     inc, hist = connected_components(
         spark, edges, num_partitions=4, incremental=True,
-        state_store_dir=sdir, n_buckets=n_buckets, max_versions=max_versions,
+        state_store_dir=sdir, n_buckets=n_buckets,
     )
     a = {r["id"]: r["component"] for r in classic.collect()}
     b = {r["id"]: r["component"] for r in inc.collect()}

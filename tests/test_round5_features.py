@@ -215,7 +215,8 @@ def test_compact_version_lists_stay_sorted(spark, tmp_path):
     """statestore docstring promises ORDERED version lists; r4's
     compaction briefly wrote [new_vid, protect] with protect < new_vid."""
     root = str(tmp_path / "cstore")
-    store = DeltaStateStore(spark, root, n_buckets=2, max_versions=2)
+    store = DeltaStateStore(spark, root, n_buckets=2)
+    store.max_versions = 2
     store.init(spark.createDataFrame([(i, float(i)) for i in range(8)],
                                      "id long, value double"))
     for step in range(4):
